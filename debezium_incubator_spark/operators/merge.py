@@ -23,42 +23,48 @@ with a broadcast SEMI join and coalesced field-wise.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from debezium_incubator_spark.lake.table import BUCKET_COL, LakeTable
+from debezium_incubator_spark.operators.dedup import lww_latest
 
-DEFAULT_DELETE_OPS = ("d", "t")
+OP_COL = "op"
+DELETE_OPS = ("d", "t")
+# broadcast-anti gate: the driver builds the key set, so bound it in keys
+# AND bytes (4M long (repo, path) strings are hundreds of MB)
+BROADCAST_KEYS_MAX = 4_000_000
+BROADCAST_KEY_BYTES_MAX = 64 * 1024 * 1024
+TARGET_ROWS_PER_WRITE_TASK = 500_000
 
 
-def batch_stats_rows(
-    b,
-    key_cols: list[str],
-    order0: str,
-    op_col: str = "op",
-    delete_ops: tuple[str, ...] = DEFAULT_DELETE_OPS,
-):
-    """ONE skinny stats pass over a bucketed batch: per-bucket max
-    offset (checkpoint marks), row/delete/tombstone counts, and measured
-    key bytes (drives the broadcast-vs-fused merge decision). Split out
-    of merge_upsert so a driver loop can PREFETCH the next epoch's stats
-    concurrently with the current epoch's write (the two Spark actions
-    per epoch are the fixed driver cost that caps scaling at small
-    epochs — see BENCH.md)."""
+def batch_stats_aggs(key_cols: list[str], order0: str) -> list:
+    """The per-bucket stats aggregates: max offset (checkpoint marks),
+    row/delete/tombstone counts, and measured key bytes (drives the
+    broadcast-vs-fused merge decision). Shared with the orchestrator's
+    one-pass multi-table stats so both collect exactly the same rows."""
     key_len = sum(
         (F.coalesce(F.length(F.col(k).cast("string")), F.lit(0)) for k in key_cols),
         F.lit(0),
     )
-    return (
-        b.groupBy(BUCKET_COL)
-        .agg(
-            F.max(order0).alias("max_off"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col(op_col).isin(*delete_ops).cast("long")).alias("n_del"),
-            F.sum((F.col(op_col) == "t").cast("long")).alias("n_tomb"),
-            F.sum(key_len).alias("key_bytes"),
-        )
-        .collect()
-    )
+    return [
+        F.max(order0).alias("max_off"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col(OP_COL).isin(*DELETE_OPS).cast("long")).alias("n_del"),
+        F.sum((F.col(OP_COL) == "t").cast("long")).alias("n_tomb"),
+        F.sum(key_len).alias("key_bytes"),
+    ]
+
+
+def batch_stats_rows(b, key_cols: list[str], order0: str):
+    """ONE skinny stats pass over a bucketed batch. Split out of
+    merge_upsert so a driver loop can PREFETCH the next epoch's stats
+    concurrently with the current epoch's write (the two Spark actions
+    per epoch are the fixed driver cost that caps scaling at small
+    epochs — see BENCH.md)."""
+    return b.groupBy(BUCKET_COL).agg(*batch_stats_aggs(key_cols, order0)).collect()
 
 
 def merge_upsert(
@@ -66,42 +72,30 @@ def merge_upsert(
     batch,
     key_cols: list[str],
     order_cols: list[str],
-    op_col: str = "op",
-    delete_ops: tuple[str, ...] = DEFAULT_DELETE_OPS,
     summary: dict | None = None,
     after_set_col: str | None = None,
-    broadcast_keys_max: int = 4_000_000,
-    broadcast_key_bytes_max: int = 64 * 1024 * 1024,
-    target_rows_per_write_task: int = 500_000,
     assume_unique_keys: bool = False,
-    lww_strategy: str = "agg",
-    salt_buckets: int = 16,
     extra_counters: dict | None = None,
-    stats_rows: list | None = None,  # prefetched batch_stats_rows result
-    # (MUST describe exactly this batch's post-guard rows — the run()
-    # loop prefetches the next disjoint slice, where the replay guard is
-    # a no-op by construction)
-    trust_bucket_col: bool = False,  # True = the batch's existing
-    # BUCKET_COL was computed by THIS table's bucket function (the
-    # engine computes it before the replay guard); default False
-    # recomputes — a foreign/stale bucket column would corrupt layout
-    winner_broadcast_max: int = 0,  # winner-join LWW off by default:
-    # measured slower than the fused max_by at this payload size — the
-    # full-row dedup still shuffles the payload and the broadcast build
-    # adds driver time, while the avoided SortAggregate wasn't the
-    # bottleneck (data movement is). Kept as a knob for workloads with
-    # very wide payloads and few keys.
+    stats_rows: list | None = None,
+    trust_bucket_col: bool = False,
 ) -> tuple[int, dict]:
     """Apply one change batch; returns (new_table_version, batch_stats).
 
     ``batch`` columns: key_cols + table payload columns + op + order
     columns. ``batch_stats`` = {"max_offsets": {bucket: long},
     "counters": {...}} for the checkpoint.
+
+    ``stats_rows``: prefetched batch_stats_rows of EXACTLY this batch's
+    post-guard rows (run() prefetches the next disjoint slice, where the
+    replay guard is a no-op). ``trust_bucket_col``: BUCKET_COL came from
+    THIS table's bucket function; else it is recomputed, since a stale
+    bucket column would corrupt the layout.
     """
     spark = batch.sparkSession
     m = table.manifest()
     target_cols = [f["name"] for f in table.current_fields(m)]
     payload_cols = [c for c in target_cols if c not in key_cols]
+    out_cols = [*key_cols, *payload_cols, BUCKET_COL]
 
     # no persist: the stats pass prunes to (bucket, offset, op) — a
     # skinny columnar scan — while the write pass computes the full
@@ -114,238 +108,162 @@ def merge_upsert(
     )
     order0 = order_cols[0]
     target_empty = not m["buckets"]
-    stats_fut = stats_pool = None
-    if stats_rows is None and target_empty:
-        # EMPTY-target fast path (bootstrap): the stats only feed the
-        # manifest summary, which commit assembles AFTER the data write —
-        # so the collect runs CONCURRENTLY with the write job instead of
-        # serializing ahead of it (same two-jobs-in-flight soundness as
-        # run()'s stats prefetch; the serial stats latency was ~2-3 s of
-        # every sf1.0 snapshot). A quick isEmpty probe preserves the
-        # no-commit contract for an empty batch.
-        if b.isEmpty():
-            return table.version(), {"max_offsets": {}, "counters": {"events_in": 0}}
-        from concurrent.futures import ThreadPoolExecutor
 
-        stats_pool = ThreadPoolExecutor(max_workers=1)
-        stats_fut = stats_pool.submit(
-            batch_stats_rows, b, key_cols, order0, op_col, delete_ops
-        )
-    elif stats_rows is None:
-        stats_rows = batch_stats_rows(b, key_cols, order0, op_col, delete_ops)
-    if stats_fut is None and not stats_rows:
+    # 1. stats. For an EMPTY target (bootstrap) they only feed the
+    # manifest summary, assembled AFTER the data write, so the collect
+    # runs CONCURRENTLY with the write (as run()'s prefetch does; serial
+    # stats were ~2-3 s of every sf1.0 snapshot). A quick isEmpty probe
+    # keeps the no-commit contract for an empty batch.
+    if stats_rows is None and not target_empty:
+        stats_rows = batch_stats_rows(b, key_cols, order0)
+    if b.isEmpty() if stats_rows is None else not stats_rows:
         return table.version(), {"max_offsets": {}, "counters": {"events_in": 0}}
 
-    if stats_fut is None:
-        changed = sorted(int(r[BUCKET_COL]) for r in stats_rows)
-        max_offsets = {str(int(r[BUCKET_COL])): int(r["max_off"]) for r in stats_rows}
-        events_in = sum(int(r["n"]) for r in stats_rows)
-        n_del = sum(int(r["n_del"]) for r in stats_rows)
-        n_tomb = sum(int(r["n_tomb"]) for r in stats_rows)
-        # estimated driver-side size of the broadcast key set: measured key
-        # bytes + ~48 B/row HashedRelation overhead (gate on BYTES, not rows:
-        # 4M long (repo, path) strings would be hundreds of MB on the driver)
-        key_bytes_est = sum(int(r["key_bytes"] or 0) for r in stats_rows) + 48 * events_in
-
-    extra = [c for c in (op_col, BUCKET_COL, after_set_col) if c]
-    partial = after_set_col is not None and not assume_unique_keys
-    if partial:
-        # cell set-flag batches: field-wise fold, NOT winner-only LWW —
-        # several partial updates to one key in one epoch each
-        # contribute their set fields (review r5-2 #1); output carries a
-        # SYNTHESIZED after_set so the coalesce below fills exactly the
-        # never-set fields from the current row
-        latest = _lww_partial(
-            b, key_cols, order0, payload_cols, op_col, after_set_col, delete_ops
-        )
-    elif assume_unique_keys:
-        # snapshot bootstrap fast path: rows are unique per key by
-        # construction (a consistent table read) — skip the LWW
-        # shuffle of full payloads
-        latest = b.select(*key_cols, *payload_cols, *extra)
-    elif lww_strategy == "agg":
-        latest = _lww(b, key_cols, order_cols, payload_cols + extra)
-    else:
-        from debezium_incubator_spark.operators.dedup import lww_latest_window
-
-        salt = salt_buckets if lww_strategy == "window_salted" else None
-        latest = lww_latest_window(b, key_cols, order_cols, salt_buckets=salt).select(
-            *key_cols, *payload_cols, *extra
-        )
-
-    target_rows = 0 if target_empty else table.row_count(buckets=changed, manifest=m)
-    # Strategy choice from table stats (≙ a cost-based MERGE plan):
-    #  * broadcast-anti — batch keys ≪ target rows (the 100 TB steady
-    #    state): the huge target side never shuffles; batch keys ride a
-    #    broadcast into an anti-join. Driver builds the broadcast, so
-    #    gate it on absolute size too.
-    #  * fused-agg — batch rivals the target (initial catch-up, bench):
-    #    ONE hash-agg shuffle computes the final per-key state over
-    #    current ∪ batch, with current rows ordered below every event.
-    #    No driver-side key table, everything parallel.
-    # partial batches no longer FORCE the broadcast path (review r5-2
-    # #3: that bypassed both driver-size gates — a multi-million-row
-    # partial catch-up would build an ungated broadcast); when the gates
-    # fail, the fused path below expresses the same field-wise coalesce
-    # distributively (current rows ride as full-image pseudo-events)
-    use_broadcast = (
-        not target_empty
-        and (events_in <= min(broadcast_keys_max, max(target_rows // 4, 100_000)))
-        and key_bytes_est <= broadcast_key_bytes_max
-    )
-
-    if target_empty:
-        upserts = latest.filter(~F.col(op_col).isin(*delete_ops))
-        out = upserts.select(*key_cols, *payload_cols, BUCKET_COL)
-    elif use_broadcast:
-        # `latest` feeds both the broadcast key set and the upsert write —
-        # persist the slim deduped form so the unwrap+LWW pipeline runs
-        # exactly once (the stats pass above stays a skinny pruned scan)
-        from pyspark import StorageLevel
-
-        latest = latest.persist(StorageLevel.MEMORY_AND_DISK)
-        upserts = latest.filter(~F.col(op_col).isin(*delete_ops))
-        keys = F.broadcast(latest.select(*key_cols))
-
-        current = table.with_bucket(table.read(spark, buckets=changed), m)
-        survivors = current.join(keys, key_cols, "left_anti")
-
-        if after_set_col:
-            upserts = _coalesce_partial(
-                upserts, current, key_cols, payload_cols, after_set_col, op_col
-            )
-        upserts = upserts.select(*key_cols, *payload_cols, BUCKET_COL)
-        out = survivors.select(*key_cols, *payload_cols, BUCKET_COL).unionByName(upserts)
-    else:
-        # fused: current rows become pseudo-events ordered below all real
-        # events, then one LWW over the union decides every key. When
-        # the key universe fits a broadcast, the winner-join form keeps
-        # the wide payload out of the aggregate shuffle entirely.
-        current = table.with_bucket(table.read(spark, buckets=changed), m)
-        order_types = dict(b.dtypes)
-        cur_cols = [
-            *key_cols,
-            *payload_cols,
-            F.lit("r").alias(op_col),
-            BUCKET_COL,
-            *[
-                (F.lit(-(1 << 62)) if i == 0 else F.lit(None))
-                .cast(order_types[c])
-                .alias(c)
-                for i, c in enumerate(order_cols)
-                if c != op_col
-            ],
-        ]
-        if partial:
-            # current rows ride as FULL-IMAGE pseudo-events (NULL set
-            # list, op 'r' ≠ 'u' → sets every field) below all real
-            # offsets: the field-wise fold then keeps the current value
-            # for any field no event set — the distributed form of the
-            # broadcast path's coalesce, with the same delete-reset
-            cur_cols.append(F.lit(None).cast("array<string>").alias(after_set_col))
-        cur_ev = current.select(*cur_cols)
-        ev = b.select(*cur_ev.columns)
-        unioned = cur_ev.unionByName(ev)
-        if partial:
-            fused = _lww_partial(
-                unioned, key_cols, order0, payload_cols, op_col, after_set_col,
-                delete_ops,
-            )
-        else:
-            lww_fn = (
-                _lww_winner_join
-                if events_in + target_rows <= winner_broadcast_max
-                else _lww
-            )
-            fused = lww_fn(
-                unioned, key_cols, order_cols, payload_cols + [op_col, BUCKET_COL]
-            )
-        out = fused.filter(~F.col(op_col).isin(*delete_ops)).select(
-            *key_cols, *payload_cols, BUCKET_COL
-        )
-
-    def _finalize_stats(rows):
-        ch = sorted(int(r[BUCKET_COL]) for r in rows)
-        mo = {str(int(r[BUCKET_COL])): int(r["max_off"]) for r in rows}
-        cs = {
+    def finalize(rows):
+        max_offsets = {str(int(r[BUCKET_COL])): int(r["max_off"]) for r in rows}
+        counters = {
             "events_in": sum(int(r["n"]) for r in rows),
             "deletes": sum(int(r["n_del"]) for r in rows),
             "tombstones": sum(int(r["n_tomb"]) for r in rows),
-            "buckets_touched": len(ch),
+            "buckets_touched": len(max_offsets),
+            **(extra_counters or {}),
         }
-        if extra_counters:
-            cs.update(extra_counters)
-        fs = dict(summary or {})
-        fs["max_offsets"] = mo
-        fs["counters"] = cs
-        return mo, cs, fs
+        stats = {"max_offsets": max_offsets, "counters": counters}
+        return stats, {**(summary or {}), **stats}
 
-    if stats_fut is not None:
-        # overlapped path: the stats job has been running alongside plan
-        # construction; commit resolves it AFTER the data write. The
-        # write shuffle is sized from the PLAN's size estimate (no extra
-        # job) toward ~256 MB per task, clamped sanely; replace_buckets
-        # covers the whole (empty) bucket range so the manifest lists
-        # exactly the buckets the write produced.
-        holder: dict = {}
-
-        def _summary_fn():
-            holder["res"] = _finalize_stats(stats_fut.result())
-            return holder["res"][2]
-
-        # plan-size estimates are only trustworthy for file-scan-rooted
-        # plans (a local relation reported ~TB for one row — 11k write
-        # tasks); clamp to 8× the cluster's parallelism so a bogus
-        # estimate costs bounded scheduling, while a genuinely huge
-        # snapshot still spreads its buckets over many salted writers
-        try:
-            est_bytes = int(
-                str(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            )
-        except Exception:
-            est_bytes = 0
-        par_cap = 8 * spark.sparkContext.defaultParallelism
-        write_tasks = int(
-            max(m["num_buckets"], min(est_bytes // (256 << 20), par_cap))
-        )
-        try:
-            version = table.commit(
-                out,
-                replace_buckets=range(m["num_buckets"]),
-                summary_fn=_summary_fn,
-                write_tasks=write_tasks,
-            )
-        finally:
-            stats_pool.shutdown(wait=True)
-            if latest.is_cached:
-                latest.unpersist()
-        mo, cs, _ = holder["res"]
-        return version, {"max_offsets": mo, "counters": cs}
-
-    max_offsets, counters, full_summary = _finalize_stats(stats_rows)
-    # size the CoW write shuffle by estimated output volume: a touched
-    # 200 GB bucket must never funnel through ONE reducer (the salt in
-    # LakeTable.commit spreads it; partitionBy keeps the layout)
-    rows_out_est = target_rows + events_in
-    write_tasks = max(
-        len(changed), -(-rows_out_est // max(target_rows_per_write_task, 1))
-    )
+    final = None if stats_rows is None else finalize(stats_rows)
+    pool = stats_fut = latest = None
     try:
+        if final is None:
+            pool = ThreadPoolExecutor(max_workers=1)
+            stats_fut = pool.submit(batch_stats_rows, b, key_cols, order0)
+
+        # 2. pick the plan from table stats (≙ a cost-based MERGE plan):
+        #  * broadcast-anti — batch keys ≪ target rows (the 100 TB steady
+        #    state): batch keys ride a broadcast into an anti-join, the
+        #    huge target side never shuffles;
+        #  * fused — batch rivals the target (catch-up): ONE hash-agg
+        #    shuffle computes the final per-key state over current ∪
+        #    batch, current rows ordered below every event; no driver-side
+        #    key table. Partial batches pass the same gates.
+        changed = [] if target_empty else sorted(int(k) for k in final[0]["max_offsets"])
+        target_rows = 0 if target_empty else table.row_count(buckets=changed, manifest=m)
+        events_in = final[0]["counters"]["events_in"] if final else 0
+        # estimated driver-side size of the broadcast key set: measured
+        # key bytes + ~48 B/row HashedRelation overhead
+        key_bytes_est = sum(int(r["key_bytes"] or 0) for r in stats_rows or ()) + 48 * events_in
+        use_broadcast = (
+            not target_empty
+            and (events_in <= min(BROADCAST_KEYS_MAX, max(target_rows // 4, 100_000)))
+            and key_bytes_est <= BROADCAST_KEY_BYTES_MAX
+        )
+
+        deleted = F.col(OP_COL).isin(*DELETE_OPS)
+        partial = after_set_col is not None and not assume_unique_keys
+
+        def lww(df, carried):
+            # cell set-flag batches fold field-wise (see _lww_partial)
+            if partial:
+                return _lww_partial(df, key_cols, order0, payload_cols, after_set_col)
+            return lww_latest(df, key_cols, order_cols, payload_cols + carried)
+
+        extra = [c for c in (OP_COL, BUCKET_COL, after_set_col) if c]
+        # snapshot bootstrap: rows are unique per key by construction (a
+        # consistent table read) — skip the LWW shuffle
+        latest = b.select(*key_cols, *payload_cols, *extra) if assume_unique_keys else lww(b, extra)
+        if not target_empty:
+            current = table.with_bucket(table.read(spark, buckets=changed), m)
+
+        if target_empty:
+            out = latest.filter(~deleted).select(*out_cols)
+        elif use_broadcast:
+            # `latest` feeds both the broadcast key set and the upsert
+            # write — persist the slim deduped form so the unwrap+LWW
+            # pipeline runs exactly once
+            latest = latest.persist(StorageLevel.MEMORY_AND_DISK)
+            keys = F.broadcast(latest.select(*key_cols))
+            survivors = current.join(keys, key_cols, "left_anti")
+            upserts = latest.filter(~deleted)
+            if after_set_col:
+                upserts = _coalesce_partial(upserts, current, key_cols, payload_cols, after_set_col)
+            out = survivors.select(*out_cols).unionByName(upserts.select(*out_cols))
+        else:
+            # fused: current rows become pseudo-events ordered below all
+            # real events, then one LWW over the union decides every key
+            order_types = dict(b.dtypes)
+            cur_cols = [
+                *key_cols,
+                *payload_cols,
+                F.lit("r").alias(OP_COL),
+                BUCKET_COL,
+                *[
+                    (F.lit(-(1 << 62)) if i == 0 else F.lit(None))
+                    .cast(order_types[c])
+                    .alias(c)
+                    for i, c in enumerate(order_cols)
+                    if c != OP_COL
+                ],
+            ]
+            if partial:
+                # current rows ride as FULL-IMAGE pseudo-events (NULL set
+                # list, op 'r' ≠ 'u' → sets every field) below all real
+                # offsets: the field-wise fold then keeps the current
+                # value for any field no event set — the distributed form
+                # of the broadcast path's coalesce, same delete-reset
+                cur_cols.append(F.lit(None).cast("array<string>").alias(after_set_col))
+            cur_ev = current.select(*cur_cols)
+            fused = lww(cur_ev.unionByName(b.select(*cur_ev.columns)), [OP_COL, BUCKET_COL])
+            out = fused.filter(~deleted).select(*out_cols)
+
+        # 3. commit once
+        if stats_fut is not None:
+            # stats in flight: size the write from the PLAN's size estimate
+            # (no extra job) toward ~256 MB per task. Such estimates only
+            # hold for file-scan-rooted plans (a local relation reported
+            # ~TB for one row), so clamp to 8× the parallelism: a bogus one
+            # costs bounded scheduling, a huge snapshot still spreads out
+            try:
+                est_bytes = int(
+                    str(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+                )
+            except Exception:
+                est_bytes = 0
+            par_cap = 8 * spark.sparkContext.defaultParallelism
+            write_tasks = int(max(m["num_buckets"], min(est_bytes // (256 << 20), par_cap)))
+        else:
+            # size the CoW write shuffle by estimated output volume: a
+            # touched 200 GB bucket must never funnel through ONE reducer
+            # (the salt in LakeTable.commit spreads it; partitionBy keeps
+            # the layout)
+            rows_out_est = target_rows + events_in
+            write_tasks = max(
+                len(final[0]["max_offsets"]), -(-rows_out_est // TARGET_ROWS_PER_WRITE_TASK)
+            )
+
+        def summary_fn():
+            nonlocal final
+            final = final or finalize(stats_fut.result())
+            return final[1]
+
+        # an empty target replaces the whole bucket range, so the manifest
+        # lists exactly the buckets the write produced
         version = table.commit(
-            out, replace_buckets=changed, summary=full_summary, write_tasks=write_tasks
+            out,
+            replace_buckets=range(m["num_buckets"]) if target_empty else changed,
+            summary_fn=summary_fn,
+            write_tasks=write_tasks,
         )
     finally:
-        if latest.is_cached:
+        if pool is not None:
+            pool.shutdown(wait=True)
+        if latest is not None and latest.is_cached:
             latest.unpersist()
-    return version, {"max_offsets": max_offsets, "counters": counters}
+    return version, final[0]
 
 
-def _lww_partial(
-    df, key_cols, order0, payload_cols, op_col, after_set_col, delete_ops
-):
-    """Field-wise LWW fold for cell set-flag batches (review r5-2 #1:
-    winner-only LWW silently discarded earlier partial updates' fields
-    when a key had several events in one epoch).
+def _lww_partial(df, key_cols, order0, payload_cols, after_set_col):
+    """Field-wise LWW fold for cell set-flag batches: a winner-only LWW
+    would drop earlier partial updates' fields (review r5-2 #1).
 
     Per key, matching chained per-event application (CellData.java
     'set' semantics): each payload field's value comes from the LAST
@@ -362,15 +280,15 @@ def _lww_partial(
     hash aggregation — no per-event iteration, no payload sort."""
     from pyspark.sql.window import Window
 
-    is_del = F.col(op_col).isin(*delete_ops)
+    is_del = F.col(OP_COL).isin(*DELETE_OPS)
     w = Window.partitionBy(*key_cols)
     df = df.withColumn("__last_del", F.max(F.when(is_del, F.col(order0))).over(w))
     # strictly below every real offset INCLUDING the fused path's
     # -(1<<62) current-row sentinel (which must count as pre-delete)
     post = F.col(order0) > F.coalesce(F.col("__last_del"), F.lit(-(1 << 62) - 1))
-    sets_all = (F.col(op_col) != "u") | F.col(after_set_col).isNull()
+    sets_all = (F.col(OP_COL) != "u") | F.col(after_set_col).isNull()
     aggs = [
-        F.max_by(F.col(op_col), F.col(order0)).alias("__wop"),
+        F.max_by(F.col(OP_COL), F.col(order0)).alias("__wop"),
         F.max(F.col(BUCKET_COL)).alias(BUCKET_COL),
         # per-key constant (window max); carried so the output can mark
         # delete-reset keys as FULL images (review r5-3 #1 below)
@@ -409,55 +327,13 @@ def _lww_partial(
     return g.select(
         *key_cols,
         *payload_cols,
-        F.col("__wop").alias(op_col),
+        F.col("__wop").alias(OP_COL),
         BUCKET_COL,
         out_set.alias(after_set_col),
     )
 
 
-def _lww(df, key_cols, order_cols, payload_cols):
-    order = F.struct(*[F.col(c) for c in order_cols])
-    agg = df.groupBy(*key_cols).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload_cols]), order).alias("__top")
-    )
-    return agg.select(*key_cols, *[F.col(f"__top.{c}").alias(c) for c in payload_cols])
-
-
-def _lww_winner_join(df, key_cols, order_cols, payload_cols):
-    """LWW without SORTS and with minimal payload movement.
-
-    Why: ``max_by(struct(payload), struct(order))`` has a non-mutable
-    (struct) aggregation buffer, so Catalyst plans it as SortAggregate —
-    the full payload gets SORTED twice (map side + reduce side). Here:
-
-    1. winners = groupBy(key).max(offset) — primitive long buffer →
-       a true partial+final HashAggregate over slim rows (skew-proof);
-    2. payload joins back MAP-SIDE against the broadcast winners —
-       the wide content column never rides an aggregate;
-    3. duplicate-offset replays (byte-identical rows by the total-order
-       contract: within a key, the order value uniquely determines the
-       event) collapse with a full-row dropDuplicates — a grouping-only
-       HashAggregate, again sort-free.
-
-    Requires the first order column alone to be a total order per key
-    (true for the reference's log positions; extra order columns are
-    tie-break niceties for byte-identical replays only).
-    """
-    order0 = order_cols[0]
-    winners = (
-        df.groupBy(*key_cols)
-        .agg(F.max(order0).alias("__woff"))
-        .select(
-            *[F.col(k).alias(f"__wk_{k}") for k in key_cols], F.col("__woff")
-        )
-    )
-    cond = [F.col(k) == F.col(f"__wk_{k}") for k in key_cols]
-    cond.append(F.col(order0) == F.col("__woff"))
-    matched = df.join(F.broadcast(winners), cond).select(*key_cols, *payload_cols)
-    return matched.dropDuplicates()
-
-
-def _coalesce_partial(upserts, current, key_cols, payload_cols, after_set_col, op_col):
+def _coalesce_partial(upserts, current, key_cols, payload_cols, after_set_col):
     """Cell-level set flags: a payload field absent from ``after_set`` on
     an update keeps the current table value (null-vs-unset distinction,
     CellData 'set' sub-field, CellData.java:27-87).
@@ -472,7 +348,7 @@ def _coalesce_partial(upserts, current, key_cols, payload_cols, after_set_col, o
     cols = []
     for c in payload_cols:
         keep_current = (
-            (F.col(op_col) == "u")
+            (F.col(OP_COL) == "u")
             & F.col(after_set_col).isNotNull()
             & ~F.array_contains(F.col(after_set_col), c)
         )

@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_incubator_spark.lake.checkpoint import _atomic_write
-from debezium_incubator_spark.lake.table import LakeTable
+from debezium_incubator_spark.lake.table import BUCKET_COL, LakeTable
+from debezium_incubator_spark.operators.merge import batch_stats_aggs
 from debezium_incubator_spark.plans.pipeline import CDCEngine
 from debezium_incubator_spark.streaming.stream import StreamingCDC
 
@@ -415,26 +416,11 @@ class MultiTableCDC:
             bucket_stats: dict[str, list] = {}
             shared_stats_ran = bool(self.engines) and self._stats_homogeneous()
             if shared_stats_ran:
-                from debezium_incubator_spark.lake.table import BUCKET_COL
-
                 any_eng = next(iter(self.engines.values()))
                 pre = any_eng.table.with_bucket(any_eng._prefilter(batch))
-                key_len = sum(
-                    (
-                        F.coalesce(F.length(F.col(k).cast("string")), F.lit(0))
-                        for k in any_eng.key_cols
-                    ),
-                    F.lit(0),
-                )
                 for r in (
                     pre.groupBy(F.col(table_field).alias("__t"), F.col(BUCKET_COL))
-                    .agg(
-                        F.max("offset").alias("max_off"),
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.col("op").isin("d", "t").cast("long")).alias("n_del"),
-                        F.sum((F.col("op") == "t").cast("long")).alias("n_tomb"),
-                        F.sum(key_len).alias("key_bytes"),
-                    )
+                    .agg(*batch_stats_aggs(any_eng.key_cols, "offset"))
                     .collect()
                 ):
                     bucket_stats.setdefault(r["__t"], []).append(r)

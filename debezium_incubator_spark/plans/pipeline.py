@@ -55,8 +55,6 @@ class CDCEngine:
         normalize: bool = True,
         content_field: str = "content",
         exclude_system: bool = True,
-        lww_strategy: str = "agg",  # agg | window | window_salted
-        salt_buckets: int = 16,
         checkpoint_interval: int = 1,
         snapshot_mode: str = "initial",  # initial | always | never
         audit_before: bool = False,
@@ -78,12 +76,6 @@ class CDCEngine:
         self.normalize = normalize
         self.content_field = content_field
         self.exclude_system = exclude_system
-        # D2 strategy: 'agg' (max_by hash-agg, skew-proof via partial
-        # aggregation — default) or the north rule's literal
-        # 'window'/'window_salted' row_number forms (salting spreads a
-        # hot key over salt_buckets reducers before the final window)
-        self.lww_strategy = lww_strategy
-        self.salt_buckets = salt_buckets
         # K2 offset-flush policy: 1 = 'always' (the reference default,
         # OffsetFlushPolicy.java:19-52, and Spark's natural per-epoch
         # unit); N>1 = 'periodic' — the checkpoint file is written every
@@ -499,8 +491,6 @@ class CDCEngine:
             order_cols=["offset", "op"],
             summary=summary,
             assume_unique_keys=assume_unique_keys,
-            lww_strategy=self.lww_strategy,
-            salt_buckets=self.salt_buckets,
             extra_counters=audit_counters,
             stats_rows=stats_rows,
             trust_bucket_col=True,  # computed via this table's with_bucket above

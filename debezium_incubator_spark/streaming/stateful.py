@@ -95,87 +95,3 @@ def lww_changes_stream(
     return grouped.applyInPandasWithState(
         update, out_type, STATE_TYPE, "update", GroupStateTimeout.NoTimeout
     )
-
-
-def lww_changes_stream_tws(
-    events: DataFrame,
-    key_cols: list[str],
-    payload_cols: list[str],
-    offset_col: str = "offset",
-    op_col: str = "op",
-) -> DataFrame:
-    """Same semantics as :func:`lww_changes_stream` on Spark 4's newer
-    ``transformWithStateInPandas`` API (RocksDB state store v2). The
-    prototype exists to measure whether the newer state-access path
-    breaks applyInPandasWithState's ~8k keys/s per-group Arrow floor —
-    the handler is still invoked once per key, but the state round-trip
-    runs over the v2 state-server channel instead of per-group Arrow
-    state rows. Requires
-    ``spark.sql.streaming.stateStore.providerClass=
-    org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``.
-    """
-    try:
-        import google.protobuf  # noqa: F401 — the state-v2 worker channel dependency
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas needs the protobuf package on the "
-            "Python workers (Spark's state-v2 server channel speaks protobuf); "
-            "it is not available in this environment, so the measured floor "
-            "comparison could not run (BENCH.md). Use lww_changes_stream "
-            "(applyInPandasWithState) or the foreachBatch engine for "
-            "millions-of-keys workloads."
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_fields = (
-        [events.schema[k] for k in key_cols]
-        + [T.StructField(offset_col, T.LongType()), T.StructField(op_col, T.StringType())]
-        + [T.StructField(c, T.StringType()) for c in payload_cols]
-    )
-    out_type = T.StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
-    neg_inf = -(1 << 62)
-
-    class _LWWProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._hwm = handle.getValueState("hwm", STATE_TYPE)
-
-        def handleInputRows(self, key, rows, timer_values):  # noqa: N802 (API name)
-            best_off = neg_inf
-            best_row = None
-            for pdf in rows:
-                if not len(pdf.index):
-                    continue
-                col = pdf[offset_col].values
-                i = int(col.argmax())
-                if int(col[i]) > best_off:
-                    best_off = int(col[i])
-                    best_row = pdf.iloc[i]
-            if best_row is None:
-                return
-            prev = self._hwm.get()
-            if prev is not None and best_off <= int(prev[0]):
-                return  # replay/stale: absorbed by state, nothing emitted
-            payload = {
-                c: (None if pd.isna(best_row[c]) else str(best_row[c]))
-                for c in payload_cols
-            }
-            self._hwm.update((best_off, json.dumps(payload)))
-            row = dict(zip(key_cols, key))
-            row[offset_col] = best_off
-            row[op_col] = str(best_row[op_col])
-            row.update(payload)
-            yield pd.DataFrame([row], columns=out_cols)
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=_LWWProcessor(),
-        outputStructType=out_type,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -2,9 +2,7 @@
 at >=100k keys per micro-batch — the per-key Python constant cost is the
 scale limit (VERDICT r2 #10). Prints one JSON line.
 
-Usage: python scripts/bench_stateful.py [n_keys] [events_per_key] [impl]
-  impl: apiws (default, applyInPandasWithState) | tws
-        (transformWithStateInPandas, Spark 4 state v2 / RocksDB)
+Usage: python scripts/bench_stateful.py [n_keys] [events_per_key]
 """
 
 import json
@@ -25,17 +23,10 @@ from debezium_incubator_spark.streaming.stateful import lww_changes_stream
 def main() -> None:
     n_keys = int(sys.argv[1]) if len(sys.argv) > 1 else 150_000
     per_key = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    impl = sys.argv[3] if len(sys.argv) > 3 else "apiws"
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    extra = {}
-    if impl == "tws":
-        # transformWithStateInPandas requires the RocksDB provider
-        extra["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        )
     spark = get_spark(
         app_name="bench_stateful", master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus), extra_conf=extra,
+        shuffle_partitions=int(cpus),
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -63,12 +54,7 @@ def main() -> None:
 
     t0 = time.monotonic()
     stream = spark.readStream.schema(schema).parquet(src_dir)
-    if impl == "tws":
-        from debezium_incubator_spark.streaming.stateful import lww_changes_stream_tws
-
-        out = lww_changes_stream_tws(stream, ["repo", "path"], ["commit"])
-    else:
-        out = lww_changes_stream(stream, ["repo", "path"], ["commit"])
+    out = lww_changes_stream(stream, ["repo", "path"], ["commit"])
     q = (
         out.writeStream.foreachBatch(sink)
         .option("checkpointLocation", os.path.join(work, "ck"))
@@ -87,7 +73,6 @@ def main() -> None:
                 "metric": "stateful_compaction_keys_per_sec",
                 "value": round(n_keys / wall, 1),
                 "unit": "keys/sec",
-                "impl": impl,
                 "n_keys": n_keys,
                 "events": n,
                 "wall_sec": round(wall, 2),

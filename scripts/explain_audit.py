@@ -104,9 +104,7 @@ def main():
             # max_by carries a struct buffer → Catalyst plans SortAggregate
             # (HashAggregate needs mutable primitive buffers). The property
             # that matters for skew is partial aggregation before the
-            # exchange — a hot key still reduces map-side. A sort-free
-            # winner-join variant exists (merge.py) but measured slower:
-            # data movement, not sorting, bounds this pipeline.
+            # exchange — a hot key still reduces map-side.
             ("partial (map-side) aggregate before the exchange",
              r"partial_max_by|SortAggregate(.|\n)*Exchange(.|\n)*SortAggregate"),
         ],

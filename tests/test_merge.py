@@ -1,10 +1,15 @@
 """D3 merge-upsert unit tests incl. partial-image (cell set-flag)
 semantics (CommitLogReadHandlerImpl null-vs-unset, CellData 'set')."""
 
+import threading
+
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from debezium_incubator_spark.lake.table import LakeTable
+from debezium_incubator_spark.operators import merge
 from debezium_incubator_spark.operators.merge import merge_upsert
 
 SCHEMA = T.StructType(
@@ -30,8 +35,7 @@ BATCH_DDL = (
 )
 
 
-def test_merge_insert_update_delete(spark, tmp_table):
-    t = _table(spark, tmp_table, [("r", "a", "v0", "py"), ("r", "b", "w0", "py")])
+def test_merge_insert_update_delete(spark, tmp_table, monkeypatch):
     batch = spark.createDataFrame(
         [
             ("r", "a", "v1", "py", "u", 10),
@@ -39,15 +43,49 @@ def test_merge_insert_update_delete(spark, tmp_table):
             ("r", "b", None, None, "d", 11),
             ("r", "b", None, None, "t", 12),
             ("r", "c", "new", "go", "c", 13),
+            ("r", "p0", "x1", "py", "u", 30),
+            ("r", "p0", "x1", "py", "u", 30),  # duplicate replay collapses
+            ("r", "p0", "x9", "py", "u", 25),  # arrives late, older: loses
+            ("r", "p1", None, None, "d", 14),
         ],
         BATCH_DDL,
     )
-    v, stats = merge_upsert(t, batch, ["repo", "path"], ["offset", "op"], summary={"epoch": 1})
-    got = {(r["path"]): (r["content"], r["lang"]) for r in t.read(spark).collect()}
-    assert got == {"a": ("v2", "py"), "c": ("new", "go")}
-    assert stats["counters"]["events_in"] == 5
-    assert stats["counters"]["deletes"] == 2 and stats["counters"]["tombstones"] == 1
-    assert t.summary()["epoch"] == 1
+    rows = [("r", "a", "v0", "py"), ("r", "b", "w0", "py"),
+            ("r", "p0", "x0", "py"), ("r", "p1", "y0", "py")]
+    for fused in (False, True):  # broadcast-anti AND fused paths
+        if fused:
+            monkeypatch.setattr(merge, "BROADCAST_KEYS_MAX", 0)
+        t = _table(spark, f"{tmp_table}_{'fused' if fused else 'bc'}", rows)
+        v, stats = merge_upsert(
+            t, batch, ["repo", "path"], ["offset", "op"], summary={"epoch": 1}
+        )
+        got = {(r["path"]): (r["content"], r["lang"]) for r in t.read(spark).collect()}
+        assert got == {"a": ("v2", "py"), "c": ("new", "go"), "p0": ("x1", "py")}, fused
+        assert stats["counters"]["events_in"] == 9
+        assert stats["counters"]["deletes"] == 3 and stats["counters"]["tombstones"] == 1
+        assert t.summary()["epoch"] == 1
+
+
+def test_bootstrap_plan_error_leaves_no_stats_thread(spark, tmp_table):
+    """An empty-target merge overlaps its stats collect with the write;
+    a plan error raised after that collect started (here: a payload
+    column missing from the batch) must propagate AND shut the stats
+    pool down — no worker thread may outlive the call, even while the
+    traceback (which references the call's frame) is still alive."""
+    t = _table(spark, tmp_table, [])
+    batch = spark.createDataFrame(
+        [("r", "a", "v1", "u", 10)],
+        "repo string, path string, content string, op string, offset long",
+    )
+    before = set(threading.enumerate())
+    with pytest.raises(AnalysisException) as excinfo:
+        merge_upsert(t, batch, ["repo", "path"], ["offset", "op"], summary={"epoch": 1})
+    leaked = [
+        th for th in threading.enumerate()
+        if th not in before and th.name.startswith("ThreadPoolExecutor")
+    ]
+    assert not leaked, leaked
+    assert "lang" in str(excinfo.value)
 
 
 def test_merge_untouched_buckets_not_rewritten(spark, tmp_table):
@@ -82,7 +120,7 @@ def test_merge_partial_images_after_set(spark, tmp_table):
     assert got == {"a": ("v1", "py"), "b": ("w1", "go")}
 
 
-def test_merge_partial_images_fold_multi_events_per_key(spark, tmp_table):
+def test_merge_partial_images_fold_multi_events_per_key(spark, tmp_table, monkeypatch):
     """Review r5-2 #1: several partial updates to ONE key in ONE batch
     each contribute their set fields (field-wise fold, CellData 'set'
     chained application) — winner-only LWW would silently drop the
@@ -109,15 +147,17 @@ def test_merge_partial_images_fold_multi_events_per_key(spark, tmp_table):
         ],
         BATCH_DDL + ", after_set array<string>",
     )
-    for kw in ({}, {"broadcast_keys_max": 0}):  # broadcast AND fused paths
-        path = f"{tmp_table}_fold_{'fused' if kw else 'bc'}"
+    for fused in (False, True):  # broadcast AND fused paths
+        if fused:
+            monkeypatch.setattr(merge, "BROADCAST_KEYS_MAX", 0)
+        path = f"{tmp_table}_fold_{'fused' if fused else 'bc'}"
         t = _table(spark, path, [("r", "a", "v0", "py"),
                                  ("r", "b", "w0", "go"),
                                  ("r", "c", "x0", "rs"),
                                  ("r", "e", "old", "py")])
         merge_upsert(
             t, batch, ["repo", "path"], ["offset", "op"],
-            summary={"epoch": 1}, after_set_col="after_set", **kw,
+            summary={"epoch": 1}, after_set_col="after_set",
         )
         got = {r["path"]: (r["content"], r["lang"])
                for r in t.read(spark).collect()}
@@ -125,7 +165,7 @@ def test_merge_partial_images_fold_multi_events_per_key(spark, tmp_table):
             "a": ("vA", "ts"),
             "b": ("w3", "md"),
             "e": (None, "go"),
-        }, kw
+        }, fused
 
 
 def test_gen_partial_updates_fixture_not_vacuous(spark):
@@ -174,59 +214,3 @@ def test_gen_partial_updates_fixture_not_vacuous(spark):
         "repo", "path", F.floor(F.col("offset") / 10_000)
     ).count()
     assert per_epoch_multi.agg(F.max("count")).first()[0] >= 2
-
-
-def test_merge_lww_strategies_equivalent(spark, tmp_table):
-    rows = [("r", f"p{i}", f"v{i}", "py") for i in range(10)]
-    batches = []
-    for s in ("agg", "window", "window_salted"):
-        path = f"{tmp_table}_{s}"
-        t = _table(spark, path, rows)
-        batch = spark.createDataFrame(
-            [
-                ("r", "p0", "a", "py", "u", 10),
-                ("r", "p0", "b", "py", "u", 30),
-                ("r", "p0", "c", "py", "u", 20),
-                ("r", "p1", None, None, "d", 11),
-                ("r", "p9", "z", "go", "u", 12),
-            ],
-            BATCH_DDL,
-        )
-        merge_upsert(
-            t, batch, ["repo", "path"], ["offset", "op"],
-            summary={"epoch": 1}, lww_strategy=s,
-        )
-        batches.append(
-            sorted(tuple(r) for r in t.read(spark).collect())
-        )
-    assert batches[0] == batches[1] == batches[2]
-    got = {r[1]: r[2] for r in batches[0]}
-    assert got["p0"] == "b" and "p1" not in got and got["p9"] == "z"
-
-
-def test_merge_winner_join_equivalent(spark, tmp_table):
-    """winner-join LWW (slim agg + broadcast winners) must produce the
-    same table as the fused agg, including duplicate-offset collapse."""
-    rows = [("r", f"p{i}", f"v{i}", "py") for i in range(10)]
-    results = []
-    for wb_max in (0, 10_000_000):  # fused-agg vs winner-join
-        t = _table(spark, f"{tmp_table}_wb{wb_max}", rows)
-        batch = spark.createDataFrame(
-            [
-                ("r", "p0", "a", "py", "u", 10),
-                ("r", "p0", "b", "py", "u", 30),
-                ("r", "p0", "b", "py", "u", 30),  # duplicate replay
-                ("r", "p1", None, None, "d", 11),
-                ("r", "new", "n", "go", "c", 12),
-            ],
-            BATCH_DDL,
-        )
-        merge_upsert(
-            t, batch, ["repo", "path"], ["offset", "op"],
-            summary={"epoch": 1}, broadcast_keys_max=0,  # force fused path
-            winner_broadcast_max=wb_max,
-        )
-        results.append(sorted(tuple(r) for r in t.read(spark).collect()))
-    assert results[0] == results[1]
-    got = {r[1]: r[2] for r in results[0]}
-    assert got["p0"] == "b" and "p1" not in got and got["new"] == "n"
