@@ -25,10 +25,16 @@ _VERSION_FILE = "_VERSION"
 
 
 class VersionedState:
-    def __init__(self, spark: SparkSession, path: str, params: dict):
+    def __init__(
+        self, spark: SparkSession, path: str, params: dict, legacy_params: dict | None = None
+    ):
         self.spark = spark
         self.path = path
         self.params = params
+        # params stamped only since a later release: a stored manifest
+        # that lacks one is legacy state, valid exactly when the request
+        # is the value those writers implied
+        self.legacy_params = legacy_params or {}
         os.makedirs(path, exist_ok=True)
 
     @contextmanager
@@ -81,7 +87,11 @@ class VersionedState:
         with open(mp) as f:
             m = json.load(f)
         for k, want in self.params.items():
-            if m["params"].get(k) != want:
+            if k not in m["params"] and k in self.legacy_params:
+                ok = want == self.legacy_params[k]
+            else:
+                ok = m["params"].get(k) == want
+            if not ok:
                 raise ValueError(
                     f"index param mismatch for {k}: stored {m['params'].get(k)!r}"
                     f" vs requested {want!r}"

@@ -172,10 +172,7 @@ class LakeTable:
         return m["schemas"][str(m["current_schema"])]
 
     def spark_schema(self, manifest: dict | None = None) -> T.StructType:
-        fields = self.current_fields(manifest)
-        return T.StructType(
-            [T.StructField(f["name"], _parse_type(f["type"]), True) for f in fields]
-        )
+        return _struct(self.current_fields(manifest))
 
     def summary(self, version: int | None = None) -> dict:
         return self.manifest(version).get("summary", {})
@@ -254,7 +251,9 @@ class LakeTable:
 
         Bucket pruning happens here at the manifest level (driver-side) —
         the Spark scan never even lists unrelated files; the equivalent of
-        Iceberg partition pruning.
+        Iceberg partition pruning. Each scan carries the schema its files
+        were written under (the manifest records it), so no Spark job
+        infers one from the footers.
         """
         m = self.manifest(version)
         cur_fields = m["schemas"][str(m["current_schema"])]
@@ -270,12 +269,10 @@ class LakeTable:
                     os.path.join(self.path, fi["path"])
                 )
 
-        out_schema = T.StructType(
-            [T.StructField(f["name"], _parse_type(f["type"]), True) for f in cur_fields]
-        )
+        out_schema = _struct(cur_fields)
         parts: list[DataFrame] = []
         for sv, files in sorted(by_schema.items()):
-            df = spark.read.parquet(*files)
+            df = spark.read.schema(_struct(m["schemas"][sv])).parquet(*files)
             file_fields = {f["id"]: f for f in m["schemas"][sv]}
             cols = []
             for f in cur_fields:
@@ -341,7 +338,7 @@ class LakeTable:
             out_dir = os.path.join(self.path, rel_dir)
             replace = set(int(b) for b in replace_buckets)
 
-            cur_names = [f["name"] for f in self.current_fields(m)]
+            cur_fields = self.current_fields(m)
             n_tasks = max(len(replace), 1)
             part_exprs = [F.col(BUCKET_COL)]
             if write_tasks is not None and write_tasks > n_tasks:
@@ -357,9 +354,14 @@ class LakeTable:
                     )
                 )
             # shuffle keyed on (bucket[, salt]) → file-groups per bucket;
-            # AQE coalesces small buckets into shared tasks
+            # AQE coalesces small buckets into shared tasks. Columns are
+            # written in the manifest's types (a no-op cast when they
+            # already match), so read() can scan with that schema
             (
-                df.select(*cur_names, BUCKET_COL)
+                df.select(
+                    *[F.col(f["name"]).cast(f["type"]).alias(f["name"]) for f in cur_fields],
+                    BUCKET_COL,
+                )
                 .repartition(n_tasks, *part_exprs)
                 .write.partitionBy(BUCKET_COL)
                 .mode("overwrite")
@@ -622,3 +624,7 @@ class LakeTable:
 def _parse_type(ddl: str) -> T.DataType:
     # struct<...> etc. all round-trip through simpleString/fromDDL
     return T._parse_datatype_string(ddl)
+
+
+def _struct(fields: list[dict]) -> T.StructType:
+    return T.StructType([T.StructField(f["name"], _parse_type(f["type"]), True) for f in fields])

@@ -16,8 +16,40 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def unprocessed_predicate(
+    max_offsets: dict[str, int],
+    bucket_col: str = "_bucket",
+    offset_col: str = "offset",
+    num_buckets: int | None = None,
+) -> Column | None:
+    """D1 as a Column (None = no marks, keep every row): true for events
+    above their bucket's high-water mark.
+
+    The marks are tiny (one long per bucket), so they ride INSIDE the
+    expression as a literal map — no join, no driver-built DataFrame to
+    broadcast. ``try_element_at`` yields NULL (never raises under ANSI)
+    for an unmarked bucket, which passes every offset through. When
+    every bucket has a mark, the residual ``offset > min(marks)`` is a
+    plain conjunct that Catalyst pushes to the parquet scan (row-group
+    min/max pruning).
+    """
+    if not max_offsets:
+        return None
+    marks = F.create_map(
+        *[x for b, o in max_offsets.items() for x in (F.lit(int(b)), F.lit(int(o)).cast("long"))]
+    )
+    hwm = F.try_element_at(marks, F.col(bucket_col))
+    keep = hwm.isNull() | (F.col(offset_col) > hwm)
+    if num_buckets is not None and len(max_offsets) == num_buckets:
+        # safe only when marks cover all buckets (an unmarked bucket must
+        # pass every offset through)
+        global_min = min(int(v) for v in max_offsets.values())
+        keep = (F.col(offset_col) > F.lit(global_min)) & keep
+    return keep
 
 
 def filter_processed(
@@ -27,31 +59,10 @@ def filter_processed(
     offset_col: str = "offset",
     num_buckets: int | None = None,
 ) -> DataFrame:
-    """D1 — drop events at-or-below the per-bucket high-water mark.
-
-    ``max_offsets`` is tiny (one long per bucket), so it rides to the
-    executors as a broadcast join — never a shuffle of the event stream.
-    When every bucket has a mark, the residual ``offset > min(marks)``
-    is additionally applied as a plain predicate that Catalyst pushes to
-    the parquet scan (row-group min/max pruning).
-    """
-    if not max_offsets:
-        return df
-    spark = df.sparkSession
-    marks = spark.createDataFrame(
-        [(int(b), int(o)) for b, o in max_offsets.items()],
-        f"{bucket_col} int, __hwm long",
-    )
-    if num_buckets is not None and len(max_offsets) == num_buckets:
-        # safe only when marks cover all buckets (an unmarked bucket must
-        # pass every offset through)
-        global_min = min(int(v) for v in max_offsets.values())
-        df = df.filter(F.col(offset_col) > F.lit(global_min))
-    return (
-        df.join(F.broadcast(marks), bucket_col, "left")
-        .filter((F.col("__hwm").isNull()) | (F.col(offset_col) > F.col("__hwm")))
-        .drop("__hwm")
-    )
+    """D1 — drop events at-or-below the per-bucket high-water mark
+    (:func:`unprocessed_predicate`)."""
+    keep = unprocessed_predicate(max_offsets, bucket_col, offset_col, num_buckets)
+    return df if keep is None else df.filter(keep)
 
 
 def _order_struct(order_cols: list[str]):

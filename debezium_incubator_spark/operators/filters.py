@@ -18,6 +18,9 @@ prunes T6 columns for free.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -79,6 +82,25 @@ def drop_envelope_fields(
     return out
 
 
+def table_predicate(
+    include_regex: str | None = None,
+    exclude_regex: str | None = None,
+    table_col: str = "repo",
+    exclude_system: bool = True,
+) -> Column | None:
+    """T7 as a Column (None = keep every row) — whitelist wins over
+    blacklist when both set (reference: whitelist checked first,
+    Filters/OracleConnectorConfig.java:325-348); system tables always
+    excluded."""
+    c = F.col(table_col)
+    conds = [~c.rlike(pat) for pat in SYSTEM_REPO_EXCLUDES] if exclude_system else []
+    if include_regex:
+        conds.append(c.rlike(include_regex))
+    elif exclude_regex:
+        conds.append(~c.rlike(exclude_regex))
+    return functools.reduce(operator.and_, conds) if conds else None
+
+
 def table_filter(
     df: DataFrame,
     include_regex: str | None = None,
@@ -86,19 +108,9 @@ def table_filter(
     table_col: str = "repo",
     exclude_system: bool = True,
 ) -> DataFrame:
-    """T7 — whitelist wins over blacklist when both set (reference:
-    whitelist checked first, Filters/OracleConnectorConfig.java:325-348);
-    system tables always excluded."""
-    c = F.col(table_col)
-    out = df
-    if exclude_system:
-        for pat in SYSTEM_REPO_EXCLUDES:
-            out = out.filter(~c.rlike(pat))
-    if include_regex:
-        out = out.filter(c.rlike(include_regex))
-    elif exclude_regex:
-        out = out.filter(~c.rlike(exclude_regex))
-    return out
+    """T7 — ``df`` restricted to :func:`table_predicate`."""
+    pred = table_predicate(include_regex, exclude_regex, table_col, exclude_system)
+    return df if pred is None else df.filter(pred)
 
 
 def emit_tombstones(df: DataFrame, enabled: bool = True) -> DataFrame:

@@ -12,7 +12,11 @@ story:
 2. LWW-dedup the batch (hash agg, skew-proof — see dedup.py);
 3. survivors = current rows of changed buckets ANTI JOIN batch keys.
    The key set of a CDC batch is small relative to the target, so it is
-   BROADCAST: the 100 TB side never shuffles;
+   BROADCAST: the 100 TB side never shuffles. The keys come straight
+   from the (guarded) batch, not from the LWW output: every batch key
+   has exactly one LWW winner, deletes included, so the set is the same
+   while the broadcast side stays a bare key projection (no UDF, no
+   cache) and the LWW pipeline runs once, inside the write;
 4. new bucket contents = survivors ∪ batch upserts, one commit.
 
 Partial-image updates (cell ``set`` flags,
@@ -25,7 +29,7 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark import StorageLevel
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from debezium_incubator_spark.lake.table import BUCKET_COL, LakeTable
@@ -40,31 +44,45 @@ BROADCAST_KEY_BYTES_MAX = 64 * 1024 * 1024
 TARGET_ROWS_PER_WRITE_TASK = 500_000
 
 
-def batch_stats_aggs(key_cols: list[str], order0: str) -> list:
+def batch_stats_aggs(key_cols: list[str], order0: str, keep: Column | None = None) -> list:
     """The per-bucket stats aggregates: max offset (checkpoint marks),
     row/delete/tombstone counts, and measured key bytes (drives the
     broadcast-vs-fused merge decision). Shared with the orchestrator's
-    one-pass multi-table stats so both collect exactly the same rows."""
+    one-pass multi-table stats so both collect exactly the same rows.
+    ``keep`` restricts every aggregate to the rows it holds for."""
     key_len = sum(
         (F.coalesce(F.length(F.col(k).cast("string")), F.lit(0)) for k in key_cols),
         F.lit(0),
     )
+
+    def kept(c):
+        return c if keep is None else F.when(keep, c)
+
     return [
-        F.max(order0).alias("max_off"),
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col(OP_COL).isin(*DELETE_OPS).cast("long")).alias("n_del"),
-        F.sum((F.col(OP_COL) == "t").cast("long")).alias("n_tomb"),
-        F.sum(key_len).alias("key_bytes"),
+        F.max(kept(F.col(order0))).alias("max_off"),
+        F.count(kept(F.lit(1))).alias("n"),
+        F.sum(kept(F.col(OP_COL).isin(*DELETE_OPS).cast("long"))).alias("n_del"),
+        F.sum(kept((F.col(OP_COL) == "t").cast("long"))).alias("n_tomb"),
+        F.sum(kept(key_len)).alias("key_bytes"),
     ]
 
 
-def batch_stats_rows(b, key_cols: list[str], order0: str):
+def batch_stats_rows(b, key_cols: list[str], order0: str, keep: Column | None = None):
     """ONE skinny stats pass over a bucketed batch. Split out of
     merge_upsert so a driver loop can PREFETCH the next epoch's stats
-    concurrently with the current epoch's write (the two Spark actions
-    per epoch are the fixed driver cost that caps scaling at small
-    epochs — see BENCH.md)."""
-    return b.groupBy(BUCKET_COL).agg(*batch_stats_aggs(key_cols, order0)).collect()
+    concurrently with the current epoch's write, and so the streaming
+    driver can fold its offset bounds into the same pass: with ``keep``
+    the batch is the RAW one, each row also carries the bucket's raw
+    offset bounds ``raw_lo``/``raw_hi`` and the merge stats cover only
+    the ``keep`` rows (a bucket with none of them has ``n`` = 0)."""
+    aggs = batch_stats_aggs(key_cols, order0, keep)
+    if keep is not None:
+        aggs = [
+            F.min(order0).alias("raw_lo"),
+            F.max(order0).alias("raw_hi"),
+            *aggs,
+        ]
+    return b.groupBy(BUCKET_COL).agg(*aggs).collect()
 
 
 def merge_upsert(
@@ -86,10 +104,12 @@ def merge_upsert(
     "counters": {...}} for the checkpoint.
 
     ``stats_rows``: prefetched batch_stats_rows of EXACTLY this batch's
-    post-guard rows (run() prefetches the next disjoint slice, where the
-    replay guard is a no-op). ``trust_bucket_col``: BUCKET_COL came from
-    THIS table's bucket function; else it is recomputed, since a stale
-    bucket column would corrupt the layout.
+    post-guard rows, buckets with ``n`` = 0 left out (run() prefetches
+    the next disjoint slice, where the replay guard is a no-op; the
+    streaming driver folds them into its bounds pass).
+    ``trust_bucket_col``: BUCKET_COL came from THIS table's bucket
+    function; else it is recomputed, since a stale bucket column would
+    corrupt the layout.
     """
     spark = batch.sparkSession
     m = table.manifest()
@@ -132,7 +152,7 @@ def merge_upsert(
         return stats, {**(summary or {}), **stats}
 
     final = None if stats_rows is None else finalize(stats_rows)
-    pool = stats_fut = latest = None
+    pool = stats_fut = None
     try:
         if final is None:
             pool = ThreadPoolExecutor(max_workers=1)
@@ -177,15 +197,17 @@ def merge_upsert(
         if target_empty:
             out = latest.filter(~deleted).select(*out_cols)
         elif use_broadcast:
-            # `latest` feeds both the broadcast key set and the upsert
-            # write — persist the slim deduped form so the unwrap+LWW
-            # pipeline runs exactly once
-            latest = latest.persist(StorageLevel.MEMORY_AND_DISK)
-            keys = F.broadcast(latest.select(*key_cols))
-            survivors = current.join(keys, key_cols, "left_anti")
+            # the batch's own keys = `latest`'s keys (one LWW winner per
+            # batch key, deletes included); a bare key projection of the
+            # guarded batch keeps the unwrap UDF and the LWW out of the
+            # broadcast, so `latest` is consumed once, by the write
+            keys = b.select(*key_cols)
+            survivors = current.join(F.broadcast(keys), key_cols, "left_anti")
             upserts = latest.filter(~deleted)
             if after_set_col:
-                upserts = _coalesce_partial(upserts, current, key_cols, payload_cols, after_set_col)
+                upserts = _coalesce_partial(
+                    upserts, current, keys, key_cols, payload_cols, after_set_col
+                )
             out = survivors.select(*out_cols).unionByName(upserts.select(*out_cols))
         else:
             # fused: current rows become pseudo-events ordered below all
@@ -256,8 +278,6 @@ def merge_upsert(
     finally:
         if pool is not None:
             pool.shutdown(wait=True)
-        if latest is not None and latest.is_cached:
-            latest.unpersist()
     return version, final[0]
 
 
@@ -333,17 +353,16 @@ def _lww_partial(df, key_cols, order0, payload_cols, after_set_col):
     )
 
 
-def _coalesce_partial(upserts, current, key_cols, payload_cols, after_set_col):
+def _coalesce_partial(upserts, current, keys, key_cols, payload_cols, after_set_col):
     """Cell-level set flags: a payload field absent from ``after_set`` on
     an update keeps the current table value (null-vs-unset distinction,
     CellData 'set' sub-field, CellData.java:27-87).
 
-    Matched rows are a subset of the batch key set → SEMI-join with the
-    (already small) upsert keys, then broadcast the matched rows back.
+    Matched rows are a subset of the batch key set ``keys`` → SEMI-join
+    with it (a superset of the upsert keys: a deleted key's matched row
+    finds no upsert below), then broadcast the matched rows back.
     """
-    matched = current.join(
-        F.broadcast(upserts.select(*key_cols)), key_cols, "left_semi"
-    ).select(*key_cols, *[F.col(c).alias(f"__cur_{c}") for c in payload_cols])
+    matched = current.join(F.broadcast(keys), key_cols, "left_semi").select(*key_cols, *[F.col(c).alias(f"__cur_{c}") for c in payload_cols])
     joined = upserts.join(F.broadcast(matched), key_cols, "left")
     cols = []
     for c in payload_cols:

@@ -79,9 +79,8 @@ class MaterializedAggView:
         # key_cols would otherwise pass the params check while the CDF
         # full-outer-join grain (hence the reconstructed feed) silently
         # changed under non-row-unique keys
-        self.key_cols = (
-            list(key_cols) if key_cols else list(self.table.manifest()["bucket_cols"])
-        )
+        bucket_cols = list(self.table.manifest()["bucket_cols"])
+        self.key_cols = list(key_cols) if key_cols else bucket_cols
         self.state = VersionedState(
             spark,
             path,
@@ -92,6 +91,8 @@ class MaterializedAggView:
                 "extreme_cols": self.extreme_cols,
                 "key_cols": self.key_cols,
             },
+            # state written before key_cols was stamped used the default
+            legacy_params={"key_cols": bucket_cols},
         )
 
     # ------------------------------------------------------------- lifecycle

@@ -21,6 +21,8 @@ position guard, LcrEventHandler.java:53-65).
 
 from __future__ import annotations
 
+import functools
+import operator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,13 +31,13 @@ from pyspark.sql import types as T
 
 from debezium_incubator_spark.lake.checkpoint import CheckpointStore
 from debezium_incubator_spark.lake.table import BUCKET_COL, LakeTable
-from debezium_incubator_spark.operators.dedup import filter_processed
+from debezium_incubator_spark.operators.dedup import filter_processed, unprocessed_predicate
 from debezium_incubator_spark.operators.envelope import (
     KEY_COLS,
     fingerprint,
     normalize_content,
 )
-from debezium_incubator_spark.operators.filters import drop_envelope_fields, table_filter
+from debezium_incubator_spark.operators.filters import drop_envelope_fields, table_predicate
 from debezium_incubator_spark.operators.merge import merge_upsert
 from debezium_incubator_spark.sources.snapshot import snapshot_envelopes
 
@@ -290,21 +292,22 @@ class CDCEngine:
         )
         return int(mismatches)
 
-    def _prefilter(self, events: DataFrame) -> DataFrame:
+    def _prefilter_predicate(self):
         # corrupt-event guard: a mutation without a full primary key is
         # undeliverable (≙ the reference skipping unsupported/unparseable
         # mutations with a warning + error counter,
-        # CommitLogReadHandlerImpl.java:76-136)
-        ev = events
-        for k in self.key_cols:
-            ev = ev.filter(F.col(k).isNotNull())
-        ev = table_filter(
-            ev,
+        # CommitLogReadHandlerImpl.java:76-136) — then the T7 table filter
+        pred = functools.reduce(operator.and_, [F.col(k).isNotNull() for k in self.key_cols])
+        tables = table_predicate(
             include_regex=self.include_regex,
             exclude_regex=self.exclude_regex,
             table_col=self.key_cols[0],
             exclude_system=self.exclude_system,
         )
+        return pred if tables is None else pred & tables
+
+    def _prefilter(self, events: DataFrame) -> DataFrame:
+        ev = events.filter(self._prefilter_predicate())
         return drop_envelope_fields(ev, self.field_blacklist)
 
     # ------------------------------------------------------------- epochs
@@ -393,10 +396,7 @@ class CDCEngine:
             is_snapshot=True,
         )
 
-    def _guarded_pre(self, events: DataFrame, ckpt: dict) -> DataFrame:
-        """Prefilter → bucket → replay guard: the epoch frame BOTH the
-        stats pass and the apply path are derived from."""
-        pre = self.table.with_bucket(self._prefilter(events))
+    def _checked_num_buckets(self) -> int:
         nb = self.table.manifest()["num_buckets"]
         if not self._nb_checked:
             if nb != self.num_buckets:
@@ -405,7 +405,24 @@ class CDCEngine:
                     f"table manifest has {nb}"
                 )
             self._nb_checked = True
+        return nb
+
+    def _guarded_pre(self, events: DataFrame, ckpt: dict) -> DataFrame:
+        """Prefilter → bucket → replay guard: the epoch frame BOTH the
+        stats pass and the apply path are derived from."""
+        pre = self.table.with_bucket(self._prefilter(events))
+        nb = self._checked_num_buckets()
         return filter_processed(pre, ckpt.get("max_offsets", {}), num_buckets=nb)
+
+    def keep_predicate(self, ckpt: dict):
+        """The rows of a bucketed RAW batch that ``_guarded_pre`` keeps,
+        as one Column (prefilter AND replay guard) — lets a driver fold
+        the merge's stats into a pass over the raw batch."""
+        guard = unprocessed_predicate(
+            ckpt.get("max_offsets", {}), num_buckets=self._checked_num_buckets()
+        )
+        pred = self._prefilter_predicate()
+        return pred if guard is None else pred & guard
 
     def slice_stats(self, events: DataFrame, ckpt: dict) -> list:
         """Collect the merge's per-bucket batch stats for a slice WITHOUT

@@ -18,8 +18,8 @@ the D1 filter + idempotent epoch commit.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
+from debezium_incubator_spark.operators import merge
 from debezium_incubator_spark.operators.envelope import changelog_schema
 from debezium_incubator_spark.plans.pipeline import CDCEngine
 
@@ -55,44 +55,54 @@ class StreamingCDC:
         self._ckpt: dict | None = None
 
     def _apply_batch(self, batch_df, epoch_id: int) -> None:
-        # ONE stats action per micro-batch (count + offset bounds) —
-        # the old isEmpty + agg(max) pair cost two extra passes.
-        n, lo, top = batch_df.agg(
-            F.count(F.lit(1)), F.min("offset"), F.max("offset")
-        ).first()
         # RECONCILED position: after a crash between commit and
         # checkpoint the manifest chain is ahead of the checkpoint file —
         # reading store.latest() raw would regress stream_pos on the next
         # heartbeat/batch and re-scan an already-applied range. The
         # carried ckpt (which may be AHEAD of the persisted file) wins;
         # _reconcile folds it forward if the table advanced elsewhere.
-        ckpt = self.engine._reconcile(self._ckpt or self.engine.store.latest())
+        eng = self.engine
+        ckpt = eng._reconcile(self._ckpt or eng.store.latest())
         if self._ckpt is not None:
             # heartbeat epochs inflate the carried epoch WITHOUT table
             # commits, so _reconcile cannot fold past them — if another
             # driver moved the PERSISTED position further, disk wins
-            disk = self.engine._reconcile(self.engine.store.latest())
+            disk = eng._reconcile(eng.store.latest())
             if int(disk.get("stream_pos", -1)) > int(ckpt.get("stream_pos", -1)):
                 ckpt = disk
         last = int(ckpt.get("stream_pos", -1))
-        if n == 0:
-            # K5 heartbeat parity with the batch loop: an idle trigger
-            # still advances the epoch/checkpoint (no table commit)
-            self._ckpt = self.engine.apply_epoch(batch_df, stream_pos=last, ckpt=ckpt)
-            return
-        lo, top = int(lo), int(top)
-        if lo <= last < top:
-            # mixed batch: offsets at-or-below the checkpointed position
-            # arriving TOGETHER with new ones. A whole-batch redelivery
-            # after restart has top <= last (absorbed below); a mix means
-            # the file source's delivery order is not offset order.
-            raise OutOfOrderDeliveryError(
-                f"batch spans checkpointed stream_pos={last}: offsets [{lo}, {top}]"
-            )
-        # top <= last → byte-identical redelivery: apply_epoch's offset
-        # guards make it a no-op; top > last → normal forward progress.
-        self._ckpt = self.engine.apply_epoch(
-            batch_df, stream_pos=max(top, last), ckpt=ckpt
+        # ONE stats action per micro-batch: a grouped collect over the
+        # raw batch returns, per non-empty bucket, the raw offset bounds
+        # (out-of-order check, stream_pos — over the UNFILTERED batch)
+        # AND the merge's stats restricted to the rows the prefilter and
+        # replay guard keep, which apply_epoch takes as prefetched stats
+        # instead of scanning the batch again
+        rows = merge.batch_stats_rows(
+            eng.table.with_bucket(batch_df), eng.key_cols, "offset",
+            keep=eng.keep_predicate(ckpt),
+        )
+        pos = last
+        if rows:
+            lo = min(int(r["raw_lo"]) for r in rows)
+            top = max(int(r["raw_hi"]) for r in rows)
+            if lo <= last < top:
+                # mixed batch: offsets at-or-below the checkpointed
+                # position arriving TOGETHER with new ones. A whole-batch
+                # redelivery after restart has top <= last (absorbed
+                # below); a mix means the file source's delivery order is
+                # not offset order.
+                raise OutOfOrderDeliveryError(
+                    f"batch spans checkpointed stream_pos={last}: offsets [{lo}, {top}]"
+                )
+            # top <= last → byte-identical redelivery: the replay guard
+            # kept no row, so apply_epoch commits nothing; top > last →
+            # forward progress, even when every row was prefiltered out
+            pos = max(top, last)
+        # an empty batch is a K5 heartbeat, as in the batch loop: the
+        # epoch/checkpoint still advances (no table commit)
+        self._ckpt = eng.apply_epoch(
+            batch_df, stream_pos=pos, ckpt=ckpt,
+            stats_rows=[r for r in rows if r["n"] > 0],
         )
 
     def start(

@@ -4,7 +4,8 @@ paths and assert the plan properties the 100 TB design depends on:
 * the changelog offset-range predicate reaches the parquet scan
   (PushedFilters) and the scan reads only needed columns (ReadSchema);
 * the broadcast-anti merge path broadcasts the batch keys (no shuffle of
-  the target side);
+  the target side) as a bare key projection, and its write evaluates the
+  unwrap UDF exactly once;
 * the LWW hash aggregate runs as partial + final (map-side combine);
 * expressions stay inside WholeStageCodegen spans.
 
@@ -68,22 +69,20 @@ def main():
         ],
     ))
 
-    # 2. the apply-epoch write plan (fused or broadcast depending on stats)
+    # 2. the apply-epoch plans, built the way merge_upsert builds its
+    # broadcast-anti path: the guarded batch's own keys ride the
+    # broadcast, and the LWW (with the unwrap UDF) runs once, in the write
     ck = eng.store.latest()
     batch = cl.range(spark, -1, 10**9)
-    flat = eng.table.with_bucket(eng._unwrap(eng._prefilter(batch), []))
-    from debezium_incubator_spark.operators.dedup import filter_processed
-
-    flat = filter_processed(flat, ck.get("max_offsets", {}), num_buckets=8)
-    # broadcast-anti shape: target read + anti join against broadcast keys
+    flat = eng._unwrap(eng._guarded_pre(batch, ck), [])
+    keys = ["repo", "path"]
+    payload = [f["name"] for f in eng.table.current_fields() if f["name"] not in keys]
+    out_cols = [*keys, *payload, "_bucket"]
     latest = lww_latest(
-        flat, ["repo", "path"], ["offset"],
-        [c for c in flat.columns if c not in ("repo", "path")],
+        flat, keys, ["offset", "op"], [c for c in flat.columns if c not in keys]
     )
     current = eng.table.with_bucket(eng.table.read(spark))
-    survivors = current.join(
-        F.broadcast(latest.select("repo", "path")), ["repo", "path"], "left_anti"
-    )
+    survivors = current.join(F.broadcast(flat.select(*keys)), keys, "left_anti")
     p2 = plan_of(survivors)
     sections.append((
         "Merge broadcast-anti path (target side never shuffles)",
@@ -92,8 +91,21 @@ def main():
             ("anti join uses broadcast", r"BroadcastHashJoin .*LeftAnti|BroadcastNestedLoop"),
             ("no exchange on the target scan side before the join",
              r"BroadcastHashJoin", ),
+            ("broadcast side is a bare key projection (no UDF, no cache)",
+             r"^(?:(?!ArrowEvalPython|InMemoryRelation)(.|\n))*$"),
         ],
     ))
+    upserts = latest.filter(~F.col("op").isin("d", "t"))
+    write = survivors.select(*out_cols).unionByName(upserts.select(*out_cols))
+    p2w = plan_of(write)
+    n_udf = len(set(re.findall(r"\((\d+)\) ArrowEvalPython", p2w)))
+    sections.append((
+        "Merge broadcast-anti write plan (unwrap UDF evaluated once)",
+        p2w,
+        [("normalize_content UDF in the plan", r"ArrowEvalPython")],
+    ))
+    if n_udf != 1:
+        failures.append(f"merge write plan: {n_udf} ArrowEvalPython operators (expected 1)")
 
     # 3. LWW hash aggregate: partial + final
     p3 = plan_of(latest)

@@ -1,6 +1,8 @@
 """D1/D2 tests: offset-skip precision (≙ FileOffsetWriterTest.java:39-126)
 and LWW dedup under out-of-order + duplicate offsets."""
 
+import hypothesis.strategies as st
+from hypothesis import HealthCheck, given, settings
 from pyspark.sql import functions as F
 
 from debezium_incubator_spark.operators.dedup import (
@@ -46,6 +48,44 @@ def test_filter_processed_unmarked_bucket_passes_low_offsets(spark):
     # bucket 2 has offset 1, below every mark; marks incomplete → must pass
     out = filter_processed(df, {"0": 100, "1": 100}, num_buckets=3)
     assert [(r["_bucket"], r["offset"]) for r in out.collect()] == [(2, 1)]
+
+
+def test_filter_processed_unmarked_bucket_above_highest_mark(spark):
+    """Without num_buckets, a bucket above the highest marked one has no
+    mark and passes every offset — the lookup must yield NULL there
+    (a plain element_at on a per-bucket array raises under ANSI)."""
+    df = _events(spark).unionByName(
+        spark.createDataFrame([(7, 0, "k7", "y0")], "_bucket int, offset long, key string, val string")
+    )
+    out = filter_processed(df, {"0": 5, "1": 1})
+    got = sorted((r["_bucket"], r["offset"]) for r in out.collect())
+    assert got == [(0, 9), (1, 2), (1, 8), (1, 8), (2, 1), (7, 0)]
+
+
+@st.composite
+def _guard_cases(draw):
+    nb = 8
+    with_nb = draw(st.booleans())
+    # the engine's buckets are always < num_buckets; without it, ids
+    # above every mark must pass too
+    hi = nb - 1 if with_nb else nb + 3
+    marks = draw(st.dictionaries(st.integers(0, nb - 1), st.integers(-3, 20), max_size=nb))
+    rows = draw(st.lists(st.tuples(st.integers(0, hi), st.integers(-5, 25)), max_size=30))
+    return marks, rows, nb if with_nb else None
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_guard_cases())
+def test_filter_processed_matches_python_filter(spark, case):
+    marks, rows, nb = case
+    df = spark.createDataFrame(rows, "_bucket int, offset long")
+    out = filter_processed(df, {str(b): o for b, o in marks.items()}, num_buckets=nb)
+    want = sorted(r for r in rows if r[0] not in marks or r[1] > marks[r[0]])
+    assert sorted(tuple(r) for r in out.collect()) == want
 
 
 def test_lww_agg_and_window_agree(spark):

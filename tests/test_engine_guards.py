@@ -102,6 +102,52 @@ def test_streaming_out_of_order_batch_raises(spark, tmp_path):
     s._apply_batch(first.filter(F.col("offset") <= 250), 2)
 
 
+def test_streaming_filtered_out_batch_advances_stream_pos(spark, tmp_path):
+    """A micro-batch whose rows are ALL prefiltered out (a system repo, a
+    null key) commits nothing to the table but still moves stream_pos to
+    its raw top: the stream's bounds come from the unfiltered batch."""
+    src = gen_source_table(spark, n_keys=30, n_repos=3)
+    e = _engine(spark, tmp_path, "filtered")
+    e.bootstrap(src)
+    epoch0 = e.store.latest()["epoch"]
+    v0 = e.table.version()
+    s = StreamingCDC(e, str(tmp_path / "nolog3"), str(tmp_path / "sck3"))
+    after = {"commit": "c", "lang": "py", "content": "x"}
+    batch = mk_events(
+        spark,
+        [
+            {"offset": 500, "op": "c", "repo": "_system/meta", "path": "a", "after": after},
+            {"offset": 501, "op": "c", "repo": None, "path": "b", "after": after},
+            {"offset": 507, "op": "u", "repo": "_system/meta", "path": "a", "after": after},
+        ],
+    )
+    s._apply_batch(batch, 0)
+    ck = e.store.latest()
+    assert int(ck["stream_pos"]) == 507
+    assert ck["epoch"] == epoch0 + 1
+    assert e.table.version() == v0  # no table commit
+
+
+def test_streaming_broadcast_anti_batch_job_budget(spark, tmp_path):
+    """The fixed cost of a small epoch is its Spark jobs: one ~100-event
+    broadcast-anti micro-batch runs at most 6 — one stats collect, then
+    the write with its key broadcast. Counted from the status tracker's
+    job ids before and after."""
+    src = gen_source_table(spark, n_keys=400, n_repos=4)
+    log = gen_changelog(spark, n_keys=400, n_repos=4, n_slots=100).localCheckpoint()
+    e = _engine(spark, tmp_path, "budget")
+    e.bootstrap(src)
+    s = StreamingCDC(e, str(tmp_path / "nolog4"), str(tmp_path / "sck4"))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    s._apply_batch(log, 0)
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    ck = e.store.latest()
+    assert ck["counters"]["events_in"] == 400 + log.count()
+    assert int(ck["stream_pos"]) == log.agg(F.max("offset")).first()[0]
+    assert len(jobs) <= 6, sorted(jobs)
+
+
 def test_num_buckets_drift_fails_loudly(spark, tmp_path):
     """ADVICE r1: an engine attached with a different --num-buckets than
     the table manifest must not silently mis-filter."""

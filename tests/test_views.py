@@ -96,6 +96,31 @@ def test_param_drift_fails_loudly(spark, tmp_path):
         drifted.refresh()
 
 
+def test_legacy_state_without_key_cols_resumes(spark, tmp_path):
+    """A view state written before key_cols was stamped (hand-written
+    manifest without it) resumes under the resolved bucket_cols default,
+    gets the stamp on its next commit, and still rejects other keys."""
+    import json
+
+    t = _mk(spark, str(tmp_path / "table"), [("r1", "a", 1), ("r2", "b", 2)])
+    _view(spark, tmp_path).build()
+    mpath = tmp_path / "view" / f"v{_view(spark, tmp_path).version()}.json"
+    m = json.loads(mpath.read_text())
+    del m["params"]["key_cols"]
+    mpath.write_text(json.dumps(m))
+
+    with pytest.raises(ValueError, match="param mismatch"):
+        _view(spark, tmp_path, key_cols=["repo"]).refresh()
+    _commit_state(spark, t, [("r1", "a", 5), ("r2", "b", 2)])
+    mv = _view(spark, tmp_path, key_cols=list(KEYS))
+    assert mv.refresh()["folded_versions"] == 1
+    assert sorted(map(tuple, mv.read().select("repo", "sum_v").collect())) == [
+        ("r1", 5),
+        ("r2", 2),
+    ]
+    assert mv.meta()["params"]["key_cols"] == KEYS
+
+
 def test_rewound_table_fails_loudly(spark, tmp_path, monkeypatch):
     t = _mk(spark, str(tmp_path / "table"), [("r1", "a", 1)])
     _commit_state(spark, t, [("r1", "a", 2)])
