@@ -44,16 +44,20 @@ BROADCAST_KEY_BYTES_MAX = 64 * 1024 * 1024
 TARGET_ROWS_PER_WRITE_TASK = 500_000
 
 
-def batch_stats_aggs(key_cols: list[str], order0: str, keep: Column | None = None) -> list:
-    """The per-bucket stats aggregates: max offset (checkpoint marks),
-    row/delete/tombstone counts, and measured key bytes (drives the
-    broadcast-vs-fused merge decision). Shared with the orchestrator's
-    one-pass multi-table stats so both collect exactly the same rows.
-    ``keep`` restricts every aggregate to the rows it holds for."""
-    key_len = sum(
+def key_bytes(key_cols: list[str]) -> Column:
+    """A row's measured key length: the string bytes of its key columns
+    (drives the broadcast-vs-fused merge decision)."""
+    return sum(
         (F.coalesce(F.length(F.col(k).cast("string")), F.lit(0)) for k in key_cols),
         F.lit(0),
     )
+
+
+def batch_stats_aggs(key_len: Column, order0: str, keep: Column | None = None) -> list:
+    """The per-bucket stats aggregates: max offset (checkpoint marks),
+    row/delete/tombstone counts, and the summed ``key_len`` (see
+    :func:`key_bytes`). ``keep`` restricts every aggregate to the rows
+    it holds for."""
 
     def kept(c):
         return c if keep is None else F.when(keep, c)
@@ -67,22 +71,32 @@ def batch_stats_aggs(key_cols: list[str], order0: str, keep: Column | None = Non
     ]
 
 
-def batch_stats_rows(b, key_cols: list[str], order0: str, keep: Column | None = None):
-    """ONE skinny stats pass over a bucketed batch. Split out of
-    merge_upsert so a driver loop can PREFETCH the next epoch's stats
-    concurrently with the current epoch's write, and so the streaming
-    driver can fold its offset bounds into the same pass: with ``keep``
-    the batch is the RAW one, each row also carries the bucket's raw
-    offset bounds ``raw_lo``/``raw_hi`` and the merge stats cover only
-    the ``keep`` rows (a bucket with none of them has ``n`` = 0)."""
-    aggs = batch_stats_aggs(key_cols, order0, keep)
+def batch_stats_frame(
+    b, key_len: Column, order0: str, keep: Column | None = None, by: tuple = ()
+):
+    """The skinny stats aggregate over a bucketed batch, grouped by
+    ``by`` and BUCKET_COL. With ``keep`` the batch is the RAW one: each
+    row also carries its group's raw offset bounds ``raw_lo``/``raw_hi``
+    and the merge stats cover only the ``keep`` rows (a group with none
+    of them has ``n`` = 0)."""
+    aggs = batch_stats_aggs(key_len, order0, keep)
     if keep is not None:
         aggs = [
             F.min(order0).alias("raw_lo"),
             F.max(order0).alias("raw_hi"),
             *aggs,
         ]
-    return b.groupBy(BUCKET_COL).agg(*aggs).collect()
+    return b.groupBy(*by, BUCKET_COL).agg(*aggs)
+
+
+def batch_stats_rows(
+    b, key_len: Column, order0: str, keep: Column | None = None, by: tuple = ()
+):
+    """ONE stats pass: :func:`batch_stats_frame`, collected. Split out of
+    merge_upsert so a driver loop can PREFETCH the next epoch's stats
+    concurrently with the current epoch's write, and so the streaming
+    drivers can fold their offset bounds into the same pass."""
+    return batch_stats_frame(b, key_len, order0, keep, by).collect()
 
 
 def merge_upsert(
@@ -135,7 +149,7 @@ def merge_upsert(
     # stats were ~2-3 s of every sf1.0 snapshot). A quick isEmpty probe
     # keeps the no-commit contract for an empty batch.
     if stats_rows is None and not target_empty:
-        stats_rows = batch_stats_rows(b, key_cols, order0)
+        stats_rows = batch_stats_rows(b, key_bytes(key_cols), order0)
     if b.isEmpty() if stats_rows is None else not stats_rows:
         return table.version(), {"max_offsets": {}, "counters": {"events_in": 0}}
 
@@ -156,7 +170,7 @@ def merge_upsert(
     try:
         if final is None:
             pool = ThreadPoolExecutor(max_workers=1)
-            stats_fut = pool.submit(batch_stats_rows, b, key_cols, order0)
+            stats_fut = pool.submit(batch_stats_rows, b, key_bytes(key_cols), order0)
 
         # 2. pick the plan from table stats (≙ a cost-based MERGE plan):
         #  * broadcast-anti — batch keys ≪ target rows (the 100 TB steady

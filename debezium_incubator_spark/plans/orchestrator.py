@@ -33,9 +33,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_incubator_spark.lake.checkpoint import _atomic_write
-from debezium_incubator_spark.lake.table import BUCKET_COL, LakeTable
-from debezium_incubator_spark.operators.merge import batch_stats_aggs
-from debezium_incubator_spark.plans.pipeline import CDCEngine
+from debezium_incubator_spark.lake.table import BUCKET_COL, LakeTable, bucket_expr
+from debezium_incubator_spark.operators import merge
+from debezium_incubator_spark.operators.dedup import unprocessed_predicate
+from debezium_incubator_spark.plans.pipeline import CDCEngine, SnapshotPhaseError
 from debezium_incubator_spark.streaming.stream import StreamingCDC
 
 
@@ -94,7 +95,7 @@ class MultiTableCDC:
         thread pool (≙ the reference's processor thread pool,
         CassandraConnectorTask.java:191-228): Spark schedules concurrent
         jobs natively, each engine owns disjoint state (own LakeTable,
-        own CheckpointStore, own carried ckpt dict slot), and the shared
+        own CheckpointStore, own carried checkpoint), and the shared
         batch is persisted before the fan-out — so N tables no longer
         serialize N mostly-idle merge jobs per trigger. 1 = sequential."""
         self.spark = spark
@@ -102,12 +103,6 @@ class MultiTableCDC:
         self.max_parallel_tables = max(1, int(max_parallel_tables))
         self.engine_defaults = engine_defaults
         self.engines: dict[str, CDCEngine] = {}
-        # loop-carried per-engine checkpoints for apply_batch: with
-        # checkpoint_interval > 1 a heartbeat-advanced stream_pos lives
-        # only in memory between persisted checkpoints — re-reading
-        # store.latest() every micro-batch would regress it (the batch
-        # loop in CDCEngine.run threads its ckpt the same way)
-        self._ckpts: dict[str, dict] = {}
         os.makedirs(root, exist_ok=True)
         for name, cfg in self._registry().items():
             self.engines[name] = self._mk_engine(name, cfg)
@@ -183,7 +178,6 @@ class MultiTableCDC:
         reg = self._registry()
         reg[name] = cfg
         self._save_registry(reg)
-        self._ckpts.pop(name, None)  # no carried state may outlive a re-provision
         self.engines[name] = eng
         return eng
 
@@ -204,7 +198,6 @@ class MultiTableCDC:
         dropped = LakeTable.drop(path)
         ckpt_dir = eng.store.path if eng is not None else os.path.join(self.root, "ckpt", name)
         shutil.rmtree(ckpt_dir, ignore_errors=True)
-        self._ckpts.pop(name, None)
         self.engines.pop(name, None)
         reg = self._registry()
         reg.pop(name, None)
@@ -268,30 +261,6 @@ class MultiTableCDC:
             else:
                 warnings.warn(f"DDL for unregistered table {tbl!r} skipped: {kind}")
         return applied
-
-    def _stats_homogeneous(self) -> bool:
-        """True when every engine computes batch stats identically —
-        same prefilter inputs (key cols, table regexes, field blacklist)
-        and the same bucket function (bucket cols + count) — so ONE
-        prefiltered per-(table, bucket) stats pass over a shared batch
-        is row-exact for all of them. Mid-stream DDL can add tables, so
-        this is re-checked per micro-batch (manifest reads are cached)."""
-
-        def sig(e):
-            m = e.table.manifest()
-            return (
-                tuple(e.key_cols),
-                e.include_regex,
-                e.exclude_regex,
-                tuple(e.field_blacklist),
-                e.exclude_system,
-                tuple(m["bucket_cols"]),
-                int(m["num_buckets"]),
-            )
-
-        engs = list(self.engines.values())
-        first = sig(engs[0])
-        return all(sig(e) == first for e in engs[1:])
 
     # ------------------------------------------------------------- lifecycle
     def _for_each_engine(self, fn) -> dict[str, Any]:
@@ -368,158 +337,43 @@ class MultiTableCDC:
 
     def apply_batch(self, batch: DataFrame, table_field: str = "source.table") -> None:
         """Apply ONE shared micro-batch across every registered table —
-        the streaming form of run(): rows route by ``table_field``, each
-        engine's own D1/replay guards absorb redelivery, and a table
-        with no rows in the batch heartbeats (its epoch still advances,
-        ≙ K5). A batch that MIXES offsets at-or-below a table's
-        checkpointed position with new ones means delivery order is not
-        offset order — fail loudly (same contract as StreamingCDC).
-        Used by StreamingMultiTableCDC's foreachBatch."""
+        the streaming form of run(), rows routed by ``table_field``.
+        Every engine resumes (``CDCEngine.resume``), ONE grouped stats
+        collect covers all tables (``_batch_stats``), and each engine
+        applies its rows through ``CDCEngine.apply_micro_batch`` — the
+        same step StreamingCDC takes, with the batch's global top as the
+        heartbeat target. The out-of-order check sees only THAT table's
+        rows: positions legitimately diverge (a table caught up further
+        in batch mode, or attached later), and whole-batch bounds would
+        wedge the stream on another table's new offsets. Delivery
+        contract (same as StreamingCDC): files arrive in GLOBAL offset
+        order. An idle table runs no Spark job. Used by
+        StreamingMultiTableCDC's foreachBatch."""
         from pyspark import StorageLevel
 
-        from debezium_incubator_spark.streaming.stream import OutOfOrderDeliveryError
-
-        # every engine re-reads the batch (stats + per-table filter +
-        # merge) — persist once, release after the loop (with N tables an
-        # unpersisted batch would be rescanned ~2N+1 times per trigger)
+        # the stats collect and every active table's merge read the
+        # batch — persist once, release after the fan-out
         batch = batch.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            # ONE stats pass, bounds per table: positions legitimately
-            # diverge (a table caught up further in batch mode, or
-            # attached later), so the out-of-order check must see only
-            # THAT table's rows — whole-batch bounds would wedge the
-            # stream on another table's new offsets. Delivery contract
-            # (same as StreamingCDC): files arrive in GLOBAL offset
-            # order.
-            stats = {
-                r["__t"]: (int(r["n"]), int(r["lo"]), int(r["top"]))
-                for r in batch.groupBy(F.col(table_field).alias("__t"))
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min("offset").alias("lo"),
-                    F.max("offset").alias("top"),
-                )
-                .collect()
-            }
-            global_top = max((t for _, _, t in stats.values()), default=-1)
+            ckpts = self._for_each_engine(lambda name, eng: eng.resume())
+            stats: dict[str, list] = {}
+            for r in self._batch_stats(batch, ckpts, table_field):
+                stats.setdefault(r["__t"], []).append(r)
+            global_top = max(
+                (int(r["raw_hi"]) for rows in stats.values() for r in rows), default=-1
+            )
 
-            # ONE prefiltered per-(table, bucket) stats pass replaces the
-            # N per-table batch_stats_rows collects inside merge_upsert —
-            # N engines were re-deriving identical stats from the same
-            # cached batch, one extra Spark job per table per trigger
-            # (guide §2.4: do the work once). Sound when every engine
-            # shares the stats-relevant config (same prefilter + bucket
-            # function — checked below); a table consumes its slice of
-            # this pass only when the slice lies strictly beyond every
-            # replay-guard mark, so pre-guard stats are exactly what its
-            # merge would have collected (checked per table in apply_one).
-            bucket_stats: dict[str, list] = {}
-            shared_stats_ran = bool(self.engines) and self._stats_homogeneous()
-            if shared_stats_ran:
-                any_eng = next(iter(self.engines.values()))
-                pre = any_eng.table.with_bucket(any_eng._prefilter(batch))
-                for r in (
-                    pre.groupBy(F.col(table_field).alias("__t"), F.col(BUCKET_COL))
-                    .agg(*batch_stats_aggs(any_eng.key_cols, "offset"))
-                    .collect()
-                ):
-                    bucket_stats.setdefault(r["__t"], []).append(r)
+            # one shared empty frame for the tables without rows: building
+            # a filtered frame per idle table costs driver round trips
+            idle = batch.filter(F.lit(False))
 
             def apply_one(name, eng):
-                # carried ckpt first (holds unpersisted heartbeat
-                # positions); _reconcile folds it forward if the TABLE
-                # advanced through another path (e.g. a batch run)
-                carried = self._ckpts.get(name)
-                ckpt = eng._reconcile(carried or eng.store.latest())
-                if carried is not None:
-                    # heartbeat epochs inflate the carried epoch WITHOUT
-                    # table commits, so _reconcile cannot fold forward
-                    # past them — if another driver (an out-of-band
-                    # batch run) moved the PERSISTED position beyond the
-                    # carried one, the disk state is the truth
-                    disk = eng._reconcile(eng.store.latest())
-                    if int(disk.get("stream_pos", -1)) > int(ckpt.get("stream_pos", -1)):
-                        ckpt = disk
-                if ckpt.get("phase") == "snapshot":
-                    # same contract as CDCEngine.run(): silently streaming
-                    # into a never-bootstrapped table would flip it to
-                    # stream phase and permanently skip its snapshot base
-                    raise RuntimeError(
-                        f"table {name}: bootstrap() must run before streaming"
+                if name in ckpts:  # a table attached mid-trigger joins the next one
+                    rows = stats.get(name, [])
+                    eng.apply_micro_batch(
+                        batch.filter(F.col(table_field) == F.lit(name)) if rows else idle,
+                        rows, global_top, ckpts[name],
                     )
-                last = int(ckpt.get("stream_pos", -1))
-                n_t, lo_t, top_t = stats.get(name, (0, -1, -1))
-                if n_t == 0:
-                    if last < 0:
-                        # a table that has never applied a stream offset
-                        # (e.g. just provisioned by mid-stream DDL) keeps
-                        # stream_pos=-1 so a batch-mode run() can still
-                        # replay the full changelog history into it;
-                        # advancing it to global_top here would silently
-                        # skip that history forever
-                        return
-                    # K5 heartbeat; advance to the batch top (this table
-                    # has no rows at or below it, delivery is ordered).
-                    # stats_rows=[] makes this ZERO Spark jobs: the one
-                    # stats pass above already proved the batch is empty
-                    # for this table, so neither the audit nor the merge
-                    # stats collect needs to run — at 50+ mostly-idle
-                    # tables the per-table empty-job submission was the
-                    # trigger's dominant fixed cost (VERDICT r4 #6)
-                    self._ckpts[name] = eng.apply_epoch(
-                        batch.filter(F.lit(False)),
-                        stream_pos=max(global_top, last),
-                        ckpt=ckpt,
-                        stats_rows=[],
-                    )
-                    return
-                if lo_t <= last < top_t and last > int(ckpt.get("oob_replay_until", -1)):
-                    # a span over a position reached by an OUT-OF-BAND
-                    # catch-up is the stream redelivering covered files
-                    # together with new ones — the D1 marks (≥ every
-                    # covered offset per bucket) absorb the old rows, so
-                    # only a span past a STREAM-advanced position is
-                    # genuine disorder. Known bounded blind spot: WHILE
-                    # stream_pos still equals the catch-up position, a
-                    # delivery-contract violation injecting never-seen
-                    # offsets below it would be absorbed silently (they
-                    # fall below the marks); the window closes on the
-                    # first batch that advances past the stamp.
-                    raise OutOfOrderDeliveryError(
-                        f"table {name}: batch spans checkpointed stream_pos={last}: "
-                        f"offsets [{lo_t}, {top_t}]"
-                    )
-                stamp = int(ckpt.get("oob_replay_until", -1))
-                if stamp >= 0 and lo_t > stamp:
-                    # ADVICE r4: the stream has moved WHOLLY past the
-                    # catch-up span — redelivery of covered offsets is
-                    # over (ordered file delivery), so close the absorb
-                    # window now instead of waiting for stream_pos to
-                    # advance: never-seen offsets below the stamp become
-                    # genuine disorder again on the very next batch
-                    ckpt = {**ckpt, "oob_replay_until": -1}
-                rows = batch.filter(F.col(table_field) == F.lit(name))
-                # the shared per-bucket stats describe PRE-guard rows;
-                # they stand in for the merge's own collect only when
-                # this table's slice is strictly beyond every replay-
-                # guard mark (then the guard provably drops nothing)
-                floor = max(
-                    [last]
-                    + [int(v) for v in ckpt.get("max_offsets", {}).values()]
-                )
-                # an absent key under a completed shared pass means the
-                # prefilter dropped every row — [] takes the zero-job
-                # heartbeat path, same outcome the merge's own empty
-                # stats collect would have produced
-                st = (
-                    bucket_stats.get(name, [])
-                    if shared_stats_ran and lo_t > floor
-                    else None
-                )
-                self._ckpts[name] = eng.apply_epoch(
-                    rows, stream_pos=max(global_top, last), ckpt=ckpt,
-                    stats_rows=st,
-                )
 
             # per-table merges overlap on the driver thread pool: the
             # persisted batch is read-shared, every engine's state is
@@ -530,7 +384,7 @@ class MultiTableCDC:
             # batch has carried. A table attached out-of-band later is
             # owed exactly the history ≤ this mark (the file source will
             # never redeliver it) — the streaming DDL poll uses it to
-            # scope catch-ups (see _catch_up_owed_tables)
+            # scope catch-ups (see _heal_out_of_band_tables)
             if global_top > self.stream_watermark():
                 _atomic_write(
                     os.path.join(self.root, "_stream_watermark.json"),
@@ -538,6 +392,65 @@ class MultiTableCDC:
                 )
         finally:
             batch.unpersist(blocking=False)
+
+    def _batch_stats(self, batch: DataFrame, ckpts: dict[str, dict], table_field: str) -> list:
+        """ONE ``batch_stats_rows`` collect for every table, grouped by
+        (``__t`` = the table field, bucket): per group the raw offset
+        bounds and the merge stats of the rows that table's prefilter and
+        replay guard keep — row-exact whatever each table's bucket count,
+        filters or key columns.
+
+        The bucket, prefilter, replay-guard and key-length columns are
+        each one CASE on the table field. Tables whose expression has
+        the same inputs share one branch, built once: building a Column
+        costs driver round trips to the JVM, and a trigger must not pay
+        them for every idle table. The CASE thus grows with the number
+        of distinct inputs — one guard branch per table with its own
+        marks. The largest group takes the ELSE branch; rows of
+        unregistered tables get it too, and form groups no engine reads
+        (they still count toward the batch top)."""
+        t = F.col(table_field)
+        engines = {name: self.engines[name] for name in ckpts}
+
+        def per_table(key_of, expr_of, default):
+            groups: dict[Any, list[str]] = {}
+            for name, eng in engines.items():
+                groups.setdefault(key_of(name, eng), []).append(name)
+            if not groups:
+                return default
+            by_size = sorted(groups.items(), key=lambda kv: -len(kv[1]))
+            c = None
+            for key, names in by_size[1:]:
+                c = (F if c is None else c).when(t.isin(names), expr_of(key, engines[names[0]]))
+            key, names = by_size[0]
+            common = expr_of(key, engines[names[0]])
+            return common if c is None else c.otherwise(common)
+
+        def bucket_key(name, eng):
+            m = eng.table.manifest()
+            return tuple(m["bucket_cols"]), m["num_buckets"]
+
+        def marks_key(name, eng):
+            marks = ckpts[name].get("max_offsets", {})
+            return tuple(sorted(marks.items())), eng._checked_num_buckets()
+
+        def guard(key, eng):
+            g = unprocessed_predicate(dict(key[0]), num_buckets=key[1])
+            return F.lit(True) if g is None else g
+
+        b = batch.withColumn(
+            BUCKET_COL, per_table(bucket_key, lambda k, e: bucket_expr(*k), F.lit(0))
+        )
+        keep = per_table(
+            lambda n, e: e._prefilter_key(), lambda k, e: e._prefilter_predicate(), F.lit(False)
+        ) & per_table(marks_key, guard, F.lit(True))
+        key_len = per_table(
+            lambda n, e: tuple(e.key_cols), lambda k, e: merge.key_bytes(k), F.lit(0)
+        )
+        b = b.withColumn("__keep", keep).withColumn("__klen", key_len)
+        return merge.batch_stats_rows(
+            b, F.col("__klen"), "offset", keep=F.col("__keep"), by=(t.alias("__t"),)
+        )
 
     def stream_watermark(self) -> int:
         try:
@@ -706,7 +619,7 @@ class StreamingMultiTableCDC(StreamingCDC):
         self.ddl_dir = ddl_dir
         self.catchup_offsets_per_epoch = catchup_offsets_per_epoch
         # serializes foreachBatch with the idle-time DDL poller (both
-        # mutate orchestrator state: engines dict, ckpts, catch-ups)
+        # mutate orchestrator state: engines dict, checkpoints, catch-ups)
         self._gate = threading.Lock()
         self._poller: threading.Thread | None = None
         self._poller_error: Exception | None = None
@@ -771,14 +684,14 @@ class StreamingMultiTableCDC(StreamingCDC):
     def _save_pending_catchup(self, pending: set[str]) -> None:
         _atomic_write(self._pending_path(), json.dumps(sorted(pending)))
 
-    def _stamp_oob(self, name: str, eng, ck: dict, pos: int) -> None:
+    def _stamp_oob(self, eng, ck: dict, pos: int) -> None:
         """Record the out-of-band position in the checkpoint so the
         stream's redelivery of covered offsets (possibly batched with
-        newer files) is absorbed by apply_batch's guard."""
+        newer files) is absorbed by apply_micro_batch's guard."""
         if pos > int(ck.get("oob_replay_until", -1)):
             ck["oob_replay_until"] = pos
             eng.store.save(ck)
-            self.orch._ckpts.pop(name, None)  # re-read the stamp
+            eng._carried = None  # resume re-reads the stamp
 
     def _changelog_view(self, extra_paths: list[str] | None = None):
         from debezium_incubator_spark.sources.changelog import ParquetChangelog
@@ -855,11 +768,11 @@ class StreamingMultiTableCDC(StreamingCDC):
                         TableSlice(log, name),
                         offsets_per_epoch=self.catchup_offsets_per_epoch,
                     )
-                    ck = eng._reconcile(eng.store.latest())
+                    ck = eng.resume()
                     pos = int(ck.get("stream_pos", -1))
                     if pos < 0:
                         continue  # nothing on disk yet: stays pending
-                self._stamp_oob(name, eng, ck, pos)
+                self._stamp_oob(eng, ck, pos)
             pending.discard(name)
             self._save_pending_catchup(pending)
 
@@ -884,17 +797,19 @@ class StreamingMultiTableCDC(StreamingCDC):
         # (create_table) while the 1 Hz poller iterates — a live-dict
         # iteration would die with "changed size during iteration"
         for name, eng in list(self.orch.engines.items()):
-            ck = self.orch._ckpts.get(name) or eng._reconcile(eng.store.latest())
-            if ck.get("phase") != "stream" or int(ck.get("stream_pos", -1)) >= 0:
-                continue
+            try:
+                if int(eng.resume().get("stream_pos", -1)) >= 0:
+                    continue
+            except SnapshotPhaseError:
+                continue  # attached, not bootstrapped yet
             if log is None:
                 log = self._changelog_view(self._archive_extra_paths())
             eng.run(
                 TableSlice(_CappedChangelog(log, wm), name),
                 offsets_per_epoch=self.catchup_offsets_per_epoch,
             )
-            ck = eng._reconcile(eng.store.latest())
-            self._stamp_oob(name, eng, ck, int(ck.get("stream_pos", -1)))
+            ck = eng.resume()
+            self._stamp_oob(eng, ck, int(ck.get("stream_pos", -1)))
 
     def _stale_poller_error(self) -> Exception | None:
         """A poller error younger than the retry grace window is left in

@@ -42,6 +42,21 @@ from debezium_incubator_spark.operators.merge import merge_upsert
 from debezium_incubator_spark.sources.snapshot import snapshot_envelopes
 
 
+class SnapshotPhaseError(RuntimeError):
+    """Streaming into a table whose snapshot phase has not run: the first
+    stream epoch would flip it to phase 'stream' and a later bootstrap()
+    would skip its snapshot base for good."""
+
+
+class OutOfOrderDeliveryError(RuntimeError):
+    """A micro-batch mixed never-applied offsets at-or-below the
+    checkpointed stream position with new ones: the file source delivered
+    changelog files out of offset order. Applying it would let the D1
+    high-water-mark filter silently DROP the low offsets (they look like
+    replays) — data loss, not duplicate absorption. Re-deliver in order
+    or drive the offset-sliced batch path (CDCEngine.run)."""
+
+
 class CDCEngine:
     def __init__(
         self,
@@ -109,6 +124,10 @@ class CDCEngine:
         self.after_set_col = after_set_col
         self._table: LakeTable | None = None
         self._nb_checked = False
+        # loop-carried checkpoint: the last state apply_epoch returned.
+        # With checkpoint_interval > 1 a heartbeat-advanced stream_pos
+        # lives only here between persisted checkpoints (see resume)
+        self._carried: dict | None = None
 
     # ------------------------------------------------------------- target table
     @property
@@ -306,6 +325,11 @@ class CDCEngine:
         )
         return pred if tables is None else pred & tables
 
+    def _prefilter_key(self) -> tuple:
+        """The inputs of ``_prefilter_predicate``: engines with equal
+        keys build equal predicates."""
+        return (tuple(self.key_cols), self.include_regex, self.exclude_regex, self.exclude_system)
+
     def _prefilter(self, events: DataFrame) -> DataFrame:
         ev = events.filter(self._prefilter_predicate())
         return drop_envelope_fields(ev, self.field_blacklist)
@@ -361,7 +385,7 @@ class CDCEngine:
             # DDL provisioning) already applied the changelog: the
             # stream will redeliver those offsets, possibly batched with
             # newer files, and the out-of-order guard must absorb that
-            # overlap instead of raising (orchestrator.apply_batch)
+            # overlap instead of raising (apply_micro_batch)
             "oob_replay_until": ckpt.get("oob_replay_until", -1),
         }
 
@@ -424,6 +448,68 @@ class CDCEngine:
         pred = self._prefilter_predicate()
         return pred if guard is None else pred & guard
 
+    def resume(self) -> dict:
+        """The checkpoint the next stream epoch starts from: the carried
+        one (it may be AHEAD of the persisted file), folded forward by
+        ``_reconcile`` when the table advanced elsewhere — but if another
+        driver moved the PERSISTED position further (heartbeat epochs
+        inflate the carried epoch without table commits, so _reconcile
+        cannot fold past them), disk wins. Raises SnapshotPhaseError
+        before bootstrap()."""
+        ckpt = self._reconcile(self._carried or self.store.latest())
+        if self._carried is not None:
+            disk = self._reconcile(self.store.latest())
+            if int(disk.get("stream_pos", -1)) > int(ckpt.get("stream_pos", -1)):
+                ckpt = disk
+        if ckpt["phase"] == "snapshot":
+            raise SnapshotPhaseError(f"{self.table_path}: bootstrap() must run before streaming")
+        return ckpt
+
+    def apply_micro_batch(self, batch: DataFrame, stats_rows: list, top: int, ckpt: dict) -> dict:
+        """Apply one streamed micro-batch from its grouped stats collect.
+
+        ``stats_rows``: this table's rows of a ``batch_stats_rows(...,
+        keep=keep_predicate(ckpt))`` collect over the raw batch — per
+        bucket the raw offset bounds and the merge stats of the kept
+        rows; none when the batch holds no row of this table. ``top``:
+        the whole batch's highest raw offset (-1 when empty). ``ckpt``:
+        from ``resume()``.
+
+        A batch whose offsets span the checkpointed stream_pos means the
+        file source delivered out of offset order (raise); a whole-batch
+        redelivery sits at-or-below it and the replay guard absorbs it.
+        A span over a position an OUT-OF-BAND catch-up reached
+        (``oob_replay_until``) is the stream redelivering covered files
+        together with new ones — absorbed by the marks; the window
+        closes once the batch lies wholly past the stamp. Known bounded
+        blind spot: while stream_pos still equals the stamp, never-seen
+        offsets below it would be absorbed silently.
+
+        An idle table's epoch is a K5 heartbeat to ``top``: no table
+        commit, no Spark job. A table that has never streamed never
+        moves its stream_pos off -1 while idle — it is owed a
+        full-history replay, which a heartbeat past -1 would skip — so
+        it runs no epoch at all unless ``top`` is -1 too (an empty
+        stream batch heartbeats in place)."""
+        last = int(ckpt.get("stream_pos", -1))
+        stamp = int(ckpt.get("oob_replay_until", -1))
+        if stats_rows:
+            lo = min(int(r["raw_lo"]) for r in stats_rows)
+            hi = max(int(r["raw_hi"]) for r in stats_rows)
+            if lo <= last < hi and last > stamp:
+                raise OutOfOrderDeliveryError(
+                    f"{self.table_path}: batch spans checkpointed stream_pos={last}: "
+                    f"offsets [{lo}, {hi}]"
+                )
+            if stamp >= 0 and lo > stamp:
+                ckpt = {**ckpt, "oob_replay_until": -1}
+        elif last < 0 <= top:
+            return ckpt
+        return self.apply_epoch(
+            batch, stream_pos=max(top, last), ckpt=ckpt,
+            stats_rows=[r for r in stats_rows if r["n"] > 0],
+        )
+
     def slice_stats(self, events: DataFrame, ckpt: dict) -> list:
         """Collect the merge's per-bucket batch stats for a slice WITHOUT
         unwrapping the envelope (row-identical: the unwrap is a pure
@@ -431,10 +517,10 @@ class CDCEngine:
         concurrently with the current epoch's write — sound because
         forward slices are offset-disjoint, so the replay guard drops
         nothing under either epoch's marks."""
-        from debezium_incubator_spark.operators.merge import batch_stats_rows
+        from debezium_incubator_spark.operators.merge import batch_stats_rows, key_bytes
 
         pre = self._guarded_pre(events, ckpt)
-        return batch_stats_rows(pre, self.key_cols, "offset")
+        return batch_stats_rows(pre, key_bytes(self.key_cols), "offset")
 
     def apply_epoch(
         self,
@@ -449,15 +535,16 @@ class CDCEngine:
         stats_rows: list | None = None,
     ) -> dict:
         """Apply one micro-batch exactly once; returns the new checkpoint
-        state (persisted per the K2 flush policy; pass it back via
-        ``ckpt`` when driving a loop so heartbeat positions survive
-        between persisted checkpoints)."""
+        state, persisted per the K2 flush policy and carried by the
+        engine (``resume``) so heartbeat positions survive between
+        persisted checkpoints."""
         if ckpt is None:
             ckpt = self._reconcile(self.store.latest())
         target_epoch = ckpt["epoch"] + 1
         if self.table.summary().get("epoch", -1) >= target_epoch:
             # already committed (crash between commit and checkpoint)
-            return self._reconcile(ckpt)
+            self._carried = self._reconcile(ckpt)
+            return self._carried
 
         renames = ckpt.get("renames", [])
         if is_snapshot:
@@ -527,6 +614,7 @@ class CDCEngine:
         new_ckpt = self._advance(ckpt, summary, version)
         if force_checkpoint or new_ckpt["epoch"] % self.checkpoint_interval == 0:
             self.store.save(new_ckpt)
+        self._carried = new_ckpt
         return new_ckpt
 
     def run(
@@ -534,7 +622,6 @@ class CDCEngine:
         changelog,
         offsets_per_epoch: int = 400_000,
         max_epochs: int | None = None,
-        prefetch_stats: bool = True,
     ):
         """Stream loop: slice the changelog into offset ranges (D5 batch
         sizing ≙ max.batch.size drain, BlockingEventQueue.java:44-59) and
@@ -543,23 +630,21 @@ class CDCEngine:
         Each epoch costs two serial Spark actions — the per-bucket stats
         collect and the CoW write — whose constant driver share (plan +
         codegen + submit, ~2.5 s/epoch measured) caps N→4N scaling at
-        small epochs (BENCH.md). With ``prefetch_stats`` the NEXT
-        slice's stats job runs on a background thread concurrently with
-        the current epoch's write, hiding one of the two actions: sound
-        because forward slices are offset-disjoint, so the replay guard
-        passes every row under either epoch's marks (the prefetched
-        stats are row-identical to what the merge would collect). The
-        first epoch after a restart never uses a prefetch (its slice may
-        genuinely overlap the marks)."""
+        small epochs (BENCH.md). The NEXT slice's stats job runs on a
+        background thread concurrently with the current epoch's write,
+        hiding one of the two actions: sound because forward slices are
+        offset-disjoint, so the replay guard passes every row under
+        either epoch's marks (the prefetched stats are row-identical to
+        what the merge would collect). The first epoch after a restart
+        never uses a prefetch (its slice may genuinely overlap the
+        marks). Starts from ``resume()``."""
         from concurrent.futures import ThreadPoolExecutor
 
         top = changelog.max_offset(self.spark)
         applied = []
         n = 0
-        ckpt = self._reconcile(self.store.latest())
-        if ckpt["phase"] == "snapshot":
-            raise RuntimeError("bootstrap() must run before streaming")
-        pool = ThreadPoolExecutor(max_workers=1) if prefetch_stats else None
+        ckpt = self.resume()
+        pool = ThreadPoolExecutor(max_workers=1)
         pending = None  # (end_exclusive_start, end, Future[stats_rows])
         try:
             while True:
@@ -577,7 +662,7 @@ class CDCEngine:
                     else:
                         fut.result()  # settle; slice moved (shouldn't happen)
                 will_continue = end < top and (max_epochs is None or n + 1 < max_epochs)
-                if pool is not None and will_continue:
+                if will_continue:
                     nxt_end = min(end + offsets_per_epoch, top)
                     nxt = changelog.range(self.spark, end, nxt_end)
                     ck_for_guard = ckpt
@@ -601,8 +686,7 @@ class CDCEngine:
             # out (bounded: a stats collect is one small aggregate).
             if pending is not None:
                 pending[2].cancel()
-            if pool is not None:
-                pool.shutdown(wait=True, cancel_futures=True)
+            pool.shutdown(wait=True, cancel_futures=True)
         if applied and self.store.latest()["epoch"] < ckpt["epoch"]:
             self.store.save(ckpt)  # final flush (periodic policy tail)
         return applied
@@ -650,6 +734,7 @@ class CDCEngine:
                     warnings.warn(f"DROP TABLE {r.get('table')}: no table at {self.table_path}")
                     continue
                 self._table = None
+                self._carried = None
                 # the checkpoint dies with the table: a later CREATE
                 # TABLE (provision_from_ddl) in this or a later batch
                 # must start from INITIAL, not inherit phase=stream and

@@ -21,19 +21,20 @@ from pyspark.sql import SparkSession
 
 from debezium_incubator_spark.operators import merge
 from debezium_incubator_spark.operators.envelope import changelog_schema
-from debezium_incubator_spark.plans.pipeline import CDCEngine
-
-
-class OutOfOrderDeliveryError(RuntimeError):
-    """A micro-batch mixed never-applied offsets at-or-below the
-    checkpointed stream position with new ones: the file source delivered
-    changelog files out of offset order. Applying it would let the D1
-    high-water-mark filter silently DROP the low offsets (they look like
-    replays) — data loss, not duplicate absorption. Re-deliver in order
-    or drive the offset-sliced batch path (CDCEngine.run)."""
+from debezium_incubator_spark.plans.pipeline import (  # noqa: F401 — re-exported
+    CDCEngine,
+    OutOfOrderDeliveryError,
+)
 
 
 class StreamingCDC:
+    """One table fed by a file-source stream. Each micro-batch resumes
+    the engine's checkpoint (``CDCEngine.resume``: the carried one, disk
+    when another driver moved further, never before bootstrap), runs ONE
+    grouped stats collect over the raw batch, and hands its rows to
+    ``CDCEngine.apply_micro_batch`` — the same per-table step the
+    multi-table orchestrator uses."""
+
     def __init__(
         self,
         engine: CDCEngine,
@@ -47,63 +48,21 @@ class StreamingCDC:
         self.stream_checkpoint_dir = stream_checkpoint_dir
         self.max_files_per_trigger = max_files_per_trigger
         self.schema = changelog_schema(payload_fields)
-        # loop-carried checkpoint across triggers: with
-        # checkpoint_interval > 1 a heartbeat-advanced stream_pos lives
-        # only in memory between persisted checkpoints — re-reading
-        # store.latest() every micro-batch would regress it (same carry
-        # the batch loop and the multi-table orchestrator do)
-        self._ckpt: dict | None = None
 
     def _apply_batch(self, batch_df, epoch_id: int) -> None:
-        # RECONCILED position: after a crash between commit and
-        # checkpoint the manifest chain is ahead of the checkpoint file —
-        # reading store.latest() raw would regress stream_pos on the next
-        # heartbeat/batch and re-scan an already-applied range. The
-        # carried ckpt (which may be AHEAD of the persisted file) wins;
-        # _reconcile folds it forward if the table advanced elsewhere.
         eng = self.engine
-        ckpt = eng._reconcile(self._ckpt or eng.store.latest())
-        if self._ckpt is not None:
-            # heartbeat epochs inflate the carried epoch WITHOUT table
-            # commits, so _reconcile cannot fold past them — if another
-            # driver moved the PERSISTED position further, disk wins
-            disk = eng._reconcile(eng.store.latest())
-            if int(disk.get("stream_pos", -1)) > int(ckpt.get("stream_pos", -1)):
-                ckpt = disk
-        last = int(ckpt.get("stream_pos", -1))
-        # ONE stats action per micro-batch: a grouped collect over the
-        # raw batch returns, per non-empty bucket, the raw offset bounds
-        # (out-of-order check, stream_pos — over the UNFILTERED batch)
-        # AND the merge's stats restricted to the rows the prefilter and
-        # replay guard keep, which apply_epoch takes as prefetched stats
-        # instead of scanning the batch again
+        ckpt = eng.resume()
+        # ONE stats action per micro-batch: per non-empty bucket the raw
+        # offset bounds (out-of-order check, stream_pos — over the
+        # UNFILTERED batch) AND the merge's stats restricted to the rows
+        # the prefilter and replay guard keep, which apply_epoch takes as
+        # prefetched stats instead of scanning the batch again
         rows = merge.batch_stats_rows(
-            eng.table.with_bucket(batch_df), eng.key_cols, "offset",
+            eng.table.with_bucket(batch_df), merge.key_bytes(eng.key_cols), "offset",
             keep=eng.keep_predicate(ckpt),
         )
-        pos = last
-        if rows:
-            lo = min(int(r["raw_lo"]) for r in rows)
-            top = max(int(r["raw_hi"]) for r in rows)
-            if lo <= last < top:
-                # mixed batch: offsets at-or-below the checkpointed
-                # position arriving TOGETHER with new ones. A whole-batch
-                # redelivery after restart has top <= last (absorbed
-                # below); a mix means the file source's delivery order is
-                # not offset order.
-                raise OutOfOrderDeliveryError(
-                    f"batch spans checkpointed stream_pos={last}: offsets [{lo}, {top}]"
-                )
-            # top <= last → byte-identical redelivery: the replay guard
-            # kept no row, so apply_epoch commits nothing; top > last →
-            # forward progress, even when every row was prefiltered out
-            pos = max(top, last)
-        # an empty batch is a K5 heartbeat, as in the batch loop: the
-        # epoch/checkpoint still advances (no table commit)
-        self._ckpt = eng.apply_epoch(
-            batch_df, stream_pos=pos, ckpt=ckpt,
-            stats_rows=[r for r in rows if r["n"] > 0],
-        )
+        top = max((int(r["raw_hi"]) for r in rows), default=-1)
+        eng.apply_micro_batch(batch_df, rows, top, ckpt)
 
     def start(
         self,

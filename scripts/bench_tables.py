@@ -1,12 +1,13 @@
-"""Table-count scaling probe (VERDICT r4 #6): sec/trigger of the
-orchestrator's apply_batch as the registered-table count grows while the
-EVENT stream stays fixed (4 active tables) — the extra tables are
-mostly-idle heartbeaters, the steady state of a 50+-table agent where a
-trigger's rows touch a handful of hot tables.
+"""Table-count scaling probe (VERDICT r4 #6): sec/trigger and Spark
+jobs/trigger of the orchestrator's apply_batch as the registered-table
+count grows while the EVENT stream stays fixed (4 active tables) — the
+extra tables are mostly-idle heartbeaters, the steady state of a
+50+-table agent where a trigger's rows touch a handful of hot tables.
 
 Usage: python scripts/bench_tables.py [table_counts ...]   (default 4 16 64)
 Prints one JSON line: {"probe": "table_count", "rows": [{tables, sec,
-triggers, sec_per_trigger}, ...]}
+triggers, sec_per_trigger, jobs_per_trigger}, ...]}. Jobs are counted
+from the Spark status tracker's job ids before and after the triggers.
 """
 
 from __future__ import annotations
@@ -22,15 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 
-def probe(
-    spark, n_tables: int, work_root: str, triggers: int = 4, legacy: bool = False
-) -> dict:
-    """``legacy=True`` re-enables the pre-fix per-idle-table Spark jobs
-    (heartbeat stats recomputed instead of trusting the orchestrator's
-    stats pass) so the A/B runs ADJACENT in one JVM session — the box's
-    run-to-run swing (BENCH.md) drowns cross-process comparisons."""
-    import debezium_incubator_spark.plans.pipeline as _pl
-
+def probe(spark, n_tables: int, work_root: str, triggers: int = 4) -> dict:
     from debezium_incubator_spark.plans.orchestrator import MultiTableCDC
     from debezium_incubator_spark.sources.generator import (
         gen_changelog,
@@ -51,35 +44,25 @@ def probe(
         orch.create_table(f"files_{i:02d}")
     orch.bootstrap(src)
 
-    orig = _pl.CDCEngine.apply_epoch
-    if legacy:
-        def patched(self, events, **kw):
-            if kw.get("stats_rows") == []:
-                kw["stats_rows"] = None  # force the empty stats job + audit
-            return orig(self, events, **kw)
-
-        _pl.CDCEngine.apply_epoch = patched
-    try:
-        t0 = time.time()
-        lo = -1
-        for k in range(triggers):
-            cut = top if k == triggers - 1 else (top * (k + 1)) // triggers
-            orch.apply_batch(
-                log.filter((F.col("offset") > lo) & (F.col("offset") <= cut))
-            )
-            lo = cut
-        wall = time.time() - t0
-    finally:
-        _pl.CDCEngine.apply_epoch = orig
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup(None))
+    t0 = time.time()
+    lo = -1
+    for k in range(triggers):
+        cut = top if k == triggers - 1 else (top * (k + 1)) // triggers
+        orch.apply_batch(log.filter((F.col("offset") > lo) & (F.col("offset") <= cut)))
+        lo = cut
+    wall = time.time() - t0
+    jobs = len(set(tracker.getJobIdsForGroup(None)) - jobs_before)
     src.unpersist()
     log.unpersist()
     shutil.rmtree(root, ignore_errors=True)
     return {
         "tables": n_tables,
-        "mode": "legacy" if legacy else "fast",
         "sec": round(wall, 3),
         "triggers": triggers,
         "sec_per_trigger": round(wall / triggers, 3),
+        "jobs_per_trigger": round(jobs / triggers, 2),
     }
 
 
@@ -96,15 +79,9 @@ def main():
         extra_conf={"spark.local.dir": local_dir},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    # warmup run amortizes session codegen so neither mode eats it
+    # warmup run amortizes session codegen
     probe(spark, counts[0], work_root, triggers=2)
-    rows = []
-    for n in counts:
-        # adjacent pair per count: FAST first — any warm-cache benefit of
-        # running second then accrues to LEGACY, so a fast win is a
-        # conservative lower bound
-        rows.append(probe(spark, n, work_root, legacy=False))
-        rows.append(probe(spark, n, work_root, legacy=True))
+    rows = [probe(spark, n, work_root) for n in counts]
     print(json.dumps({"probe": "table_count", "rows": rows}))
 
 

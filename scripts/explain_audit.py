@@ -7,6 +7,9 @@ paths and assert the plan properties the 100 TB design depends on:
   the target side) as a bare key projection, and its write evaluates the
   unwrap UDF exactly once;
 * the LWW hash aggregate runs as partial + final (map-side combine);
+* the orchestrator's per-trigger stats collect over 16 tables is one
+  partial/final hash aggregate, JVM-only, with every generated method
+  under the huge-method limit;
 * expressions stay inside WholeStageCodegen spans.
 
 Writes PLANS.md with the annotated plans. Exits nonzero if an assertion
@@ -311,6 +314,60 @@ def main():
              r"HashAggregate(?:(.|\n))*Exchange(?:(.|\n))*HashAggregate"),
         ],
     ))
+
+    # 11. the orchestrator's ONE stats collect per trigger: 16 tables,
+    # each resuming with its own replay-guard marks, so the guard CASE
+    # has a branch per table. The CASE columns feed one partial/final
+    # hash aggregate — JVM-only, inside WholeStageCodegen, and every
+    # generated method under the huge-method limit (past it Spark
+    # silently drops the stage out of codegen at run time)
+    from debezium_incubator_spark.operators import merge
+    from debezium_incubator_spark.plans.orchestrator import MultiTableCDC
+
+    orch = MultiTableCDC(spark, f"{base}/orch", num_buckets=8)
+    ckpts = {}
+    for i in range(16):
+        name = f"files_{i:02d}"
+        ckpts[name] = dict(
+            orch.create_table(name).store.latest(),
+            phase="stream",
+            max_offsets={str(b): 100 * i + b for b in range(8)},
+        )
+    frames = []
+    real = merge.batch_stats_rows
+    merge.batch_stats_rows = lambda *a, **k: frames.append(merge.batch_stats_frame(*a, **k)) or []
+    try:
+        orch._batch_stats(cl.range(spark, -1, 10**9), ckpts, "source.table")
+    finally:
+        merge.batch_stats_rows = real
+    # planned without AQE so the plan carries its codegen stages
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        stats_df = frames[0].select("*")
+        p11 = plan_of(stats_df)
+        stages = stats_df._jdf.queryExecution().debug().codegenToSeq()
+        sizes = [int(stages.apply(i)._3().maxMethodCodeSize()) for i in range(stages.size())]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sections.append((
+        "Orchestrator stats collect (16 tables, one grouped aggregate)",
+        p11,
+        [
+            ("per-table CASE projection inside WholeStageCodegen", r"\* Project"),
+            ("partial-then-final hash aggregate, both codegen'd",
+             r"\* HashAggregate(.|\n)*Exchange(.|\n)*\* HashAggregate"),
+            ("no Python UDF", r"^(?:(?!ArrowEvalPython|BatchEvalPython|PythonUDF)(.|\n))*$"),
+        ],
+    ))
+    n_agg = len(set(re.findall(r"\((\d+)\) HashAggregate", p11)))
+    n_exch = len(set(re.findall(r"\((\d+)\) Exchange", p11)))
+    if (n_agg, n_exch) != (2, 1):
+        failures.append(f"orchestrator stats plan: {n_agg} HashAggregate, {n_exch} Exchange (expected 2, 1)")
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    print(f"orchestrator stats codegen: max method bytes per stage {sizes}, limit {limit}")
+    if not sizes or max(sizes) > limit:
+        failures.append(f"orchestrator stats codegen: method sizes {sizes} vs limit {limit}")
 
     out = ["# PLANS — physical-plan audit (generated by scripts/explain_audit.py)\n"]
     for title, plan, checks in sections:

@@ -83,6 +83,23 @@ def test_streaming_empty_batch_heartbeats(spark, tmp_path):
     assert e.table.version() == v0  # no table commit
 
 
+def test_streaming_before_bootstrap_raises(spark, tmp_path):
+    """Streaming into a never-bootstrapped table raises (as run() and the
+    orchestrator do) instead of flipping it to phase 'stream' — which
+    made a later INITIAL bootstrap() skip the snapshot base for good."""
+    src = gen_source_table(spark, n_keys=30, n_repos=3)
+    log = gen_changelog(spark, n_keys=30, n_repos=3, n_slots=20)
+    e = _engine(spark, tmp_path, "noboot")
+    s = StreamingCDC(e, str(tmp_path / "nolog0"), str(tmp_path / "sck0"))
+    with pytest.raises(RuntimeError, match="bootstrap"):
+        s._apply_batch(log, 0)
+    assert e.store.latest()["phase"] == "snapshot"
+    e.bootstrap(src)
+    assert e.final_state().count() == 30  # the snapshot base applied
+    s._apply_batch(log, 1)
+    assert e.store.latest()["counters"]["events_in"] == 30 + log.count()
+
+
 def test_streaming_out_of_order_batch_raises(spark, tmp_path):
     """ADVICE r1: a batch mixing never-applied offsets at-or-below the
     checkpointed stream position with new ones means file order != offset
