@@ -16,6 +16,8 @@
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -42,14 +44,36 @@ def unprocessed_predicate(
     marks = F.create_map(
         *[x for b, o in max_offsets.items() for x in (F.lit(int(b)), F.lit(int(o)).cast("long"))]
     )
-    hwm = F.try_element_at(marks, F.col(bucket_col))
-    keep = hwm.isNull() | (F.col(offset_col) > hwm)
+    keep = _above_mark(F.try_element_at(marks, F.col(bucket_col)), offset_col)
     if num_buckets is not None and len(max_offsets) == num_buckets:
         # safe only when marks cover all buckets (an unmarked bucket must
         # pass every offset through)
         global_min = min(int(v) for v in max_offsets.values())
         keep = (F.col(offset_col) > F.lit(global_min)) & keep
     return keep
+
+
+def unprocessed_by_table_predicate(
+    marks_by_table: dict[str, dict[str, int]],
+    table: Column,
+    bucket_col: str = "_bucket",
+    offset_col: str = "offset",
+) -> Column:
+    """D1 for a batch that mixes tables, as ONE Column: each row against
+    its own table's per-bucket marks (``marks_by_table``: table →
+    checkpoint ``max_offsets``). The marks ride as one JSON string
+    literal that the optimizer folds into a ``map<table, map<bucket,
+    mark>>`` constant, so building the Column costs the same few driver
+    round trips to the JVM whatever the table count. A row whose table
+    or bucket has no mark passes through."""
+    marks = F.from_json(F.lit(json.dumps(marks_by_table)), "map<string,map<string,bigint>>")
+    hwm = F.try_element_at(F.try_element_at(marks, table), F.col(bucket_col).cast("string"))
+    return _above_mark(hwm, offset_col)
+
+
+def _above_mark(hwm: Column, offset_col: str) -> Column:
+    # a NULL mark (unmarked bucket) passes every offset through
+    return hwm.isNull() | (F.col(offset_col) > hwm)
 
 
 def filter_processed(

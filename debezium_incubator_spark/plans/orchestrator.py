@@ -35,8 +35,12 @@ from pyspark.sql import functions as F
 from debezium_incubator_spark.lake.checkpoint import _atomic_write
 from debezium_incubator_spark.lake.table import BUCKET_COL, LakeTable, bucket_expr
 from debezium_incubator_spark.operators import merge
-from debezium_incubator_spark.operators.dedup import unprocessed_predicate
-from debezium_incubator_spark.plans.pipeline import CDCEngine, SnapshotPhaseError
+from debezium_incubator_spark.operators.dedup import unprocessed_by_table_predicate
+from debezium_incubator_spark.plans.pipeline import (
+    CDCEngine,
+    SnapshotPhaseError,
+    prefilter_predicate,
+)
 from debezium_incubator_spark.streaming.stream import StreamingCDC
 
 
@@ -400,54 +404,43 @@ class MultiTableCDC:
         replay guard keep — row-exact whatever each table's bucket count,
         filters or key columns.
 
-        The bucket, prefilter, replay-guard and key-length columns are
-        each one CASE on the table field. Tables whose expression has
-        the same inputs share one branch, built once: building a Column
-        costs driver round trips to the JVM, and a trigger must not pay
-        them for every idle table. The CASE thus grows with the number
-        of distinct inputs — one guard branch per table with its own
-        marks. The largest group takes the ELSE branch; rows of
-        unregistered tables get it too, and form groups no engine reads
-        (they still count toward the batch top)."""
+        Building a Column costs driver round trips to the JVM, so no
+        column is built per table. The replay guard looks each row's
+        (table, bucket) mark up in one literal map. The bucket, prefilter
+        and key-length columns are each one CASE on the table field with
+        a branch per distinct configuration, built once; the most common
+        configuration takes the ELSE branch. Rows of unregistered tables
+        get it too, and form groups no engine reads (they still count
+        toward the batch top)."""
         t = F.col(table_field)
         engines = {name: self.engines[name] for name in ckpts}
 
-        def per_table(key_of, expr_of, default):
-            groups: dict[Any, list[str]] = {}
+        def per_config(config_of, expr_of, default):
+            groups: dict[tuple, list[str]] = {}
             for name, eng in engines.items():
-                groups.setdefault(key_of(name, eng), []).append(name)
+                groups.setdefault(config_of(eng), []).append(name)
             if not groups:
                 return default
-            by_size = sorted(groups.items(), key=lambda kv: -len(kv[1]))
-            c = None
-            for key, names in by_size[1:]:
-                c = (F if c is None else c).when(t.isin(names), expr_of(key, engines[names[0]]))
-            key, names = by_size[0]
-            common = expr_of(key, engines[names[0]])
-            return common if c is None else c.otherwise(common)
+            (common, _), *rest = sorted(groups.items(), key=lambda kv: -len(kv[1]))
+            c = F
+            for config, names in rest:
+                c = c.when(t.isin(names), expr_of(*config))
+            return expr_of(*common) if c is F else c.otherwise(expr_of(*common))
 
-        def bucket_key(name, eng):
-            m = eng.table.manifest()
-            return tuple(m["bucket_cols"]), m["num_buckets"]
+        def bucketing(eng):
+            return tuple(eng.table.manifest()["bucket_cols"]), eng._checked_num_buckets()
 
-        def marks_key(name, eng):
-            marks = ckpts[name].get("max_offsets", {})
-            return tuple(sorted(marks.items())), eng._checked_num_buckets()
-
-        def guard(key, eng):
-            g = unprocessed_predicate(dict(key[0]), num_buckets=key[1])
-            return F.lit(True) if g is None else g
-
-        b = batch.withColumn(
-            BUCKET_COL, per_table(bucket_key, lambda k, e: bucket_expr(*k), F.lit(0))
+        marks = {n: ck["max_offsets"] for n, ck in ckpts.items() if ck.get("max_offsets")}
+        keep = per_config(lambda e: e._prefilter_args(), prefilter_predicate, F.lit(False))
+        if marks:
+            keep = keep & unprocessed_by_table_predicate(marks, t)
+        b = (
+            batch.withColumn(BUCKET_COL, per_config(bucketing, bucket_expr, F.lit(0)))
+            .withColumn("__keep", keep)
+            .withColumn(
+                "__klen", per_config(lambda e: (tuple(e.key_cols),), merge.key_bytes, F.lit(0))
+            )
         )
-        keep = per_table(
-            lambda n, e: e._prefilter_key(), lambda k, e: e._prefilter_predicate(), F.lit(False)
-        ) & per_table(marks_key, guard, F.lit(True))
-        key_len = per_table(
-            lambda n, e: tuple(e.key_cols), lambda k, e: merge.key_bytes(k), F.lit(0)
-        )
-        b = b.withColumn("__keep", keep).withColumn("__klen", key_len)
         return merge.batch_stats_rows(
             b, F.col("__klen"), "offset", keep=F.col("__keep"), by=(t.alias("__t"),)
         )
@@ -761,9 +754,12 @@ class StreamingMultiTableCDC(StreamingCDC):
         for name in sorted(pending):
             eng = self.orch.engines.get(name)
             if eng is not None:
-                ck = eng._reconcile(eng.store.latest())
+                try:
+                    ck = eng.resume()
+                except SnapshotPhaseError:
+                    continue  # not bootstrapped yet: stays pending
                 pos = int(ck.get("stream_pos", -1))
-                if ck.get("phase") == "stream" and pos < 0:
+                if pos < 0:
                     eng.run(
                         TableSlice(log, name),
                         offsets_per_epoch=self.catchup_offsets_per_epoch,

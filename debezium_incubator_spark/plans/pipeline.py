@@ -57,6 +57,21 @@ class OutOfOrderDeliveryError(RuntimeError):
     or drive the offset-sliced batch path (CDCEngine.run)."""
 
 
+def prefilter_predicate(key_cols, include_regex, exclude_regex, exclude_system):
+    """The rows an engine applies: the corrupt-event guard — a mutation
+    without a full primary key is undeliverable (≙ the reference skipping
+    unsupported/unparseable mutations with a warning + error counter,
+    CommitLogReadHandlerImpl.java:76-136) — then the T7 table filter."""
+    pred = functools.reduce(operator.and_, [F.col(k).isNotNull() for k in key_cols])
+    tables = table_predicate(
+        include_regex=include_regex,
+        exclude_regex=exclude_regex,
+        table_col=key_cols[0],
+        exclude_system=exclude_system,
+    )
+    return pred if tables is None else pred & tables
+
+
 class CDCEngine:
     def __init__(
         self,
@@ -311,27 +326,12 @@ class CDCEngine:
         )
         return int(mismatches)
 
-    def _prefilter_predicate(self):
-        # corrupt-event guard: a mutation without a full primary key is
-        # undeliverable (≙ the reference skipping unsupported/unparseable
-        # mutations with a warning + error counter,
-        # CommitLogReadHandlerImpl.java:76-136) — then the T7 table filter
-        pred = functools.reduce(operator.and_, [F.col(k).isNotNull() for k in self.key_cols])
-        tables = table_predicate(
-            include_regex=self.include_regex,
-            exclude_regex=self.exclude_regex,
-            table_col=self.key_cols[0],
-            exclude_system=self.exclude_system,
-        )
-        return pred if tables is None else pred & tables
-
-    def _prefilter_key(self) -> tuple:
-        """The inputs of ``_prefilter_predicate``: engines with equal
-        keys build equal predicates."""
+    def _prefilter_args(self) -> tuple:
+        """The arguments of this engine's ``prefilter_predicate``."""
         return (tuple(self.key_cols), self.include_regex, self.exclude_regex, self.exclude_system)
 
     def _prefilter(self, events: DataFrame) -> DataFrame:
-        ev = events.filter(self._prefilter_predicate())
+        ev = events.filter(prefilter_predicate(*self._prefilter_args()))
         return drop_envelope_fields(ev, self.field_blacklist)
 
     # ------------------------------------------------------------- epochs
@@ -445,7 +445,7 @@ class CDCEngine:
         guard = unprocessed_predicate(
             ckpt.get("max_offsets", {}), num_buckets=self._checked_num_buckets()
         )
-        pred = self._prefilter_predicate()
+        pred = prefilter_predicate(*self._prefilter_args())
         return pred if guard is None else pred & guard
 
     def resume(self) -> dict:

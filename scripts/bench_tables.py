@@ -3,6 +3,9 @@ jobs/trigger of the orchestrator's apply_batch as the registered-table
 count grows while the EVENT stream stays fixed (4 active tables) — the
 extra tables are mostly-idle heartbeaters, the steady state of a
 50+-table agent where a trigger's rows touch a handful of hot tables.
+One untimed trigger first routes an early slice of the log to EVERY
+table, so each idle table carries its own replay-guard marks, as a
+table that streamed before does.
 
 Usage: python scripts/bench_tables.py [table_counts ...]   (default 4 16 64)
 Prints one JSON line: {"probe": "table_count", "rows": [{tables, sec,
@@ -45,11 +48,19 @@ def probe(spark, n_tables: int, work_root: str, triggers: int = 4) -> dict:
     orch.bootstrap(src)
 
     tracker = spark.sparkContext.statusTracker()
+    prime = top // (triggers + 1)
+    route = F.format_string("files_%02d", F.pmod(F.xxhash64("offset"), F.lit(n_tables)))
+    orch.apply_batch(
+        log.filter(F.col("offset") <= prime).withColumn(
+            "source", F.col("source").withField("table", route)
+        )
+    )
+
     jobs_before = set(tracker.getJobIdsForGroup(None))
     t0 = time.time()
-    lo = -1
+    lo = prime
     for k in range(triggers):
-        cut = top if k == triggers - 1 else (top * (k + 1)) // triggers
+        cut = top if k == triggers - 1 else prime + ((top - prime) * (k + 1)) // triggers
         orch.apply_batch(log.filter((F.col("offset") > lo) & (F.col("offset") <= cut)))
         lo = cut
     wall = time.time() - t0

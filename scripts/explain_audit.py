@@ -316,8 +316,8 @@ def main():
     ))
 
     # 11. the orchestrator's ONE stats collect per trigger: 16 tables,
-    # each resuming with its own replay-guard marks, so the guard CASE
-    # has a branch per table. The CASE columns feed one partial/final
+    # each resuming with its own replay-guard marks, all looked up in
+    # one literal map. The per-table columns feed one partial/final
     # hash aggregate — JVM-only, inside WholeStageCodegen, and every
     # generated method under the huge-method limit (past it Spark
     # silently drops the stage out of codegen at run time)
@@ -354,7 +354,9 @@ def main():
         "Orchestrator stats collect (16 tables, one grouped aggregate)",
         p11,
         [
-            ("per-table CASE projection inside WholeStageCodegen", r"\* Project"),
+            ("per-table columns projected inside WholeStageCodegen", r"\* Project"),
+            ("replay-guard marks folded into a literal map (no JSON parse per row)",
+             r"^(?:(?!from_json)(.|\n))*$"),
             ("partial-then-final hash aggregate, both codegen'd",
              r"\* HashAggregate(.|\n)*Exchange(.|\n)*\* HashAggregate"),
             ("no Python UDF", r"^(?:(?!ArrowEvalPython|BatchEvalPython|PythonUDF)(.|\n))*$"),

@@ -9,6 +9,7 @@ from debezium_incubator_spark.operators.dedup import (
     filter_processed,
     lww_latest,
     lww_latest_window,
+    unprocessed_by_table_predicate,
 )
 
 
@@ -86,6 +87,41 @@ def test_filter_processed_matches_python_filter(spark, case):
     out = filter_processed(df, {str(b): o for b, o in marks.items()}, num_buckets=nb)
     want = sorted(r for r in rows if r[0] not in marks or r[1] > marks[r[0]])
     assert sorted(tuple(r) for r in out.collect()) == want
+
+
+@st.composite
+def _table_guard_cases(draw):
+    tables = ["a", "b", "it's"]
+    marks = draw(st.dictionaries(
+        st.sampled_from(tables),
+        st.dictionaries(st.integers(0, 3), st.integers(-3, 20), max_size=4),
+        max_size=3,
+    ))
+    rows = draw(st.lists(
+        st.tuples(st.sampled_from([*tables, "unknown"]), st.integers(0, 3), st.integers(-5, 25)),
+        max_size=30,
+    ))
+    return marks, rows
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_table_guard_cases())
+def test_unprocessed_by_table_matches_python_filter(spark, case):
+    """The multi-table guard keeps a row iff its own table's mark for its
+    bucket is absent or below the row's offset."""
+    marks, rows = case
+    df = spark.createDataFrame(rows, "t string, _bucket int, offset long")
+    keep = unprocessed_by_table_predicate(
+        {t: {str(b): o for b, o in m.items()} for t, m in marks.items()}, F.col("t")
+    )
+    got = sorted(tuple(r) for r in df.filter(keep).collect())
+    m = {(t, b): o for t, tm in marks.items() for b, o in tm.items()}
+    want = sorted(r for r in rows if (r[0], r[1]) not in m or r[2] > m[(r[0], r[1])])
+    assert got == want
 
 
 def test_lww_agg_and_window_agree(spark):

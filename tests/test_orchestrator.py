@@ -471,8 +471,13 @@ def test_apply_batch_one_stats_collect(spark, tmp_path, fixtures, monkeypatch):
     for lo, hi in zip(cuts, cuts[1:]):
         jobs = trigger(log.filter((F.col("offset") > lo) & (F.col("offset") <= hi)))
         assert jobs < 13, jobs
+    epochs = {n: e.resume()["epoch"] for n, e in orch.engines.items()}
     idle_jobs = trigger(log.filter(F.col("offset") > top))
     assert idle_jobs <= 3, idle_jobs
+    # an empty batch heartbeats every table in place, as StreamingCDC does
+    assert {n: e.resume()["epoch"] for n, e in orch.engines.items()} == {
+        n: k + 1 for n, k in epochs.items()
+    }
     for name, eng in orch.engines.items():
         ck = eng.store.latest()
         n = log.filter(F.col("source.table") == name).count()
