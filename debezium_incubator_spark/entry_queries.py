@@ -1215,10 +1215,10 @@ def q_ddl_channel_replay(spark, sf):
     a shared two-table changelog; files_00 is registered + bootstrapped
     up front, files_01 arrives as a CREATE TABLE ``.sql`` in the DDL
     control directory and is provisioned BY THE RUNNING STREAM
-    (StreamingMultiTableCDC._poll_ddl): the catch-up replays its history
-    out-of-band, stamps ``oob_replay_until``, and the stream's own
-    redelivery of the covered files is absorbed by the per-table guard
-    (≙ DDL LCRs interleaved with data,
+    (StreamingMultiTableCDC._poll_ddl). It joins like any table: at
+    stream_pos=-1, healed up to the delivered watermark, the rest
+    streamed — so each offset reaches it exactly once, from one source
+    or the other (≙ DDL LCRs interleaved with data,
     OracleSchemaChangeEventEmitter.java:42-63 / OracleConnectorIT.java
     :501-540). The oracle recomputes both tables' final LWW states from
     the same parquet — files_01 WITHOUT snapshot rows (it joined

@@ -63,10 +63,14 @@ class TableSlice:
         return df.filter(F.col(self.table_field) == F.lit(self.table))
 
 
+# offsets per epoch of a heal replay (StreamingMultiTableCDC)
+CATCHUP_OFFSETS_PER_EPOCH = 1_000_000
+
+
 class _CappedChangelog:
-    """A changelog view bounded at a known-delivered watermark: the
-    auto-catch-up for an out-of-band attached table must replay exactly
-    what the stream already consumed (≤ watermark) — offsets beyond it
+    """A changelog view bounded at a known-delivered watermark: the heal
+    of a table that joins the running stream must replay exactly what
+    the stream already consumed (≤ watermark) — offsets beyond it
     arrive from the stream normally."""
 
     def __init__(self, inner, cap: int):
@@ -150,7 +154,10 @@ class MultiTableCDC:
         With ``ddl_action`` the typed schema + PK come from the parsed
         CREATE TABLE; such a table joins mid-stream without a snapshot
         source, so it skips straight to streaming (snapshot_mode=never)
-        and replays the full changelog history into its fresh target."""
+        at stream_pos=-1 and is owed the whole changelog history, like
+        any table that never streamed (``run()`` replays it;
+        ``StreamingMultiTableCDC`` heals it up to the delivered
+        watermark and streams the rest)."""
         if name in self.engines:
             return self.engines[name]
         cfg: dict[str, Any] = dict(overrides)
@@ -208,18 +215,11 @@ class MultiTableCDC:
         self._save_registry(reg)
         return dropped
 
-    def apply_ddl_statements(
-        self, statements: list[str], created_names: list[str] | None = None
-    ) -> int:
+    def apply_ddl_statements(self, statements: list[str]) -> int:
         """Route parsed DDL by its table: CREATE TABLE provisions a new
         engine mid-stream (schema + PK from the parsed columns), DROP
         TABLE deregisters + removes, ALTER goes to the owning engine;
-        DDL for unregistered tables is the warn-and-skip path. When
-        ``created_names`` is passed, the REGISTERED name of every table
-        this batch creates is appended to it (the streaming DDL channel
-        uses this to schedule history catch-ups — resolving names here,
-        where registration happens, avoids a second parse and a stale
-        case-resolution map)."""
+        DDL for unregistered tables is the warn-and-skip path."""
         from debezium_incubator_spark.sources.ddl import (
             parse_ddl_batch,
             schema_from_create_action,
@@ -246,14 +246,7 @@ class MultiTableCDC:
                     # must not abort the rest of the batch
                     warnings.warn(f"CREATE TABLE {tbl} skipped: {e}")
                     continue
-                existed = name in self.engines
                 self.create_table(name, ddl_action=action)
-                # only names actually PROVISIONED are reported: an
-                # idempotent re-CREATE of a live, streaming table must
-                # not re-enter the catch-up pipeline (a spurious oob
-                # stamp there would blind the out-of-order guard)
-                if created_names is not None and not existed:
-                    created_names.append(name)
                 applied += 1
             elif kind == "drop_table":
                 if self.drop_table(name):
@@ -385,10 +378,10 @@ class MultiTableCDC:
             # commit-THEN-checkpoint untouched)
             self._for_each_engine(apply_one)
             # durable stream-delivered watermark: the highest offset any
-            # batch has carried. A table attached out-of-band later is
-            # owed exactly the history ≤ this mark (the file source will
-            # never redeliver it) — the streaming DDL poll uses it to
-            # scope catch-ups (see _heal_out_of_band_tables)
+            # batch has carried. A table that joins later (DDL-created
+            # or attached out-of-band) is owed exactly the history ≤
+            # this mark (the file source will never redeliver it) — see
+            # StreamingMultiTableCDC._heal_out_of_band_tables
             if global_top > self.stream_watermark():
                 _atomic_write(
                     os.path.join(self.root, "_stream_watermark.json"),
@@ -583,10 +576,17 @@ class StreamingMultiTableCDC(StreamingCDC):
     interleaving DDL LCRs with data, OracleSchemaChangeEventEmitter
     .java:42-63, asserted streaming in OracleConnectorIT.java:501-540):
     ``.sql`` files landing there are applied between micro-batches of
-    the SAME running trigger — a CREATE TABLE provisions its table,
-    replays the changelog history already on disk, and joins the stream
-    from the next trigger on; applied files are recorded durably so a
+    the SAME running trigger; applied files are recorded durably so a
     restart does not re-apply them.
+
+    A table joins the stream one way, whether a CREATE TABLE provisioned
+    it or an operator attached it between runs: it starts at
+    stream_pos=-1, and before the next batch the heal replays its
+    history up to the durable delivered watermark. Every later offset
+    reaches it from the stream, wholly above that position (ordered
+    delivery, enforced by ``OutOfOrderDeliveryError``), so nothing
+    overlaps and nothing is absorbed. Before the first batch the
+    watermark is -1 and the stream itself delivers the whole history.
     """
 
     def __init__(
@@ -597,7 +597,6 @@ class StreamingMultiTableCDC(StreamingCDC):
         max_files_per_trigger: int = 8,
         payload_fields: list[tuple[str, str]] | None = None,
         ddl_dir: str | None = None,
-        catchup_offsets_per_epoch: int = 1_000_000,
     ):
         super().__init__(
             engine=None,  # the orchestrator's engines replace the single engine
@@ -610,7 +609,6 @@ class StreamingMultiTableCDC(StreamingCDC):
 
         self.orch = orch
         self.ddl_dir = ddl_dir
-        self.catchup_offsets_per_epoch = catchup_offsets_per_epoch
         # serializes foreachBatch with the idle-time DDL poller (both
         # mutate orchestrator state: engines dict, checkpoints, catch-ups)
         self._gate = threading.Lock()
@@ -619,16 +617,23 @@ class StreamingMultiTableCDC(StreamingCDC):
         self._poller_error_ts: float = 0.0
         self._poller_interval: float = 1.0
 
+    def _join_tables(self) -> None:
+        """Bring the table set up to date between micro-batches: apply
+        any new DDL files, then heal every table owed history. Runs
+        under ``_gate`` on THREE driver threads — the foreachBatch
+        thread (between epochs, never mid-epoch), the pre-start poll in
+        ``start()``, and the idle-time poller — which the lock
+        serializes; anything it touches must stay safe to run while the
+        stream is between (not inside) micro-batches."""
+        if self.ddl_dir:
+            self._poll_ddl()
+        self._heal_out_of_band_tables()
+
     def _poll_ddl(self) -> None:
         """Apply any NEW ``.sql`` files from the control directory, in
-        name order, then catch owed tables up to the changelog already
-        on disk (their subsequent redelivery by the file source is
-        absorbed by the replay guard). Runs under ``_gate`` on THREE
-        driver threads — the foreachBatch thread (between epochs, never
-        mid-epoch), the pre-start poll in ``start()``, and the
-        idle-time poller — which the lock serializes; anything this
-        method touches must stay safe to run while the stream is
-        between (not inside) micro-batches."""
+        name order. A table a CREATE provisions starts at
+        stream_pos=-1, which is durable, so a crash before its heal
+        needs no record of its own."""
         from debezium_incubator_spark.sources.ddl import split_ddl_script
 
         try:
@@ -641,50 +646,14 @@ class StreamingMultiTableCDC(StreamingCDC):
                 done = set(json.load(f))
         except FileNotFoundError:
             done = set()
-        new = [f for f in files if f not in done]
-        pending = self._load_pending_catchup()
-        for fn in new:
+        for fn in (f for f in files if f not in done):
             with open(os.path.join(self.ddl_dir, fn)) as f:
-                stmts = split_ddl_script(f.read())
-            # tables this file CREATES are owed a full-history replay —
-            # recorded DURABLY as the names apply actually REGISTERED
-            # (not an engine-set diff: a DROP + CREATE of the same name
-            # in one file leaves the set unchanged; and not a pre-apply
-            # case-resolution, which goes stale the moment the DROP
-            # lands). A crash between this record and the catch-up
-            # self-heals on restart.
-            made: list[str] = []
-            self.orch.apply_ddl_statements(stmts, created_names=made)
-            pending.update(made)
+                self.orch.apply_ddl_statements(split_ddl_script(f.read()))
             # record per file: a failure in a later file retries ONLY
             # that file next trigger (apply is warn-and-skip per
             # statement, so a recorded file never half-applies silently)
             done.add(fn)
-            self._save_pending_catchup(pending)
             _atomic_write(applied_path, json.dumps(sorted(done)))
-        self._catch_up_pending(pending)
-
-    def _pending_path(self) -> str:
-        return os.path.join(self.orch.root, "_ddl_pending_catchup.json")
-
-    def _load_pending_catchup(self) -> set[str]:
-        try:
-            with open(self._pending_path()) as f:
-                return set(json.load(f))
-        except FileNotFoundError:
-            return set()
-
-    def _save_pending_catchup(self, pending: set[str]) -> None:
-        _atomic_write(self._pending_path(), json.dumps(sorted(pending)))
-
-    def _stamp_oob(self, eng, ck: dict, pos: int) -> None:
-        """Record the out-of-band position in the checkpoint so the
-        stream's redelivery of covered offsets (possibly batched with
-        newer files) is absorbed by apply_micro_batch's guard."""
-        if pos > int(ck.get("oob_replay_until", -1)):
-            ck["oob_replay_until"] = pos
-            eng.store.save(ck)
-            eng._carried = None  # resume re-reads the stamp
 
     def _changelog_view(self, extra_paths: list[str] | None = None):
         from debezium_incubator_spark.sources.changelog import ParquetChangelog
@@ -699,7 +668,7 @@ class StreamingMultiTableCDC(StreamingCDC):
     def _archive_extra_paths(self) -> list[str]:
         """VERDICT r4 #5 — the archived-history HEAL: when maintain()'s
         GC already archived segments (history ≤ ``archived_through`` no
-        longer in the live directory), an out-of-band catch-up reads
+        longer in the live directory), a heal reads
         ``_archive/`` IN PLACE via the changelog view's extra paths —
         no file moves, so the running stream's seen-files log is
         untouched and nothing is redelivered (≙ a CommitLogTransfer
@@ -727,64 +696,31 @@ class StreamingMultiTableCDC(StreamingCDC):
             has_files = False
         if dt >= 0:
             warnings.warn(
-                f"out-of-band catch-up: changelog offsets ≤ {dt} were removed by "
+                f"heal: changelog offsets ≤ {dt} were removed by "
                 f"delete-mode GC — healed tables may be missing that history "
-                f"(use gc mode='archive' to keep catch-ups healable)"
+                f"(use gc mode='archive' to keep history healable)"
             )
         elif at >= 0 and not has_files:
             warnings.warn(
-                f"out-of-band catch-up: changelog offsets ≤ {at} were archived by "
+                f"heal: changelog offsets ≤ {at} were archived by "
                 f"GC but _archive/ holds no segments — healed tables may be "
                 f"missing that history"
             )
         return [archive] if has_files else []
 
-    def _catch_up_pending(self, pending: set[str]) -> None:
-        """EXPLICIT pending — tables a DDL file created mid-stream:
-        replayed through the changelog's current disk top, then stamped
-        with ``oob_replay_until``. A pending name whose engine already
-        progressed is stamped too (a crash between a previous catch-up
-        and its stamp must not leave the stream to wedge on the
-        redelivery span) and cleared — apply only records names it
-        actually PROVISIONED, so a duplicate CREATE for a live table
-        never enters pending and never gets a spurious stamp."""
-        if not pending:
-            return
-        log = self._changelog_view(self._archive_extra_paths())
-        for name in sorted(pending):
-            eng = self.orch.engines.get(name)
-            if eng is not None:
-                try:
-                    ck = eng.resume()
-                except SnapshotPhaseError:
-                    continue  # not bootstrapped yet: stays pending
-                pos = int(ck.get("stream_pos", -1))
-                if pos < 0:
-                    eng.run(
-                        TableSlice(log, name),
-                        offsets_per_epoch=self.catchup_offsets_per_epoch,
-                    )
-                    ck = eng.resume()
-                    pos = int(ck.get("stream_pos", -1))
-                    if pos < 0:
-                        continue  # nothing on disk yet: stays pending
-                self._stamp_oob(eng, ck, pos)
-            pending.discard(name)
-            self._save_pending_catchup(pending)
-
     def _heal_out_of_band_tables(self) -> None:
-        """AUTO-owed — any engine still at stream_pos=-1 once the
-        durable stream watermark shows batches were delivered: a table
-        attached out-of-band (create_table + bootstrap between stream
-        runs) will NEVER see the files the source already consumed, so
-        it is owed exactly the history ≤ watermark (``_CappedChangelog``
-        bounds the replay; offsets beyond arrive from the stream). A
-        mid-drain quiet table (no rows among the delivered files) pays
-        one scoped scan that applies nothing and lands at the watermark
-        — after which it heartbeats normally. At a fresh start the
-        watermark is -1 and nothing happens (history arrives from the
-        stream's first files). Runs on EVERY trigger — with or without a
-        DDL channel — since the attach path is orthogonal to DDL."""
+        """Replay history into every engine still at stream_pos=-1 once
+        the durable stream watermark shows batches were delivered: a
+        table that joined since (a DDL CREATE, or create_table +
+        bootstrap between stream runs) will NEVER see the files the
+        source already consumed, so it is owed exactly the history ≤
+        watermark (``_CappedChangelog`` bounds the replay; offsets
+        beyond arrive from the stream). A mid-drain quiet table (no rows
+        among the delivered files) pays one scoped scan that applies
+        nothing and lands at the watermark — after which it heartbeats
+        normally. At a fresh start the watermark is -1 and nothing
+        happens (history arrives from the stream's first files). Runs on
+        EVERY trigger — with or without a DDL channel."""
         wm = self.orch.stream_watermark()
         if wm < 0:
             return
@@ -802,14 +738,12 @@ class StreamingMultiTableCDC(StreamingCDC):
                 log = self._changelog_view(self._archive_extra_paths())
             eng.run(
                 TableSlice(_CappedChangelog(log, wm), name),
-                offsets_per_epoch=self.catchup_offsets_per_epoch,
+                offsets_per_epoch=CATCHUP_OFFSETS_PER_EPOCH,
             )
-            ck = eng.resume()
-            self._stamp_oob(eng, ck, int(ck.get("stream_pos", -1)))
 
     def _stale_poller_error(self) -> Exception | None:
         """A poller error younger than the retry grace window is left in
-        place — the design is warn-and-retry (the pending-file record is
+        place — the design is warn-and-retry (the applied-file record is
         only written on success), and the next 1 Hz tick usually clears
         it. Raising on the FIRST observation (review r5-3 #4: run_until
         polls faster than the poller interval) would abort the whole
@@ -832,9 +766,7 @@ class StreamingMultiTableCDC(StreamingCDC):
             err = self._stale_poller_error()
             if err is not None:
                 raise err  # surface a persistent idle-poll failure
-            if self.ddl_dir:
-                self._poll_ddl()
-            self._heal_out_of_band_tables()
+            self._join_tables()
             self.orch.apply_batch(batch_df)
 
     def start(self, spark: SparkSession, available_now: bool = True,
@@ -845,15 +777,15 @@ class StreamingMultiTableCDC(StreamingCDC):
         a ``.sql`` landing after the stream drained the directory — or
         sitting in the control dir while the changelog is idle — was
         never applied. Now (a) one synchronous poll runs BEFORE the
-        query starts (pending DDL + out-of-band heals apply even on a
+        query starts (new DDL files and heals apply even on a
         fully-drained directory), and (b) EVERY continuous mode —
         processingTime or the default ASAP trigger — starts a daemon
         poller that applies DDL between triggers while the stream is
         idle, serialized with foreachBatch by ``_gate`` so orchestrator
         state is never mutated concurrently. The poller starts even
-        WITHOUT a DDL channel: out-of-band heals need the same idle
+        WITHOUT a DDL channel: heals need the same idle
         wake-up. A poller failure is recorded on ``self._poller_error``
-        and polling CONTINUES — the pending-file record is only written
+        and polling CONTINUES — the applied-file record is only written
         on success, so a transient failure retries and the next
         successful poll clears the slot; ``run_until`` and the next
         data batch re-raise only an error that persisted past the
@@ -863,9 +795,7 @@ class StreamingMultiTableCDC(StreamingCDC):
         with self._gate:
             self._poller_error = None  # a stale error from a previous
             # query incarnation must not kill this one's first batch
-            if self.ddl_dir:
-                self._poll_ddl()
-            self._heal_out_of_band_tables()
+            self._join_tables()
         q = super().start(
             spark, available_now=available_now, processing_time=processing_time
         )
@@ -895,9 +825,7 @@ class StreamingMultiTableCDC(StreamingCDC):
                     with self._gate:
                         if not q.isActive or stop.is_set():
                             return
-                        if self.ddl_dir:
-                            self._poll_ddl()
-                        self._heal_out_of_band_tables()
+                        self._join_tables()
                         self._poller_error = None  # recovered
                 except Exception as e:
                     # keep polling: un-recorded files retry next tick;

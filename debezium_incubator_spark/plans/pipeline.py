@@ -381,12 +381,6 @@ class CDCEngine:
             "counters": CheckpointStore.merge_counters(
                 ckpt.get("counters", {}), summary.get("counters", {})
             ),
-            # position through which an OUT-OF-BAND catch-up (mid-stream
-            # DDL provisioning) already applied the changelog: the
-            # stream will redeliver those offsets, possibly batched with
-            # newer files, and the out-of-order guard must absorb that
-            # overlap instead of raising (apply_micro_batch)
-            "oob_replay_until": ckpt.get("oob_replay_until", -1),
         }
 
     def bootstrap(self, source: DataFrame, snapshot_version: int | None = None) -> dict:
@@ -478,12 +472,6 @@ class CDCEngine:
         A batch whose offsets span the checkpointed stream_pos means the
         file source delivered out of offset order (raise); a whole-batch
         redelivery sits at-or-below it and the replay guard absorbs it.
-        A span over a position an OUT-OF-BAND catch-up reached
-        (``oob_replay_until``) is the stream redelivering covered files
-        together with new ones — absorbed by the marks; the window
-        closes once the batch lies wholly past the stamp. Known bounded
-        blind spot: while stream_pos still equals the stamp, never-seen
-        offsets below it would be absorbed silently.
 
         An idle table's epoch is a K5 heartbeat to ``top``: no table
         commit, no Spark job. A table that has never streamed never
@@ -492,17 +480,14 @@ class CDCEngine:
         it runs no epoch at all unless ``top`` is -1 too (an empty
         stream batch heartbeats in place)."""
         last = int(ckpt.get("stream_pos", -1))
-        stamp = int(ckpt.get("oob_replay_until", -1))
         if stats_rows:
             lo = min(int(r["raw_lo"]) for r in stats_rows)
             hi = max(int(r["raw_hi"]) for r in stats_rows)
-            if lo <= last < hi and last > stamp:
+            if lo <= last < hi:
                 raise OutOfOrderDeliveryError(
                     f"{self.table_path}: batch spans checkpointed stream_pos={last}: "
                     f"offsets [{lo}, {hi}]"
                 )
-            if stamp >= 0 and lo > stamp:
-                ckpt = {**ckpt, "oob_replay_until": -1}
         elif last < 0 <= top:
             return ckpt
         return self.apply_epoch(

@@ -704,163 +704,222 @@ def test_ddl_applies_while_stream_idle(spark, tmp_path, fixtures):
     assert got and all(exp.get(k) == v for k, v in got.items())
 
 
+def _events(df, name):
+    return df.filter(F.col("source.table") == name).count()
+
+
+def _events_in(orch, name):
+    return int(orch.engines[name].resume()["counters"]["events_in"])
+
+
+def _ddl_clean(spark, root, log, stmt=CREATE_T1, name="files_01"):
+    """Final state of a clean full replay into a DDL-created table."""
+    ref = MultiTableCDC(spark, str(root), num_buckets=4)
+    ref.apply_ddl_statements([stmt])
+    ref.run(DataFrameChangelog(log), offsets_per_epoch=4 * N_SLOTS + 4)
+    return _final(ref, name)
+
+
+@pytest.fixture(scope="module")
+def ddl_expected(spark, tmp_path_factory, fixtures):
+    return _ddl_clean(spark, tmp_path_factory.mktemp("ddlclean"), fixtures[1])
+
+
+def _segments(log):
+    """A (delivered first), then B and C: the even and the odd offsets
+    above A — C lands on disk after B but below B's top."""
+    cut = int(log.agg(F.max("offset")).first()[0]) // 3
+    above = F.col("offset") > cut
+    return (
+        log.filter(~above),
+        log.filter(above & (F.col("offset") % 2 == 0)),
+        log.filter(above & (F.col("offset") % 2 == 1)),
+    )
+
+
 def test_mid_stream_drop_recreate_catches_up(spark, tmp_path, fixtures):
     """Review r4 #1: a DROP TABLE + CREATE TABLE of the SAME name in one
-    DDL file leaves the name registered before and after — the catch-up
+    DDL file leaves the name registered before and after — the heal
     must key off persistent state (stream_pos=-1), not an engine-set
-    diff, or the recreated table silently loses its history."""
+    diff, or the recreated table silently loses its history. Healed
+    through the delivered watermark, it equals a clean replay into a
+    DDL-created table, each event counted once."""
     from debezium_incubator_spark.plans.orchestrator import StreamingMultiTableCDC
-    from debezium_incubator_spark.sources.changelog import ParquetChangelog
 
     src, log = fixtures
+    create_00 = CREATE_T1.replace("files_01", "files_00")
+    expected = _ddl_clean(spark, tmp_path / "drclean", log, create_00, "files_00")
     log_dir = str(tmp_path / "drlog")
     log.coalesce(1).write.mode("append").parquet(log_dir)
-    top = int(log.agg(F.max("offset")).first()[0])
 
-    root = str(tmp_path / "drroot")
-    orch = MultiTableCDC(spark, root, num_buckets=4)
+    orch = MultiTableCDC(spark, str(tmp_path / "drroot"), num_buckets=4)
     orch.create_table("files_00")
     orch.bootstrap(src)
-    orch.run(ParquetChangelog(log_dir), offsets_per_epoch=top + 1)
-    n_00 = log.filter(F.col("source.table") == "files_00").count()
+    orch.apply_batch(log)  # the stream delivered everything
 
     ddl_dir = tmp_path / "drctl"
     ddl_dir.mkdir()
-    create_00 = CREATE_T1.replace("files_01", "files_00")
     (ddl_dir / "001.sql").write_text(f"DROP TABLE repos.files_00;\n{create_00}")
     s = StreamingMultiTableCDC(
         orch, log_dir, str(tmp_path / "drsck"), ddl_dir=str(ddl_dir)
     )
-    s._poll_ddl()  # the foreachBatch pre-batch hook, driven directly
-    eng = orch.engines["files_00"]
-    ck = eng._reconcile(eng.store.latest())
-    # set-diff would have skipped this table: catch-up ran, full history
-    assert int(ck.get("stream_pos", -1)) == top
-    assert int(ck.get("oob_replay_until", -1)) == top
-    assert ck["counters"]["events_in"] == n_00
-    assert orch.final_state("files_00").count() > 0
+    s._join_tables()  # the foreachBatch pre-batch step, driven directly
+    assert _final(orch, "files_00") == expected
+    assert _events_in(orch, "files_00") == _events(log, "files_00")
 
 
-def test_oob_catchup_absorbs_spanning_batch(spark, tmp_path, fixtures):
-    """Review r4 #3: after a mid-stream catch-up advances a table past
-    the stream's own delivery position, a trigger batching covered
-    backlog together with newer files SPANS the position — that overlap
-    must be absorbed (D1 marks cover the old rows), not raised as
-    out-of-order; the final state equals a clean full replay."""
+def test_ddl_table_applies_offsets_landing_below_disk_top(
+    spark, tmp_path, fixtures, ddl_expected
+):
+    """A table a DDL file creates mid-stream is healed up to the
+    delivered watermark only; everything above it comes from the
+    stream. Changelog already on disk when the CREATE lands (B) must
+    not stand in for delivery: offsets that land later below B's top
+    (C) and arrive in one batch with B are applied, not absorbed."""
     from debezium_incubator_spark.plans.orchestrator import StreamingMultiTableCDC
-    from debezium_incubator_spark.sources.changelog import ParquetChangelog
 
     src, log = fixtures
-    top = int(log.agg(F.max("offset")).first()[0])
-    half = top // 2
-    log_dir = str(tmp_path / "ooblog")
-    log.filter(F.col("offset") <= half).coalesce(1).write.mode("append").parquet(log_dir)
-
-    root = str(tmp_path / "oobroot")
-    orch = MultiTableCDC(spark, root, num_buckets=4)
+    seg_a, seg_b, seg_c = _segments(log)
+    log_dir = str(tmp_path / "bslog")
+    orch = MultiTableCDC(spark, str(tmp_path / "bsroot"), num_buckets=4)
     orch.create_table("files_00")
     orch.bootstrap(src)
-    ddl_dir = tmp_path / "oobctl"
+    seg_a.coalesce(1).write.mode("append").parquet(log_dir)
+    orch.apply_batch(seg_a)
+    assert orch.stream_watermark() == int(seg_a.agg(F.max("offset")).first()[0])
+
+    seg_b.coalesce(1).write.mode("append").parquet(log_dir)
+    ddl_dir = tmp_path / "bsctl"
     ddl_dir.mkdir()
     (ddl_dir / "001.sql").write_text(CREATE_T1)
-    s = StreamingMultiTableCDC(
-        orch, log_dir, str(tmp_path / "oobsck"), ddl_dir=str(ddl_dir)
-    )
-    s._poll_ddl()  # provisions files_01, catches it up through the backlog
-    eng = orch.engines["files_01"]
-    t1 = int(log.filter(F.col("offset") <= half).agg(F.max("offset")).first()[0])
-    assert int(eng._reconcile(eng.store.latest())["stream_pos"]) == t1
-    # new file lands; the next trigger delivers backlog + new TOGETHER —
-    # for files_01 that batch spans stream_pos=half
-    orch.apply_batch(log)  # offsets [0, top] ∋ half: spanning, absorbed
-    ck = eng._reconcile(eng.store.latest())
-    assert int(ck["stream_pos"]) == top
-    # D1 absorbed the covered half: every event counted exactly once
-    n_01 = log.filter(F.col("source.table") == "files_01").count()
-    assert ck["counters"]["events_in"] == n_01
-    # (a STREAM-advanced table with no oob stamp still raises on a
-    # genuine span — covered by test_apply_batch_out_of_order_is_per_table)
+    s = StreamingMultiTableCDC(orch, log_dir, str(tmp_path / "bssck"), ddl_dir=str(ddl_dir))
+    # what the idle poller runs between batches, before C lands
+    s._poll_ddl()
+    s._heal_out_of_band_tables()
+    assert "files_01" in orch.engines
 
-def test_ddl_catchup_pending_and_scope(spark, tmp_path, fixtures):
+    seg_c.coalesce(1).write.mode("append").parquet(log_dir)
+    s._apply_batch(seg_b.unionByName(seg_c), 1)
+    assert _final(orch, "files_01") == ddl_expected
+    assert _events_in(orch, "files_01") == _events(log, "files_01")
+
+
+def test_ddl_catchup_pending_and_scope(spark, tmp_path, fixtures, ddl_expected):
     """Review r4 pass 2: (a) an EMPTY changelog directory must not crash
-    the DDL poll (schema-less parquet read); (b) only DDL-created tables
-    are owed an out-of-band replay — a table bootstrapped before the
-    stream starts gets its history FROM the stream, so the poll must not
-    eagerly replay the whole backlog into it; (c) a table created while
-    the changelog is empty stays durably pending until files land."""
-    import json as _json
-
+    the DDL poll (schema-less parquet read); (b) before the stream has
+    delivered a batch no table is replayed eagerly — neither one
+    bootstrapped before the stream starts nor one a CREATE provisions:
+    with the watermark at -1 both are owed history FROM the stream,
+    even once files sit on disk; (c) the first batch delivers it, each
+    event counted once."""
     from debezium_incubator_spark.plans.orchestrator import StreamingMultiTableCDC
-    from debezium_incubator_spark.sources.changelog import ParquetChangelog
 
     src, log = fixtures
     log_dir = str(tmp_path / "pclog")
     os.makedirs(log_dir)  # EMPTY at stream start
-    root = str(tmp_path / "pcroot")
-    orch = MultiTableCDC(spark, root, num_buckets=4)
+    orch = MultiTableCDC(spark, str(tmp_path / "pcroot"), num_buckets=4)
     orch.create_table("files_00")
     orch.bootstrap(src)
+    n_snap_00 = _events_in(orch, "files_00")
     ddl_dir = tmp_path / "pcctl"
     ddl_dir.mkdir()
     (ddl_dir / "001.sql").write_text(CREATE_T1)
     s = StreamingMultiTableCDC(orch, log_dir, str(tmp_path / "pcsck"), ddl_dir=str(ddl_dir))
 
-    s._poll_ddl()  # empty changelog: must not raise
+    s._join_tables()  # empty changelog: must not raise
     assert "files_01" in orch.engines
-    with open(os.path.join(root, "_ddl_pending_catchup.json")) as f:
-        assert _json.load(f) == ["files_01"]  # stays pending, nothing on disk
-    # bootstrapped files_00 untouched: no out-of-band replay, no stamp
-    ck00 = orch.engines["files_00"]._reconcile(orch.engines["files_00"].store.latest())
-    assert int(ck00.get("stream_pos", -1)) == -1
-    assert int(ck00.get("oob_replay_until", -1)) == -1
-
     log.coalesce(1).write.mode("append").parquet(log_dir)
-    s._poll_ddl()  # no new .sql files — the PENDING entry drives this
-    top = int(log.agg(F.max("offset")).first()[0])
-    ck01 = orch.engines["files_01"]._reconcile(orch.engines["files_01"].store.latest())
-    assert int(ck01["stream_pos"]) == top
-    assert int(ck01["oob_replay_until"]) == top
-    with open(os.path.join(root, "_ddl_pending_catchup.json")) as f:
-        assert _json.load(f) == []
-    # files_00 STILL untouched by the poll (its history comes from the stream)
-    ck00 = orch.engines["files_00"]._reconcile(orch.engines["files_00"].store.latest())
-    assert int(ck00.get("stream_pos", -1)) == -1
+    s._join_tables()
+    for name in ("files_00", "files_01"):
+        assert int(orch.engines[name].resume().get("stream_pos", -1)) == -1
 
-def test_pending_stamp_heals_after_crash(spark, tmp_path, fixtures):
-    """Review r4 pass 3 #1: a crash between a catch-up run and its
-    oob stamp leaves the table advanced but unstamped — re-polling must
-    stamp it (not silently discard the pending entry), or the stream
-    wedges on the first redelivery span."""
-    import json as _json
+    s._apply_batch(log, 0)
+    assert _final(orch, "files_01") == ddl_expected
+    assert _events_in(orch, "files_01") == _events(log, "files_01")
+    assert _events_in(orch, "files_00") == n_snap_00 + _events(log, "files_00")
 
+
+def test_crash_after_ddl_registration_converges(spark, tmp_path, fixtures, ddl_expected):
+    """Crash after a CREATE registered its table, before any heal: the
+    table's durable stream_pos=-1 is its whole record. A restart with
+    fresh engine objects heals it to the watermark on its first trigger
+    and streams the rest, converging to a clean replay with each event
+    counted once. The pending-catch-up record that older releases wrote
+    at this point is ignored: it replayed through the changelog's disk
+    top, and offsets landing later below that top were lost."""
     from debezium_incubator_spark.plans.orchestrator import StreamingMultiTableCDC
-    from debezium_incubator_spark.sources.changelog import ParquetChangelog
 
     src, log = fixtures
-    log_dir = str(tmp_path / "stlog")
-    log.coalesce(1).write.mode("append").parquet(log_dir)
-    top = int(log.agg(F.max("offset")).first()[0])
-    root = str(tmp_path / "stroot")
-    orch = MultiTableCDC(spark, root, num_buckets=4)
+    seg_a, seg_b, seg_c = _segments(log)
+    log_dir = str(tmp_path / "calog")
+    root = tmp_path / "caroot"
+    orch = MultiTableCDC(spark, str(root), num_buckets=4)
+    orch.create_table("files_00")
+    orch.bootstrap(src)
+    n_snap_00 = _events_in(orch, "files_00")
+    seg_a.coalesce(1).write.mode("append").parquet(log_dir)
+    orch.apply_batch(seg_a)
+    seg_b.coalesce(1).write.mode("append").parquet(log_dir)
     orch.apply_ddl_statements([CREATE_T1])
-    # simulate: catch-up ran (table advanced) but the stamp write was
-    # lost to a crash — only the pending entry survives
-    orch.engines["files_01"].run(
-        TableSlice(ParquetChangelog(log_dir), "files_01"), offsets_per_epoch=top + 1
-    )
-    with open(os.path.join(root, "_ddl_pending_catchup.json"), "w") as f:
-        _json.dump(["files_01"], f)
-    s = StreamingMultiTableCDC(
-        orch, log_dir, str(tmp_path / "stsck"), ddl_dir=str(tmp_path / "stctl")
-    )
-    os.makedirs(str(tmp_path / "stctl"))
-    s._poll_ddl()
-    ck = orch.engines["files_01"]._reconcile(orch.engines["files_01"].store.latest())
-    assert int(ck["oob_replay_until"]) == top  # stamped, not discarded
-    with open(os.path.join(root, "_ddl_pending_catchup.json")) as f:
-        assert _json.load(f) == []
-    # the redelivery span is now absorbed instead of raising
-    orch.apply_batch(log)
+    (root / "_ddl_pending_catchup.json").write_text('["files_01"]')
+
+    # restart: fresh engines from the registry, a fresh stream driver
+    orch2 = MultiTableCDC(spark, str(root), num_buckets=4)
+    ddl_dir = tmp_path / "cactl"
+    ddl_dir.mkdir()
+    s2 = StreamingMultiTableCDC(orch2, log_dir, str(tmp_path / "casck"), ddl_dir=str(ddl_dir))
+    # the restart's pre-start step, before C lands
+    s2._poll_ddl()
+    s2._heal_out_of_band_tables()
+    seg_c.coalesce(1).write.mode("append").parquet(log_dir)
+    s2._apply_batch(seg_b.unionByName(seg_c), 1)
+    assert _final(orch2, "files_01") == ddl_expected
+    assert _events_in(orch2, "files_01") == _events(log, "files_01")
+    assert _events_in(orch2, "files_00") == n_snap_00 + _events(log, "files_00")
+
+
+def test_healed_table_absorbs_redelivery_and_raises_on_span(spark, tmp_path, fixtures):
+    """Crash after the watermark write, before the stream commits its
+    batch: the restarted stream redelivers that batch, whose top IS the
+    watermark. A table attached in between and healed to the watermark
+    absorbs it like the table the stream advanced, each event counted
+    once, with no stamp in its checkpoint. A batch genuinely spanning
+    the healed position then raises, as it does for any table."""
+    from debezium_incubator_spark.plans.orchestrator import StreamingMultiTableCDC
+    from debezium_incubator_spark.streaming.stream import OutOfOrderDeliveryError
+
+    src, log = fixtures
+    cut = int(log.agg(F.max("offset")).first()[0]) // 2
+    first = log.filter(F.col("offset") <= cut)
+    expected = _clean_run(spark, tmp_path, src, first, sub="rdclean")
+    log_dir = str(tmp_path / "rdlog")
+    first.coalesce(1).write.mode("append").parquet(log_dir)
+    root = str(tmp_path / "rdroot")
+    orch = MultiTableCDC(spark, root, num_buckets=4)
+    orch.create_table("files_00")
+    orch.bootstrap(src)
+    orch.apply_batch(first)  # watermark written; the stream never commits
+    wm = orch.stream_watermark()
+    counted = {"files_00": _events_in(orch, "files_00")}
+
+    # restart with fresh engine objects; files_01 attaches before the
+    # stream resumes, and the first trigger heals it, then redelivers
+    orch2 = MultiTableCDC(spark, root, num_buckets=4)
+    orch2.create_table("files_01")
+    orch2.bootstrap(src)
+    counted["files_01"] = _events_in(orch2, "files_01") + _events(first, "files_01")
+    s2 = StreamingMultiTableCDC(orch2, log_dir, str(tmp_path / "rdsck"))
+    s2._apply_batch(first, 0)
+    for name in ("files_00", "files_01"):
+        ck = orch2.engines[name].resume()
+        assert int(ck["stream_pos"]) == wm
+        assert "oob_replay_until" not in ck
+        assert _events_in(orch2, name) == counted[name]
+        assert _final(orch2, name) == _final(expected, name)
+
+    span = log.filter((F.col("source.table") == "files_01") & (F.col("offset") > cut // 2))
+    with pytest.raises(OutOfOrderDeliveryError, match="files_01"):
+        orch2.apply_batch(span)
 
 
 def test_out_of_band_attach_catches_up_to_watermark(spark, tmp_path, fixtures):
