@@ -2049,7 +2049,6 @@ def q_incremental_agg_view(spark, sf):
         inserted = latest.where(F.col("op") != "d").drop("op")
         state = survivors.unionByName(inserted).localCheckpoint()
         view = agg_view_apply(view, inserted, retracted, grp, meas, ext, state=state)
-        view = view.localCheckpoint()
     return view.select("event_type", "n_rows", "sum_cents", "min_cents", "max_cents")
 
 

@@ -14,9 +14,10 @@ maintenance algebra is the standard IVM one:
   retracted value equals the current extreme — exactly those DETHRONED
   groups get a recompute against current state. The recompute's
   aggregation is bounded to the dethroned groups, but the state scan is
-  not (group columns don't prune buckets) — append-only feeds never pay
-  it (pass state=None; a dethroning retraction then fails loudly at
-  runtime rather than writing stale extremes).
+  not (group columns don't prune buckets) — a batch that dethrones
+  nothing never scans state, and append-only feeds may pass
+  state=None (a dethroning retraction then raises rather than writing
+  stale extremes).
 
 Accumulators are EXACT (longs): floating-point delta-sums drift away
 from a recompute after enough batches, so money-like doubles should be
@@ -27,8 +28,10 @@ are an audit hazard.
 Scale shape: the fold is one union-reaggregate — a single exchange of
 ~|view| + |batch| partially-aggregated rows, no joins, no broadcasts,
 skew-proof (map-side combine collapses hot groups before the shuffle).
-The only join in the operator is the dethrone recompute's semi against
-``state``, bounded to the hit groups.
+``agg_view_apply`` materializes the fold once and, with extreme
+columns, runs one driver-side probe for dethroned groups; it runs no
+other action. The only join in the operator is the dethrone
+recompute's semi against ``state``, bounded to the hit groups.
 """
 
 from __future__ import annotations
@@ -64,55 +67,17 @@ def agg_view(
     )
 
 
-def agg_view_apply(
+def _fold(
     view: DataFrame,
     inserted: DataFrame,
     retracted: DataFrame,
     group_cols: list[str],
     measure_cols: list[str],
-    extreme_cols: list[str] | None = None,
-    state: DataFrame | None = None,
-    probe_redo: bool = False,
+    extreme_cols: list[str],
 ) -> DataFrame:
-    """Fold one batch's row-level effect into the view.
-
-    ``inserted``/``retracted`` are the NEW current rows and the OLD
-    current rows of the keys the batch touched (the merge path already
-    materializes both — merge.py's matched-row fetch).
-
-    The fold is a UNION-REAGGREGATE, not a join: the view's rows and
-    the batch's signed contributions are shaped identically and run
-    through one two-level hash aggregate. One exchange of ~|view|+
-    |batch-groups| partially-aggregated rows, no broadcast, skew-proof,
-    and null-safe by construction (groupBy keys NULL like any value —
-    the join-based shape needed eqNullSafe everywhere, and Spark cannot
-    broadcast a FULL OUTER join anyway, so it silently degraded to
-    shuffling the view through a sort-merge join).
-
-    min/max maintenance: inserts extend extremes algebraically (the
-    same min/max fold — no recompute ever); a retraction triggers a
-    recompute ONLY for groups where the retracted value REACHES the
-    candidate extreme (the one case retraction can't maintain). The
-    recompute aggregates ``state`` semi-joined to those groups — the
-    aggregation is bounded to the hit groups, but the state SCAN is not
-    (group columns don't prune buckets). With ``probe_redo=True`` the
-    operator materializes the (view-sized) fold and driver-checks for
-    dethroned groups first, skipping the state scan entirely when none
-    was hit — "one state read per dethroning batch" holds only under
-    the probe; without it (pure-lazy default) the scan is in the plan
-    for every batch that carries a retraction. ``state`` may be None
-    when no retraction can hit an extreme (append-only feeds); that
-    contract is ENFORCED — under ``probe_redo`` as a clean driver-time
-    error, otherwise lazily (raise_error on the offending rows) — so a
-    hit with state=None fails the job instead of writing silently
-    stale extremes.
-
-    Accumulators are longs; measures must already be in integral units
-    (the module contract) — batch contributions are cast per row, which
-    equals the old cast-after-sum only for integral inputs.
-    """
-    extreme_cols = extreme_cols or []
-
+    """The lazy union-reaggregate fold of one batch into the view: the
+    view's columns plus ``_redo`` (a retraction dethroned one of the
+    group's extremes; always false without extreme columns)."""
     # a column may be both a measure and an extreme — select it once
     cols = list(dict.fromkeys(group_cols + measure_cols + extreme_cols))
     signed = inserted.select(*cols, F.lit(1).alias("_sign")).unionByName(
@@ -195,7 +160,7 @@ def agg_view_apply(
             )
         ).cast("long"),
     ).otherwise(F.col(COUNT_COL))
-    merged = agg.select(
+    return agg.select(
         *group_cols,
         guarded_count.alias(COUNT_COL),
         *sum_cols,
@@ -203,54 +168,64 @@ def agg_view_apply(
         redo.alias("_redo"),
     ).where(F.col(COUNT_COL) > 0)
 
-    if not extreme_cols:
-        return merged.drop("_redo")
 
+def agg_view_apply(
+    view: DataFrame,
+    inserted: DataFrame,
+    retracted: DataFrame,
+    group_cols: list[str],
+    measure_cols: list[str],
+    extreme_cols: list[str] | None = None,
+    state: DataFrame | None = None,
+) -> DataFrame:
+    """Fold one batch's row-level effect into the view.
+
+    ``inserted``/``retracted`` are the NEW current rows and the OLD
+    current rows of the keys the batch touched. They may be lazy: the
+    fold is materialized exactly once (``localCheckpoint``), so each is
+    evaluated once, and the returned view reads from that copy (a
+    dethrone recompute stays lazy over it).
+
+    The fold is a UNION-REAGGREGATE, not a join: the view's rows and
+    the batch's signed contributions are shaped identically and run
+    through one two-level hash aggregate. One exchange of ~|view|+
+    |batch-groups| partially-aggregated rows, no broadcast, skew-proof,
+    and null-safe by construction (groupBy keys NULL like any value —
+    the join-based shape needed eqNullSafe everywhere, and Spark cannot
+    broadcast a FULL OUTER join anyway, so it silently degraded to
+    shuffling the view through a sort-merge join).
+
+    min/max maintenance: inserts extend extremes algebraically (the
+    same min/max fold — no recompute ever); a retraction triggers a
+    recompute ONLY for groups where the retracted value REACHES the
+    candidate extreme (the one case retraction can't maintain). With
+    extreme columns one driver-side probe of the materialized fold
+    finds the dethroned groups: none → the fold is the answer and
+    ``state`` is never scanned; some with ``state=None`` → RuntimeError
+    (the append-only contract: no state to recompute from, so fail
+    instead of writing stale extremes); otherwise those groups' extremes
+    are recomputed from ``state`` (the post-batch table) semi-joined to
+    them — the aggregation is bounded to the hit groups, the state scan
+    is not (group columns don't prune buckets).
+
+    Accumulators are longs; measures must already be in integral units
+    (the module contract) — batch contributions are cast per row, which
+    equals the old cast-after-sum only for integral inputs.
+    """
+    extreme_cols = extreme_cols or []
+    merged = _fold(
+        view, inserted, retracted, group_cols, measure_cols, extreme_cols
+    ).localCheckpoint()
     out_cols = [c for c in merged.columns if c != "_redo"]
+    if not extreme_cols or merged.filter(F.col("_redo")).isEmpty():
+        return merged.select(*out_cols)
     if state is None:
-        if probe_redo:
-            # same driver-gated materialization as the state path, but
-            # a dethroning here is a clean driver-time error instead of
-            # a mid-write executor raise
-            merged = merged.localCheckpoint()
-            if not merged.filter(F.col("_redo")).isEmpty():
-                raise RuntimeError(
-                    "agg_view_apply: a retraction dethroned a min/max "
-                    "but state=None was passed — supply the post-batch "
-                    "state"
-                )
-            return merged.select(*out_cols)
-        # append-only contract, lazily: a dethroned extreme with no
-        # state to recompute from must fail the job at runtime
-        # (raise_error evaluates only on offending rows; the branch
-        # shape survives Catalyst simplification, unlike
-        # when(c, x).otherwise(x))
-        msg = F.lit(
+        raise RuntimeError(
             "agg_view_apply: a retraction dethroned a min/max but "
             "state=None was passed — supply the post-batch state"
         )
-        return merged.select(
-            *group_cols,
-            COUNT_COL,
-            *sum_cols,
-            *[
-                F.when(F.col("_redo"), F.raise_error(msg))
-                .otherwise(F.col(name))
-                .alias(name)
-                for c in extreme_cols
-                for name in (f"min_{c}", f"max_{c}")
-            ],
-        )
 
-    if probe_redo:
-        # driver-gated: materialize the (view-sized) fold once, check
-        # whether ANY group was actually dethroned, and skip the
-        # O(table) state scan entirely when none was — the common case
-        # for routine update batches. Costs one action; also kills the
-        # double evaluation of the fold across the ok/redone branches.
-        merged = merged.localCheckpoint()
-        if merged.filter(F.col("_redo")).isEmpty():
-            return merged.select(*out_cols)
+    sum_cols = [f"sum_{c}" for c in measure_cols]
     ok = merged.filter(~F.col("_redo")).select(*out_cols)
     redo_rows = merged.filter(F.col("_redo")).alias("_m")
     fresh = (

@@ -10,7 +10,7 @@ dashboard-style consumer reads an always-fresh aggregate without ever
 rescanning the table.
 
 Incremental refresh folds the pending version range in CHUNKS of at
-most ``max_versions_per_apply`` (update pre/post pairs telescope across
+most ``MAX_VERSIONS_PER_APPLY`` (update pre/post pairs telescope across
 versions — −a+b then −b+c sums to −a+c — so count/sum deltas are exact
 for any chunk size; the chunking only bounds the Spark plan, which
 grows by two scans + one join per folded version). The refresh pins
@@ -26,14 +26,15 @@ manifest and validated on resume: a maintainer restarted with different
 columns fails loudly instead of silently corrupting the view
 (functions/_state.py params check).
 
-Scale shape per refresh: |changed buckets of the range| reads + one
-batch-sized broadcast delta against the view; the view itself never
-shuffles. With ``extreme_cols``, a chunk whose feed carries retractions
-additionally reads the chunk-end table state for the min/max recompute
-(aggregation bounded to DETHRONED groups, but the scan is O(table) —
-group columns don't prune buckets); append-only chunks skip that scan
-entirely, and a dethroning the probe missed fails loudly at runtime
-(aggregates.py's state=None contract). The table's `expire_versions`
+Scale shape per chunk: |changed buckets of the range| reads, folded
+into the view by one union-reaggregate. The chunk's change feed stays
+lazy; ``agg_view_apply`` materializes the fold once, so the feed is
+read once, and the refresh itself runs no other action. With
+``extreme_cols`` the chunk-end table state is passed along, but only
+the fold's dethrone probe decides whether it is scanned: a chunk that
+dethrones no min/max never reads it (the recompute's aggregation is
+bounded to DETHRONED groups, the scan is O(table) — group columns
+don't prune buckets). The table's `expire_versions`
 must retain versions back to the view's `folded_through` (keep_last >
 refresh lag) or refresh fails loudly and `build()` is the recovery. A
 DROP+CREATE of the table under an existing view is caught by a
@@ -53,6 +54,9 @@ from debezium_incubator_spark.functions._state import VersionedState
 from debezium_incubator_spark.lake.cdf import CHANGE_TYPE_COL, table_changes
 from debezium_incubator_spark.lake.table import LakeTable
 from debezium_incubator_spark.operators.aggregates import agg_view, agg_view_apply
+
+# versions folded per Spark plan (see refresh)
+MAX_VERSIONS_PER_APPLY = 64
 
 _INSERTING = ("insert", "update_postimage")
 _RETRACTING = ("delete", "update_preimage")
@@ -121,17 +125,13 @@ class MaterializedAggView:
             )
             return self._commit(view, thru)
 
-    def refresh(self, max_versions_per_apply: int = 64) -> dict:
+    def refresh(self) -> dict:
         """Fold every table version committed since ``folded_through``
-        into the view, at most ``max_versions_per_apply`` versions per
+        into the view, at most ``MAX_VERSIONS_PER_APPLY`` versions per
         Spark plan (each folded version adds two scans + a join to the
         plan; an unmaintained view lagging thousands of engine epochs
         must not build one giant plan). Returns {"folded_versions": n,
         "folded_through": v}."""
-        if max_versions_per_apply < 1:
-            raise ValueError(
-                f"max_versions_per_apply must be ≥ 1, got {max_versions_per_apply}"
-            )
         with self.state.mutate():
             m = self.state.manifest()
             from_v = m["folded_through"]
@@ -156,45 +156,27 @@ class MaterializedAggView:
             cur = self.state.read([m["view"]])
             lo = from_v
             while lo < thru:
-                hi = min(lo + max_versions_per_apply, thru)
+                hi = min(lo + MAX_VERSIONS_PER_APPLY, thru)
                 try:
                     feed = table_changes(
                         self.table, self.spark, lo, hi, self.key_cols
-                    ).localCheckpoint()  # one action feeds two filters
+                    )
                 except FileNotFoundError as e:
                     raise RuntimeError(self._expired_msg(lo, hi, e)) from e
-                ins = feed.filter(F.col(CHANGE_TYPE_COL).isin(*_INSERTING))
-                ret = feed.filter(F.col(CHANGE_TYPE_COL).isin(*_RETRACTING))
-                # min/max need the chunk-end state ONLY when something
-                # was retracted (append-only chunks skip the scan; a
-                # dethroning this probe missed raises at runtime)
-                post_state = None
-                if self.extreme_cols and not ret.isEmpty():
-                    post_state = self.table.read(self.spark, version=hi)
                 cur = agg_view_apply(
                     cur,
-                    ins,
-                    ret,
+                    feed.filter(F.col(CHANGE_TYPE_COL).isin(*_INSERTING)),
+                    feed.filter(F.col(CHANGE_TYPE_COL).isin(*_RETRACTING)),
                     self.group_cols,
                     self.measure_cols,
                     self.extreme_cols,
-                    state=post_state,
-                    # driver-gated dethrone check: the O(table) state
-                    # scan runs only when this chunk actually dethroned
-                    # an extreme, not for every retraction batch
-                    probe_redo=True,
+                    # scanned only if the chunk dethroned an extreme
+                    state=(
+                        self.table.read(self.spark, version=hi)
+                        if self.extreme_cols
+                        else None
+                    ),
                 )
-                if not self.extreme_cols:
-                    # probe paths already materialized the fold (their
-                    # checkpoint truncates the lineage); a second outer
-                    # checkpoint would just double the stored copy
-                    cur = cur.localCheckpoint()
-                # drop the previous chunk's checkpoint references
-                # promptly — CPython refcounting releases the py4j
-                # handles at rebinding and the ContextCleaner reclaims
-                # the RDD blocks; holding them across a 100-chunk lag
-                # would stack view+feed checkpoints in executor storage
-                del feed, ins, ret, post_state
                 lo = hi
             self._commit(cur, thru)
             return {"folded_versions": thru - from_v, "folded_through": thru}
@@ -203,7 +185,6 @@ class MaterializedAggView:
         self,
         poll_interval_s: float = 5.0,
         run_until=None,
-        max_versions_per_apply: int = 64,
     ) -> dict:
         """Tail the table: fold new versions as they commit — the
         continuous form of ``refresh()`` (Delta readChangeFeed-style
@@ -219,7 +200,7 @@ class MaterializedAggView:
 
         stats = {"refreshes": 0, "folded_versions": 0}
         while True:
-            out = self.refresh(max_versions_per_apply)
+            out = self.refresh()
             stats["refreshes"] += 1
             stats["folded_versions"] += out["folded_versions"]
             stats["folded_through"] = out["folded_through"]

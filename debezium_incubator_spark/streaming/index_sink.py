@@ -44,6 +44,10 @@ from pyspark.sql import functions as F
 
 from debezium_incubator_spark.operators.dedup import lww_latest
 from debezium_incubator_spark.operators.envelope import changelog_schema
+from debezium_incubator_spark.streaming.stream import (
+    OutOfOrderDeliveryError,
+    start_changelog_stream,
+)
 
 
 def lww_document_changes(batch: DataFrame, table: str | None = None) -> DataFrame:
@@ -124,10 +128,6 @@ class StreamingIndexMaintenance:
         return int(self.index.meta().get("stream_pos", -1))
 
     def _apply_batch(self, batch_df, epoch_id: int) -> None:
-        from debezium_incubator_spark.streaming.stream import (
-            OutOfOrderDeliveryError,
-        )
-
         last = self._position()
         lo, top = batch_df.agg(F.min("offset"), F.max("offset")).first()
         if top is None:
@@ -165,19 +165,6 @@ class StreamingIndexMaintenance:
                         f"{k}={have!r}; this sink would write {want!r} — "
                         "mismatched preparer parameters corrupt the index"
                     )
-        if processing_time is not None:
-            available_now = False
-        reader = (
-            spark.readStream.schema(self.schema)
-            .option("maxFilesPerTrigger", str(self.max_files_per_trigger))
-            .parquet(self.changelog_dir)
+        return start_changelog_stream(
+            spark, self, self._apply_batch, available_now, processing_time
         )
-        writer = (
-            reader.writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.stream_checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time is not None:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()

@@ -27,6 +27,35 @@ from debezium_incubator_spark.plans.pipeline import (  # noqa: F401 — re-expor
 )
 
 
+def start_changelog_stream(
+    spark: SparkSession,
+    source,
+    apply_batch,
+    available_now: bool,
+    processing_time: str | None,
+):
+    """Start a file-source stream over ``source.changelog_dir`` (read as
+    ``source.schema``, at most ``source.max_files_per_trigger`` files per
+    trigger, progress in ``source.stream_checkpoint_dir``) that hands
+    every micro-batch to ``apply_batch``. ``processing_time`` watches
+    the directory indefinitely and wins over ``available_now``, which
+    drains it and stops; with neither, Spark's default trigger runs
+    micro-batches back to back."""
+    writer = (
+        spark.readStream.schema(source.schema)
+        .option("maxFilesPerTrigger", str(source.max_files_per_trigger))
+        .parquet(source.changelog_dir)
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", source.stream_checkpoint_dir)
+        .outputMode("append")
+    )
+    if processing_time is not None:
+        writer = writer.trigger(processingTime=processing_time)
+    elif available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 class StreamingCDC:
     """One table fed by a file-source stream. Each micro-batch resumes
     the engine's checkpoint (``CDCEngine.resume``: the carried one, disk
@@ -78,23 +107,9 @@ class StreamingCDC:
         CommitLogProcessor.java:75-94). Idle triggers heartbeat through
         the same exactly-once epoch core; stop with ``q.stop()`` or
         ``run_until(...)``."""
-        if processing_time is not None and available_now:
-            available_now = False
-        reader = (
-            spark.readStream.schema(self.schema)
-            .option("maxFilesPerTrigger", str(self.max_files_per_trigger))
-            .parquet(self.changelog_dir)
+        return start_changelog_stream(
+            spark, self, self._apply_batch, available_now, processing_time
         )
-        writer = (
-            reader.writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.stream_checkpoint_dir)
-            .outputMode("append")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time is not None:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
 
     def run_until_caught_up(self, spark: SparkSession, timeout_s: float = 300.0) -> None:
         q = self.start(spark, available_now=True)

@@ -293,8 +293,9 @@ def main():
     # 10. incremental view fold: union-reaggregate, NOT a join — one
     # partial-aggregated exchange of ~|view|+|batch| rows, skew-proof;
     # (a broadcast full-outer join is impossible in Spark, so a
-    # join-based fold silently shuffles the view through SMJ)
-    from debezium_incubator_spark.operators.aggregates import agg_view, agg_view_apply
+    # join-based fold silently shuffles the view through SMJ).
+    # agg_view_apply materializes this fold, so plan the lazy one
+    from debezium_incubator_spark.operators.aggregates import _fold, agg_view
 
     vst = spark.createDataFrame(
         [(i, f"g{i % 5}", i * 10) for i in range(50)], "k int, g string, cents long"
@@ -302,9 +303,7 @@ def main():
     aview = agg_view(vst, ["g"], ["cents"], ["cents"]).localCheckpoint()
     vins = spark.createDataFrame([(99, "g1", 7)], "k int, g string, cents long")
     vret = spark.createDataFrame([], "k int, g string, cents long")
-    p10 = plan_of(
-        agg_view_apply(aview, vins, vret, ["g"], ["cents"], ["cents"], state=None)
-    )
+    p10 = plan_of(_fold(aview, vins, vret, ["g"], ["cents"], ["cents"]))
     sections.append((
         "Incremental view fold (join-free union-reaggregate)",
         p10,

@@ -103,9 +103,7 @@ def test_multi_epoch_fold_matches_rebuild(spark):
         survivors = state.join(latest.select("k"), "k", "anti")
         inserted = latest.where(F.col("op") != "d").drop("op")
         state = survivors.unionByName(inserted).localCheckpoint()
-        view = agg_view_apply(
-            view, inserted, retracted, GRP, MEAS, EXT, state=state
-        ).localCheckpoint()
+        view = agg_view_apply(view, inserted, retracted, GRP, MEAS, EXT, state=state)
     assert _pdf(view) == _pdf(agg_view(state, GRP, MEAS, EXT))
 
 
@@ -147,33 +145,16 @@ def test_append_only_fold_needs_no_state(spark):
     assert _pdf(out) == [["a", 2, 109, 10, 99], ["b", 1, 1, 1, 1]]
 
 
-def test_dethroning_with_no_state_raises(spark):
-    """The append-only contract is ENFORCED: a retraction that
-    dethrones an extreme with state=None must fail the job, not write
-    silently stale extremes."""
-    import pytest
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import PySparkException
-
-    old = _state(spark, [(1, "a", 10), (2, "a", 99)])
-    view = agg_view(old, GRP, MEAS, EXT)
-    retracted = _state(spark, [(2, "a", 99)])
-    out = agg_view_apply(view, _state(spark, []), retracted, GRP, MEAS, EXT, state=None)
-    with pytest.raises((Py4JJavaError, PySparkException)):
-        out.collect()
-
-
-def test_probe_redo_skips_state_scan_when_nothing_dethroned(spark):
-    """probe_redo=True: a retraction that does NOT dethrone any extreme
-    must produce a plan with no state join at all — the O(table) scan
-    runs only for dethroning batches."""
+def test_skips_state_scan_when_nothing_dethroned(spark):
+    """A retraction that does NOT dethrone any extreme must produce a
+    plan with no state join at all — the O(table) scan runs only for
+    dethroning batches."""
     old = _state(spark, [(1, "a", 1), (2, "a", 99), (3, "a", 50)])
     view = agg_view(old, GRP, MEAS, EXT)
     retracted = _state(spark, [(3, "a", 50)])  # strictly inside (1, 99)
     new_state = _state(spark, [(1, "a", 1), (2, "a", 99)])
     out = agg_view_apply(
-        view, _state(spark, []), retracted, GRP, MEAS, EXT,
-        state=new_state, probe_redo=True,
+        view, _state(spark, []), retracted, GRP, MEAS, EXT, state=new_state
     )
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
@@ -181,26 +162,29 @@ def test_probe_redo_skips_state_scan_when_nothing_dethroned(spark):
     assert "Join" not in plan  # state scan skipped entirely
     assert _pdf(out) == [["a", 2, 100, 1, 99]]
 
-    # and a dethroning batch still recomputes correctly under the probe
+    # and a dethroning batch still recomputes correctly
     retracted2 = _state(spark, [(2, "a", 99)])
     out2 = agg_view_apply(
         view, _state(spark, []), retracted2, GRP, MEAS, EXT,
-        state=_state(spark, [(1, "a", 1), (3, "a", 50)]), probe_redo=True,
+        state=_state(spark, [(1, "a", 1), (3, "a", 50)]),
     )
     assert _pdf(out2) == [["a", 2, 51, 1, 50]]
 
 
 def test_probe_redo_with_no_state_raises_driver_side(spark):
-    """probe_redo + state=None: a dethroning retraction is a clean
-    driver-time RuntimeError at call time, not a mid-write executor
-    raise."""
+    """The append-only contract is ENFORCED: a retraction that dethrones
+    an extreme with state=None is a clean driver-side RuntimeError at
+    call time, never silently stale extremes. A retraction strictly
+    inside the extremes needs no state."""
     import pytest
 
-    old = _state(spark, [(1, "a", 10), (2, "a", 99)])
+    old = _state(spark, [(1, "a", 10), (2, "a", 99), (3, "a", 50)])
     view = agg_view(old, GRP, MEAS, EXT)
     retracted = _state(spark, [(2, "a", 99)])
     with pytest.raises(RuntimeError, match="supply the post-batch"):
         agg_view_apply(
-            view, _state(spark, []), retracted, GRP, MEAS, EXT,
-            state=None, probe_redo=True,
+            view, _state(spark, []), retracted, GRP, MEAS, EXT, state=None
         )
+    inside = _state(spark, [(3, "a", 50)])
+    out = agg_view_apply(view, _state(spark, []), inside, GRP, MEAS, EXT, state=None)
+    assert _pdf(out) == [["a", 2, 109, 10, 99]]

@@ -576,6 +576,7 @@ def test_mid_stream_ddl_channel(spark, tmp_path, fixtures):
     orch = MultiTableCDC(spark, root, num_buckets=4)
     orch.create_table("files_00")
     orch.bootstrap(src)
+    n_snap_00 = _events_in(orch, "files_00")
     s = StreamingMultiTableCDC(
         orch, log_dir, str(tmp_path / "ddlsck"),
         max_files_per_trigger=1, ddl_dir=ddl_dir,
@@ -636,6 +637,10 @@ def test_mid_stream_ddl_channel(spark, tmp_path, fixtures):
     }
     assert all(k in touched for k in got)
     assert all(k not in touched for k in set(exp) - set(got))
+    # final states cannot see a dropped event that a later one
+    # superseded: each event is applied exactly once
+    assert _events_in(orch, "files_01") == _events(log, "files_01")
+    assert _events_in(orch, "files_00") == n_snap_00 + _events(log, "files_00")
     # the applied DDL file is recorded durably (no re-apply on restart)
     import json as _json
 
@@ -663,6 +668,7 @@ def test_ddl_applies_while_stream_idle(spark, tmp_path, fixtures):
     orch = MultiTableCDC(spark, str(tmp_path / "idleroot"), num_buckets=4)
     orch.create_table("files_00")
     orch.bootstrap(src)
+    n_snap_00 = _events_in(orch, "files_00")
     s = StreamingMultiTableCDC(
         orch, log_dir, str(tmp_path / "idlesck"), ddl_dir=str(ddl_dir)
     )
@@ -702,6 +708,8 @@ def test_ddl_applies_while_stream_idle(spark, tmp_path, fixtures):
     got = dict(((r[0], r[1]), tuple(r)) for r in _final(orch, "files_01"))
     exp = dict(((r[0], r[1]), tuple(r)) for r in expected)
     assert got and all(exp.get(k) == v for k, v in got.items())
+    assert _events_in(orch, "files_01") == _events(log, "files_01")
+    assert _events_in(orch, "files_00") == n_snap_00 + _events(log, "files_00")
 
 
 def _events(df, name):

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from debezium_incubator_spark.operators import views
 from debezium_incubator_spark.operators.views import MaterializedAggView
 from tests.helpers import commit_full_state, mk_lake_table
 
@@ -37,6 +38,19 @@ def _view(spark, tmp_path, **kw):
     )
 
 
+def _recompute(t, spark):
+    return (
+        t.read(spark)
+        .groupBy("repo")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("v").cast("long").alias("sum_v"),
+            F.min("v").alias("min_v"),
+            F.max("v").alias("max_v"),
+        )
+    )
+
+
 def test_refresh_lands_on_rebuild_fixpoint(spark, tmp_path):
     rows0 = [(f"r{i % 3}", f"p{i}", i) for i in range(30)]
     t = _mk(spark, str(tmp_path / "table"), rows0)
@@ -55,16 +69,7 @@ def test_refresh_lands_on_rebuild_fixpoint(spark, tmp_path):
 
     out = mv.refresh()
     assert out == {"folded_versions": 2, "folded_through": 3}
-    fresh = (
-        t.read(spark)
-        .groupBy("repo")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("v").cast("long").alias("sum_v"),
-            F.min("v").alias("min_v"),
-            F.max("v").alias("max_v"),
-        )
-    )
+    fresh = _recompute(t, spark)
     assert sorted(map(tuple, mv.read().collect())) == sorted(
         map(tuple, fresh.collect())
     )
@@ -202,9 +207,10 @@ def test_drop_recreate_caught_by_manifest_fingerprint(spark, tmp_path):
     assert mv.read().collect()[0]["sum_v"] == 102
 
 
-def test_chunked_fold_equals_single_apply(spark, tmp_path):
-    """max_versions_per_apply bounds the PLAN, not the math: folding
+def test_chunked_fold_equals_single_apply(spark, tmp_path, monkeypatch):
+    """MAX_VERSIONS_PER_APPLY bounds the PLAN, not the math: folding
     1-version chunks must land exactly where one big apply does."""
+    monkeypatch.setattr(views, "MAX_VERSIONS_PER_APPLY", 1)
     t = _mk(spark, str(tmp_path / "table"), [(f"r{i % 3}", f"p{i}", i) for i in range(12)])
     mv = _view(spark, tmp_path, extreme_cols=["v"])
     mv.build()
@@ -215,18 +221,9 @@ def test_chunked_fold_equals_single_apply(spark, tmp_path):
     ]
     for s in states:
         _commit_state(spark, t, s)
-    out = mv.refresh(max_versions_per_apply=1)
+    out = mv.refresh()
     assert out == {"folded_versions": 3, "folded_through": 4}
-    fresh = (
-        t.read(spark)
-        .groupBy("repo")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("v").cast("long").alias("sum_v"),
-            F.min("v").alias("min_v"),
-            F.max("v").alias("max_v"),
-        )
-    )
+    fresh = _recompute(t, spark)
     assert sorted(map(tuple, mv.read().collect())) == sorted(map(tuple, fresh.collect()))
 
 
@@ -304,9 +301,32 @@ def test_recreated_at_same_version_not_reported_caught_up(spark, tmp_path):
         mv.refresh()
 
 
-def test_refresh_rejects_nonpositive_chunk_size(spark, tmp_path):
-    _mk(spark, str(tmp_path / "table"), [("r1", "a", 1)])
-    mv = _view(spark, tmp_path)
+def test_refresh_job_budget(spark, tmp_path):
+    """The fixed cost of a view refresh is its Spark jobs: one refresh of
+    a chunk that dethrones a max (and updates and inserts elsewhere) on
+    an extreme-column view runs at most ``budget`` jobs — the fold's one
+    materialization, its one dethrone probe, the recompute and the view
+    write. The change feed is not materialized on its own and no action
+    asks whether anything was retracted. Counted from the status
+    tracker's job ids around the second refresh (the first one warms the
+    session)."""
+    budget = 10
+    rows = [(f"r{i % 4}", f"p{i}", i) for i in range(400)]
+    t = _mk(spark, str(tmp_path / "table"), rows)
+    mv = _view(spark, tmp_path, extreme_cols=["v"])
     mv.build()
-    with pytest.raises(ValueError, match="max_versions_per_apply"):
-        mv.refresh(max_versions_per_apply=0)
+    _commit_state(spark, t, rows[:390])  # deletes every group's max
+    mv.refresh()
+    # a dethroning chunk: r1's max (p389) is deleted, r0's rows doubled,
+    # one new group
+    s2 = [(r, p, v * 2 if r == "r0" else v) for r, p, v in rows[:389]]
+    _commit_state(spark, t, s2 + [("r9", "new", 7)])
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = mv.refresh()
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert out == {"folded_versions": 1, "folded_through": 3}
+    assert sorted(map(tuple, mv.read().collect())) == sorted(
+        map(tuple, _recompute(t, spark).collect())
+    )
+    assert len(jobs) <= budget, sorted(jobs)
