@@ -171,6 +171,20 @@ def test_skips_state_scan_when_nothing_dethroned(spark):
     assert _pdf(out2) == [["a", 2, 51, 1, 50]]
 
 
+def test_dethroning_with_no_state_raises(spark):
+    """A retraction that dethrones the min with state=None must fail,
+    not write a silently stale min: the fold refuses before any job."""
+    import pytest
+
+    old = _state(spark, [(1, "a", 10), (2, "a", 99)])
+    view = agg_view(old, GRP, MEAS, EXT)
+    retracted = _state(spark, [(1, "a", 10)])
+    with pytest.raises(RuntimeError, match="supply the post-batch"):
+        agg_view_apply(
+            view, _state(spark, []), retracted, GRP, MEAS, EXT, state=None
+        )
+
+
 def test_probe_redo_with_no_state_raises_driver_side(spark):
     """The append-only contract is ENFORCED: a retraction that dethrones
     an extreme with state=None is a clean driver-side RuntimeError at
