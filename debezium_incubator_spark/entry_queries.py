@@ -1211,18 +1211,22 @@ DDL_CHANNEL_ORACLE_DIR = f"/tmp/cdc_ddlchannel_oracle_{_os.getuid()}"
 
 
 def q_ddl_channel_replay(spark, sf):
-    """Round-4 flagship: the mid-stream DDL channel. ONE readStream over
-    a shared two-table changelog; files_00 is registered + bootstrapped
-    up front, files_01 arrives as a CREATE TABLE ``.sql`` in the DDL
-    control directory and is provisioned BY THE RUNNING STREAM
+    """Round-4 flagship: the mid-stream DDL channel. ONE stream (one
+    stream checkpoint, two runs) over a shared two-table changelog;
+    files_00 is registered + bootstrapped up front and streams the first
+    changelog file alone. Then files_01 arrives as a CREATE TABLE
+    ``.sql`` in the DDL control directory together with the second
+    changelog file, and the stream's next run provisions it
     (StreamingMultiTableCDC._poll_ddl). It joins like any table: at
-    stream_pos=-1, healed up to the delivered watermark, the rest
-    streamed — so each offset reaches it exactly once, from one source
-    or the other (≙ DDL LCRs interleaved with data,
+    stream_pos=-1, healed up to the delivered watermark (the first
+    file), the rest streamed — so each offset reaches it exactly once,
+    from one source or the other (≙ DDL LCRs interleaved with data,
     OracleSchemaChangeEventEmitter.java:42-63 / OracleConnectorIT.java
     :501-540). The oracle recomputes both tables' final LWW states from
     the same parquet — files_01 WITHOUT snapshot rows (it joined
-    mid-stream, changelog-only)."""
+    mid-stream, changelog-only). Final states cannot see an event that
+    was dropped and later superseded, so the query also checks each
+    table's applied-event count before returning."""
     import shutil
     import tempfile
     import time
@@ -1241,13 +1245,9 @@ def q_ddl_channel_replay(spark, sf):
     top = int(log.agg(F.max("offset")).first()[0])
     half = top // 2
     shutil.rmtree(f"{base}/changelog", ignore_errors=True)
-    # two files → multiple micro-batches at maxFilesPerTrigger=1; the
-    # oracle reads the union, so the split is invisible to it
+    # two files, one per stream run; the oracle reads the union, so the
+    # split is invisible to it
     log.filter(F.col("offset") <= half).coalesce(1).write.mode("append").parquet(
-        f"{base}/changelog"
-    )
-    time.sleep(0.05)  # distinct mtimes → deterministic delivery order
-    log.filter(F.col("offset") > half).coalesce(1).write.mode("append").parquet(
         f"{base}/changelog"
     )
 
@@ -1257,17 +1257,37 @@ def q_ddl_channel_replay(spark, sf):
     orch.bootstrap(spark.read.parquet(f"{base}/source"))
     ddl_dir = f"{work}/ddl"
     _os.makedirs(ddl_dir)
+    s = StreamingMultiTableCDC(
+        orch, f"{base}/changelog", f"{work}/sck",
+        max_files_per_trigger=1, ddl_dir=ddl_dir,
+    )
+    s.run_until_caught_up(spark, timeout_s=240)
     with open(f"{ddl_dir}/001_create.sql", "w") as f:
         f.write(
             'CREATE TABLE repos.files_01 ("repo" varchar2(100), '
             '"path" varchar2(500), "commit" varchar2(40), "lang" varchar2(10), '
             '"content" clob, PRIMARY KEY ("repo", "path"));'
         )
-    s = StreamingMultiTableCDC(
-        orch, f"{base}/changelog", f"{work}/sck",
-        max_files_per_trigger=1, ddl_dir=ddl_dir,
+    time.sleep(0.05)  # distinct mtimes → deterministic delivery order
+    log.filter(F.col("offset") > half).coalesce(1).write.mode("append").parquet(
+        f"{base}/changelog"
     )
     s.run_until_caught_up(spark, timeout_s=240)
+    # each table applied exactly the events it was owed: files_01 its
+    # changelog rows, files_00 its snapshot rows plus its changelog rows
+    changes = spark.read.parquet(f"{base}/changelog")
+    owed = {
+        name: changes.filter(F.col("source.table") == name).count()
+        for name in ("files_00", "files_01")
+    }
+    owed["files_00"] += (
+        spark.read.parquet(f"{base}/source").filter(F.col("src_table") == "files_00").count()
+    )
+    applied = {
+        name: int(orch.engines[name].resume()["counters"]["events_in"]) for name in owed
+    }
+    if applied != owed:
+        raise AssertionError(f"ddl_channel_replay: events applied {applied} != owed {owed}")
     outs = [
         orch.final_state(name).select(
             F.lit(name).alias("src_table"),
@@ -1309,13 +1329,11 @@ EVOLUTION_ORACLE_DIR = f"/tmp/cdc_evolution_oracle_{_os.getuid()}"
 def q_evolution_replay(spark, sf):
     """VERDICT r4 #3 (hard part c): rename-across-restart under a
     cross-engine oracle. Two epochs apply, an ALTER RENAME
-    (lang → language) lands mid-stream, then the ``renames`` list is
-    STRIPPED from the persisted checkpoint — simulating exactly the
-    lineages that never carry it (a checkpoint rebuilt by ``_reconcile``
-    from commit summaries, or one written before the rename) — and a
-    FRESH engine (crash-restart) applies the remaining epochs, whose
-    envelopes still carry the OLD field name. The routing must come
-    from the manifest's field-id schema history alone
+    (lang → language) lands mid-stream, and a FRESH engine
+    (crash-restart) applies the remaining epochs, whose envelopes still
+    carry the OLD field name. The checkpoint holds no rename mapping,
+    so the routing must come from the manifest's field-id schema
+    history alone
     (``CDCEngine._rename_history``, ≙ the reference's durable
     schema-history replay, OracleConnectorTask.java:70-76); break it
     and every post-restart update leaves ``language`` NULL, failing the
@@ -1341,9 +1359,6 @@ def q_evolution_replay(spark, sf):
     log = ParquetChangelog(f"{base}/changelog")
     eng.run(log, offsets_per_epoch=1000, max_epochs=2)
     eng.rename_column("lang", "language")
-    ck = eng.store.latest()
-    ck.pop("renames", None)
-    eng.store.save(ck)
 
     # crash-restart: the tail (most of the changelog) applies through a
     # fresh engine whose checkpoint knows nothing of the rename

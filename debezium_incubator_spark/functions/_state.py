@@ -17,11 +17,13 @@ import time
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from debezium_incubator_spark.lake.checkpoint import _atomic_write
 from debezium_incubator_spark.lake.table import ConcurrentWriteError
 
 _VERSION_FILE = "_VERSION"
+_SCHEMA_FILE = "_schema.json"
 
 
 class VersionedState:
@@ -184,10 +186,28 @@ class VersionedState:
             return removed
 
     def read(self, dirs: list[str]) -> DataFrame:
-        return self.spark.read.parquet(*[os.path.join(self.path, d) for d in dirs])
+        """Read state dirs with the schema ``write`` recorded — inferring
+        it from the parquet footers costs a Spark job per read. Dirs
+        written before the record existed (or recorded under different
+        schemas) are inferred as before."""
+        paths = [os.path.join(self.path, d) for d in dirs]
+        recorded = set()
+        for p in paths:
+            try:
+                with open(os.path.join(p, _SCHEMA_FILE)) as f:
+                    recorded.add(f.read())
+            except FileNotFoundError:
+                recorded.add(None)
+        reader = self.spark.read
+        if len(recorded) == 1 and None not in recorded:
+            reader = reader.schema(T.StructType.fromJson(json.loads(recorded.pop())))
+        return reader.parquet(*paths)
 
     def write(self, df: DataFrame, rel: str, partition_by: str | None = None) -> None:
+        out = os.path.join(self.path, rel)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(partition_by)
-        w.parquet(os.path.join(self.path, rel))
+        w.parquet(out)
+        # parquet readers skip ``_``-prefixed files
+        _atomic_write(os.path.join(out, _SCHEMA_FILE), df.schema.json())

@@ -6,20 +6,23 @@ KafkaRecordEmitter.java:58-100, and the Oracle snapshot lifecycle flags
 (OracleOffsetContext.java:100-175).
 
 Contract with LakeTable: the engine commits data FIRST (manifest summary
-carries ``{epoch, max_offsets, counters}``), THEN writes the checkpoint.
-On restart, if the table's committed epoch is ahead of the checkpoint,
-the checkpoint is rebuilt from the commit summary — so a crash between
-commit and checkpoint cannot double-apply (exactly-once).
+carries ``{epoch, max_offsets, counters}``), THEN writes the checkpoint,
+once per epoch. On restart, if the table's committed epoch is ahead of
+the checkpoint, the checkpoint is rebuilt from the commit summaries — so
+a crash between commit and checkpoint cannot double-apply (exactly-once).
 
 State shape (JSON, one file per epoch + atomic LATEST pointer):
     {
       "epoch": 3,                  # last fully applied micro-batch
       "phase": "snapshot"|"stream",# D6 handoff state machine
-      "snapshot_version": 1,       # lake version used for bootstrap (≙ SCN)
       "table_version": 5,          # lake version produced by epoch
+      "stream_pos": 812,           # highest changelog offset delivered
       "max_offsets": {"0": 812},   # per-bucket lineage high-water marks
       "counters": {"rows_applied": ..., "deletes": ..., ...}
     }
+``stream_pos`` is absent until the first epoch (read as -1). Keys an
+older layout wrote beyond these are ignored; the next epoch's
+checkpoint drops them.
 """
 
 from __future__ import annotations
@@ -42,7 +45,6 @@ def _atomic_write(path: str, data: str) -> None:
 INITIAL = {
     "epoch": -1,
     "phase": "snapshot",
-    "snapshot_version": None,
     "table_version": None,
     "max_offsets": {},
     "counters": {},

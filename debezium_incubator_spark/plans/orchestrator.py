@@ -43,6 +43,10 @@ from debezium_incubator_spark.plans.pipeline import (
 )
 from debezium_incubator_spark.streaming.stream import StreamingCDC
 
+# the fewest table versions maintain() keeps: CDCEngine._reconcile must be
+# able to read the parent of a commit whose checkpoint was lost
+RECOVERY_KEEP_LAST = 2
+
 
 class TableSlice:
     """A per-table view over a shared changelog: same offsets, rows
@@ -103,9 +107,9 @@ class MultiTableCDC:
         thread pool (≙ the reference's processor thread pool,
         CassandraConnectorTask.java:191-228): Spark schedules concurrent
         jobs natively, each engine owns disjoint state (own LakeTable,
-        own CheckpointStore, own carried checkpoint), and the shared
-        batch is persisted before the fan-out — so N tables no longer
-        serialize N mostly-idle merge jobs per trigger. 1 = sequential."""
+        own CheckpointStore), and the shared batch is persisted before
+        the fan-out — so N tables no longer serialize N mostly-idle
+        merge jobs per trigger. 1 = sequential."""
         self.spark = spark
         self.root = root
         self.max_parallel_tables = max(1, int(max_parallel_tables))
@@ -480,14 +484,9 @@ class MultiTableCDC:
 
         def maintain_one(name, eng):
             compacted = eng.table.compact(self.spark, min_files=compact_min_files)
-            # the _reconcile recovery chain needs the manifest parents back
-            # to the last PERSISTED checkpoint (periodic K2 flush policy):
-            # keep_last must cover the engine's checkpoint_interval + 1
-            # or crash recovery loses its chain (pipeline._reconcile)
-            safe_keep = max(keep_last, eng.checkpoint_interval + 1)
             floor = (version_floors or {}).get(name)
             return compacted, eng.table.expire_versions(
-                keep_last=safe_keep, protect_through=floor
+                keep_last=max(keep_last, RECOVERY_KEEP_LAST), protect_through=floor
             )
 
         # per-table compaction jobs overlap on the driver thread pool —

@@ -87,7 +87,6 @@ class CDCEngine:
         normalize: bool = True,
         content_field: str = "content",
         exclude_system: bool = True,
-        checkpoint_interval: int = 1,
         snapshot_mode: str = "initial",  # initial | always | never
         audit_before: bool = False,
         after_set_col: str | None = None,
@@ -108,13 +107,6 @@ class CDCEngine:
         self.normalize = normalize
         self.content_field = content_field
         self.exclude_system = exclude_system
-        # K2 offset-flush policy: 1 = 'always' (the reference default,
-        # OffsetFlushPolicy.java:19-52, and Spark's natural per-epoch
-        # unit); N>1 = 'periodic' — the checkpoint file is written every
-        # N epochs and recovery replays the manifest summary chain for
-        # the in-between epochs (commits remain transactional either way,
-        # so exactly-once is unaffected; only checkpoint-file I/O drops)
-        self.checkpoint_interval = max(1, int(checkpoint_interval))
         # S1/S2 snapshot policy (SnapshotProcessor.java:84-93, asserted by
         # invocation counts in SnapshotProcessorTest.java:111-159):
         # INITIAL = once when no prior offset; ALWAYS = a consistent
@@ -139,10 +131,6 @@ class CDCEngine:
         self.after_set_col = after_set_col
         self._table: LakeTable | None = None
         self._nb_checked = False
-        # loop-carried checkpoint: the last state apply_epoch returned.
-        # With checkpoint_interval > 1 a heartbeat-advanced stream_pos
-        # lives only here between persisted checkpoints (see resume)
-        self._carried: dict | None = None
 
     # ------------------------------------------------------------- target table
     @property
@@ -172,11 +160,11 @@ class CDCEngine:
         """{current field name: [its older names, newest first]} derived
         from the manifest's full schema history by FIELD ID. This is the
         durable schema-history store (≙ the reference's schema-history
-        topic, OracleConnectorTask.java:70-76): the rename mapping must
-        survive any checkpoint lineage — a replay resumed from a
-        checkpoint written before the rename, or one rebuilt by
-        ``_reconcile`` from commit summaries (which never carry renames),
-        still routes pre-rename envelope fields onto the current schema.
+        topic, OracleConnectorTask.java:70-76) and the only source of the
+        rename mapping: the checkpoint holds none, so a replay resumed
+        from any checkpoint — one written before the rename, or one
+        rebuilt by ``_reconcile`` from commit summaries — routes
+        pre-rename envelope fields onto the current schema.
         """
         m = self.table.manifest()
         names_by_id: dict[int, list[str]] = {}
@@ -192,15 +180,12 @@ class CDCEngine:
                 out[f["name"]] = list(reversed(hist))
         return out
 
-    def _unwrap(self, events: DataFrame, renames: list[dict]) -> DataFrame:
+    def _unwrap(self, events: DataFrame) -> DataFrame:
         """T3/T4/T10/T11 — envelope → apply-ready flat rows, mapping
         pre-rename envelope field names onto the current schema (hard
-        part (c): replay across renames keeps sha256 parity)."""
+        part (c): replay across a rename keeps sha256 parity)."""
         after_fields = {f.name for f in events.schema["after"].dataType.fields}
         field_types = {f["name"]: f["type"] for f in self.table.current_fields()}
-        old_names = {}
-        for r in renames:
-            old_names[r["new"]] = r["old"]
         history = self._rename_history()
         cols = [F.col("offset"), F.col("op"), F.col("ts_ms")]
         cols += [F.col(k) for k in self.key_cols]
@@ -215,19 +200,9 @@ class CDCEngine:
         )
         translations: list[tuple[str, str]] = []  # (source name, current name)
         for name in payload:
-            # candidate source names, newest first: the current name, the
-            # checkpoint-carried rename chain (fast path / same-epoch
-            # visibility), then the manifest-derived field-id history.
-            # The chain walk is cycle-bounded: a rename REVERT
-            # (lang→language, later language→lang) makes old_names
-            # circular — the old code broke out via the after_fields
-            # check; this one must track visited names or spin forever
-            candidates = [name]
-            src = name
-            while src in old_names and old_names[src] not in candidates:
-                src = old_names[src]
-                candidates.append(src)
-            candidates += [n for n in history.get(name, []) if n not in candidates]
+            # candidate source names, newest first: the current name, then
+            # its older names from the manifest's field-id history
+            candidates = [name, *history.get(name, [])]
             src = next((c for c in candidates if c in after_fields), None)
             if src is not None:
                 cols.append(F.col(f"after.{src}").alias(name))
@@ -337,13 +312,13 @@ class CDCEngine:
     # ------------------------------------------------------------- epochs
     def _reconcile(self, ckpt: dict) -> dict:
         """Rebuild checkpoint state from the committed manifest chain when
-        the table is ahead — crash between commit and checkpoint, or the
-        K2 periodic flush policy leaving epochs checkpoint-less. Walks
-        manifest parents back to the checkpointed epoch and folds the
-        summaries forward; the result is saved (recovery is rare).
+        the table is ahead — a crash between commit and checkpoint, or a
+        checkpoint rewound several epochs. Walks manifest parents back to
+        the checkpointed epoch and folds the summaries forward; the
+        result is saved (recovery is rare).
 
-        Requires `expire_versions(keep_last >= checkpoint_interval + 1)`
-        so the chain is still on disk."""
+        Requires `expire_versions(keep_last >= 2)` so the parent of a
+        commit whose checkpoint was lost is still on disk."""
         s = self.table.summary()
         if s.get("epoch") is None or s["epoch"] <= ckpt["epoch"]:
             return ckpt
@@ -369,12 +344,8 @@ class CDCEngine:
         return {
             "epoch": summary["epoch"],
             "phase": summary.get("phase", ckpt.get("phase", "stream")),
-            "snapshot_version": summary.get(
-                "snapshot_version", ckpt.get("snapshot_version")
-            ),
             "table_version": table_version,
             "stream_pos": summary.get("stream_pos", ckpt.get("stream_pos", -1)),
-            "renames": ckpt.get("renames", []),
             "max_offsets": CheckpointStore.merge_max_offsets(
                 ckpt.get("max_offsets", {}), summary.get("max_offsets", {})
             ),
@@ -383,7 +354,7 @@ class CDCEngine:
             ),
         }
 
-    def bootstrap(self, source: DataFrame, snapshot_version: int | None = None) -> dict:
+    def bootstrap(self, source: DataFrame) -> dict:
         """D6/S1/S2 — snapshot phase: consistent read → 'r' envelopes →
         merge as epoch → phase flips to 'stream'.
 
@@ -403,16 +374,7 @@ class CDCEngine:
             return ckpt
         payload = self._payload_names()
         env = snapshot_envelopes(source, payload_fields=payload)
-        # a consistent snapshot read has unique keys → skip the LWW
-        # shuffle; snapshot rows carry no log position, so the D1 offset
-        # filter must not see them (is_snapshot)
-        return self.apply_epoch(
-            env,
-            phase="stream",
-            snapshot_version=snapshot_version,
-            assume_unique_keys=True,
-            is_snapshot=True,
-        )
+        return self.apply_epoch(env, snapshot=True)
 
     def _checked_num_buckets(self) -> int:
         nb = self.table.manifest()["num_buckets"]
@@ -443,18 +405,11 @@ class CDCEngine:
         return pred if guard is None else pred & guard
 
     def resume(self) -> dict:
-        """The checkpoint the next stream epoch starts from: the carried
-        one (it may be AHEAD of the persisted file), folded forward by
-        ``_reconcile`` when the table advanced elsewhere — but if another
-        driver moved the PERSISTED position further (heartbeat epochs
-        inflate the carried epoch without table commits, so _reconcile
-        cannot fold past them), disk wins. Raises SnapshotPhaseError
+        """The checkpoint the next stream epoch starts from: the persisted
+        one (every epoch saves its own), folded forward by ``_reconcile``
+        when the table committed past it. Raises SnapshotPhaseError
         before bootstrap()."""
-        ckpt = self._reconcile(self._carried or self.store.latest())
-        if self._carried is not None:
-            disk = self._reconcile(self.store.latest())
-            if int(disk.get("stream_pos", -1)) > int(ckpt.get("stream_pos", -1)):
-                ckpt = disk
+        ckpt = self._reconcile(self.store.latest())
         if ckpt["phase"] == "snapshot":
             raise SnapshotPhaseError(f"{self.table_path}: bootstrap() must run before streaming")
         return ckpt
@@ -510,29 +465,26 @@ class CDCEngine:
     def apply_epoch(
         self,
         events: DataFrame,
-        phase: str = "stream",
-        snapshot_version: int | None = None,
         stream_pos: int | None = None,
-        assume_unique_keys: bool = False,
         ckpt: dict | None = None,
-        force_checkpoint: bool = False,
-        is_snapshot: bool = False,
+        snapshot: bool = False,
         stats_rows: list | None = None,
     ) -> dict:
-        """Apply one micro-batch exactly once; returns the new checkpoint
-        state, persisted per the K2 flush policy and carried by the
-        engine (``resume``) so heartbeat positions survive between
-        persisted checkpoints."""
+        """Apply one micro-batch exactly once; saves and returns the new
+        checkpoint state (K2 'always': one checkpoint per epoch,
+        OffsetFlushPolicy.java:19-52).
+
+        ``snapshot``: the batch is a consistent snapshot read — its keys
+        are unique (no LWW shuffle) and its rows carry no log position,
+        so the D1 offset guard must not see them."""
         if ckpt is None:
             ckpt = self._reconcile(self.store.latest())
         target_epoch = ckpt["epoch"] + 1
         if self.table.summary().get("epoch", -1) >= target_epoch:
             # already committed (crash between commit and checkpoint)
-            self._carried = self._reconcile(ckpt)
-            return self._carried
+            return self._reconcile(ckpt)
 
-        renames = ckpt.get("renames", [])
-        if is_snapshot:
+        if snapshot:
             pre = self.table.with_bucket(self._prefilter(events))
         else:
             # replay guard ONCE, before the envelope is unwrapped (the
@@ -546,7 +498,7 @@ class CDCEngine:
         known_empty = stats_rows is not None and len(stats_rows) == 0
         if (
             self.audit_before
-            and not is_snapshot
+            and not snapshot
             and not known_empty  # K5 zero-job heartbeat: the caller has
             # already proven the batch holds no rows for this table (the
             # orchestrator's single stats pass) — the audit's two Spark
@@ -559,17 +511,9 @@ class CDCEngine:
             # that already includes them — spurious mismatches on a
             # perfectly consistent stream
             audit_counters = {"before_image_mismatch": self._audit_before_images(pre)}
-        flat = self._unwrap(pre, renames)
+        flat = self._unwrap(pre)
 
-        summary: dict[str, Any] = {
-            "epoch": target_epoch,
-            "phase": phase,
-            "snapshot_version": (
-                snapshot_version
-                if snapshot_version is not None
-                else ckpt.get("snapshot_version")
-            ),
-        }
+        summary: dict[str, Any] = {"epoch": target_epoch, "phase": "stream"}
         if stream_pos is not None:
             summary["stream_pos"] = stream_pos
 
@@ -579,7 +523,7 @@ class CDCEngine:
             key_cols=self.key_cols,
             order_cols=["offset", "op"],
             summary=summary,
-            assume_unique_keys=assume_unique_keys,
+            assume_unique_keys=snapshot,
             extra_counters=audit_counters,
             stats_rows=stats_rows,
             trust_bucket_col=True,  # computed via this table's with_bucket above
@@ -597,9 +541,7 @@ class CDCEngine:
             summary["max_offsets"] = stats["max_offsets"]
             summary["counters"] = stats["counters"]
         new_ckpt = self._advance(ckpt, summary, version)
-        if force_checkpoint or new_ckpt["epoch"] % self.checkpoint_interval == 0:
-            self.store.save(new_ckpt)
-        self._carried = new_ckpt
+        self.store.save(new_ckpt)
         return new_ckpt
 
     def run(
@@ -650,17 +592,8 @@ class CDCEngine:
                 if will_continue:
                     nxt_end = min(end + offsets_per_epoch, top)
                     nxt = changelog.range(self.spark, end, nxt_end)
-                    ck_for_guard = ckpt
-                    pending = (
-                        end,
-                        nxt_end,
-                        pool.submit(self.slice_stats, nxt, ck_for_guard),
-                    )
-                last = start + offsets_per_epoch >= top
-                ckpt = self.apply_epoch(
-                    batch, stream_pos=end, ckpt=ckpt, force_checkpoint=last,
-                    stats_rows=stats,
-                )
+                    pending = (end, nxt_end, pool.submit(self.slice_stats, nxt, ckpt))
+                ckpt = self.apply_epoch(batch, stream_pos=end, ckpt=ckpt, stats_rows=stats)
                 applied.append(ckpt)
                 n += 1
         finally:
@@ -672,8 +605,6 @@ class CDCEngine:
             if pending is not None:
                 pending[2].cancel()
             pool.shutdown(wait=True, cancel_futures=True)
-        if applied and self.store.latest()["epoch"] < ckpt["epoch"]:
-            self.store.save(ckpt)  # final flush (periodic policy tail)
         return applied
 
     # ------------------------------------------------------------- DDL (S7)
@@ -719,7 +650,6 @@ class CDCEngine:
                     warnings.warn(f"DROP TABLE {r.get('table')}: no table at {self.table_path}")
                     continue
                 self._table = None
-                self._carried = None
                 # the checkpoint dies with the table: a later CREATE
                 # TABLE (provision_from_ddl) in this or a later batch
                 # must start from INITIAL, not inherit phase=stream and
@@ -783,24 +713,24 @@ class CDCEngine:
         self.table.add_column(name, dtype)
 
     def rename_column(self, old: str, new: str) -> None:
-        """Rename = metadata-only (field-id mapping); the old→new mapping
-        is also recorded so pre-rename envelopes keep applying
+        """Rename = metadata-only: the field keeps its id, so pre-rename
+        envelopes keep applying through ``_rename_history``
         (≙ schema-history replay, OracleConnectorTask.java:70-76)."""
         self.table.rename_column(old, new)
-        ckpt = self.store.latest()
-        ckpt.setdefault("renames", []).append({"old": old, "new": new})
-        self.store.save(ckpt)
 
     # ------------------------------------------------------------- reads / metrics
     def final_state(self, version: int | None = None) -> DataFrame:
         return self.table.read(self.spark, version=version)
 
     def metrics(self) -> dict:
-        """M1/M2 — cumulative counters + per-bucket lineage."""
+        """M1/M2 — cumulative counters + per-bucket lineage, and the
+        stream position (the lag in offsets is the source's top minus
+        ``stream_pos``; exact, since every epoch saves its checkpoint)."""
         ckpt = self.store.latest()
         return {
             "epoch": ckpt["epoch"],
             "phase": ckpt["phase"],
+            "stream_pos": int(ckpt.get("stream_pos", -1)),
             "counters": ckpt.get("counters", {}),
             "max_offsets": ckpt.get("max_offsets", {}),
             "table_version": ckpt.get("table_version"),

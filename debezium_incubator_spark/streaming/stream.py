@@ -58,8 +58,8 @@ def start_changelog_stream(
 
 class StreamingCDC:
     """One table fed by a file-source stream. Each micro-batch resumes
-    the engine's checkpoint (``CDCEngine.resume``: the carried one, disk
-    when another driver moved further, never before bootstrap), runs ONE
+    the engine's checkpoint (``CDCEngine.resume``: the persisted one,
+    never before bootstrap), runs ONE
     grouped stats collect over the raw batch, and hands its rows to
     ``CDCEngine.apply_micro_batch`` — the same per-table step the
     multi-table orchestrator uses."""

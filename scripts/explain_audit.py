@@ -77,7 +77,7 @@ def main():
     # broadcast, and the LWW (with the unwrap UDF) runs once, in the write
     ck = eng.store.latest()
     batch = cl.range(spark, -1, 10**9)
-    flat = eng._unwrap(eng._guarded_pre(batch, ck), [])
+    flat = eng._unwrap(eng._guarded_pre(batch, ck))
     keys = ["repo", "path"]
     payload = [f["name"] for f in eng.table.current_fields() if f["name"] not in keys]
     out_cols = [*keys, *payload, "_bucket"]

@@ -81,10 +81,7 @@ def test_rename_mapping_survives_checkpoint_without_renames(spark, tmp_path):
     store, ≙ OracleConnectorTask.java:70-76)."""
     eng = _bootstrapped(spark, tmp_path)
     eng.rename_column("lang", "language")
-    # simulate the renames-less lineage: strip the list from the ckpt
-    ck = eng.store.latest()
-    ck.pop("renames", None)
-    eng.store.save(ck)
+    assert "renames" not in eng.store.latest()  # the checkpoint keeps none
 
     eng2 = CDCEngine(spark, str(tmp_path / "t"), str(tmp_path / "c"), num_buckets=4)
     ev = mk_events(spark, [{"offset": 1, "op": "u", "repo": "r", "path": "a",
@@ -92,6 +89,52 @@ def test_rename_mapping_survives_checkpoint_without_renames(spark, tmp_path):
     eng2.apply_epoch(ev, stream_pos=1)
     row = eng2.final_state().first()
     assert row["language"] == "py" and row["content"] == "v1\n"
+
+
+def test_rename_after_an_epoch_leaves_no_rename_list(spark, tmp_path):
+    """In ONE engine object: an epoch, then a rename, then run(). The
+    pre-rename field still lands in the renamed column, routed by the
+    manifest's field-id history alone — the checkpoint keeps no rename
+    list."""
+    from debezium_incubator_spark.sources.changelog import DataFrameChangelog
+
+    eng = _bootstrapped(spark, tmp_path)
+    eng.apply_epoch(mk_events(spark, [{"offset": 1, "op": "u", "repo": "r", "path": "a",
+                                       "after": IMG("v1\n")}]), stream_pos=1)
+    eng.rename_column("lang", "language")
+    ev = mk_events(spark, [{"offset": 2, "op": "u", "repo": "r", "path": "a",
+                            "after": IMG("v2\n", lang="rs")}])
+    eng.run(DataFrameChangelog(ev), offsets_per_epoch=10)
+    row = eng.final_state().first()
+    assert row["language"] == "rs" and row["content"] == "v2\n"
+    ck = eng.store.latest()
+    assert ck["stream_pos"] == 2
+    assert "renames" not in ck
+
+
+def test_older_checkpoint_layout_resumes(spark, tmp_path):
+    """A checkpoint written in the older layout — with a rename list and
+    a snapshot version — loads, resumes and applies; the next epoch's
+    checkpoint holds only the current keys."""
+    import json
+
+    eng = _bootstrapped(spark, tmp_path)
+    eng.rename_column("lang", "language")
+    ck = eng.store.latest()
+    with open(tmp_path / "c" / f"epoch={ck['epoch']}.json", "w") as f:
+        json.dump(dict(ck, snapshot_version=None,
+                       renames=[{"old": "lang", "new": "language"}]), f)
+
+    eng2 = CDCEngine(spark, str(tmp_path / "t"), str(tmp_path / "c"), num_buckets=4)
+    ev = mk_events(spark, [{"offset": 1, "op": "u", "repo": "r", "path": "a",
+                            "after": IMG("v1\n", lang="rs")}])
+    new = eng2.apply_epoch(ev, stream_pos=1, ckpt=eng2.resume())
+    assert new["epoch"] == ck["epoch"] + 1
+    row = eng2.final_state().first()
+    assert row["language"] == "rs" and row["content"] == "v1\n"
+    assert eng2.store.latest() == new
+    assert set(new) == {"epoch", "phase", "table_version", "stream_pos",
+                        "max_offsets", "counters"}
 
 
 def test_engine_level_partial_images(spark, tmp_path):

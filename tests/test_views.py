@@ -126,6 +126,25 @@ def test_legacy_state_without_key_cols_resumes(spark, tmp_path):
     assert mv.meta()["params"]["key_cols"] == KEYS
 
 
+def test_state_without_recorded_schema_stays_readable(spark, tmp_path):
+    """A view state dir written before the schema record existed is read
+    by inference; the next commit records its schema again."""
+    t = _mk(spark, str(tmp_path / "table"), [("r1", "a", 1), ("r2", "b", 2)])
+    mv = _view(spark, tmp_path, extreme_cols=["v"])
+    mv.build()
+    rel = tmp_path / "view" / mv.meta()["view"]
+    (rel / "_schema.json").unlink()
+    assert sorted(map(tuple, mv.read().collect())) == sorted(
+        map(tuple, _recompute(t, spark).collect())
+    )
+    _commit_state(spark, t, [("r1", "a", 5), ("r2", "b", 2)])
+    assert mv.refresh()["folded_versions"] == 1
+    assert (tmp_path / "view" / mv.meta()["view"] / "_schema.json").exists()
+    assert sorted(map(tuple, mv.read().collect())) == sorted(
+        map(tuple, _recompute(t, spark).collect())
+    )
+
+
 def test_rewound_table_fails_loudly(spark, tmp_path, monkeypatch):
     t = _mk(spark, str(tmp_path / "table"), [("r1", "a", 1)])
     _commit_state(spark, t, [("r1", "a", 2)])
@@ -306,11 +325,12 @@ def test_refresh_job_budget(spark, tmp_path):
     a chunk that dethrones a max (and updates and inserts elsewhere) on
     an extreme-column view runs at most ``budget`` jobs — the fold's one
     materialization, its one dethrone probe, the recompute and the view
-    write. The change feed is not materialized on its own and no action
-    asks whether anything was retracted. Counted from the status
+    write. The change feed is not materialized on its own, no action
+    asks whether anything was retracted, and the stored view is read
+    with its recorded schema (no inference job). Counted from the status
     tracker's job ids around the second refresh (the first one warms the
     session)."""
-    budget = 10
+    budget = 9
     rows = [(f"r{i % 4}", f"p{i}", i) for i in range(400)]
     t = _mk(spark, str(tmp_path / "table"), rows)
     mv = _view(spark, tmp_path, extreme_cols=["v"])
