@@ -27,16 +27,10 @@ _SCHEMA_FILE = "_schema.json"
 
 
 class VersionedState:
-    def __init__(
-        self, spark: SparkSession, path: str, params: dict, legacy_params: dict | None = None
-    ):
+    def __init__(self, spark: SparkSession, path: str, params: dict):
         self.spark = spark
         self.path = path
         self.params = params
-        # params stamped only since a later release: a stored manifest
-        # that lacks one is legacy state, valid exactly when the request
-        # is the value those writers implied
-        self.legacy_params = legacy_params or {}
         os.makedirs(path, exist_ok=True)
 
     @contextmanager
@@ -89,11 +83,7 @@ class VersionedState:
         with open(mp) as f:
             m = json.load(f)
         for k, want in self.params.items():
-            if k not in m["params"] and k in self.legacy_params:
-                ok = want == self.legacy_params[k]
-            else:
-                ok = m["params"].get(k) == want
-            if not ok:
+            if m["params"].get(k) != want:
                 raise ValueError(
                     f"index param mismatch for {k}: stored {m['params'].get(k)!r}"
                     f" vs requested {want!r}"

@@ -1,65 +1,71 @@
-"""Durable materialized aggregate views maintained from the lake's
-change feed.
+"""Durable materialized aggregate views over the lake table, kept as
+per-bucket partial aggregates.
 
 Closes the loop the reference leaves to its consumers: the CDC engine
-lands row-level state in the LakeTable; `lake/cdf.py` reconstructs the
-row-level change feed of any committed version range; this module folds
-that feed into a DURABLE per-group aggregate view (operators/
-aggregates.py algebra) with its own commit-then-pointer manifest — so a
-dashboard-style consumer reads an always-fresh aggregate without ever
-rescanning the table.
+lands row-level state in the LakeTable's hash buckets; this module keeps
+a DURABLE per-group aggregate of that state (count, exact long sums,
+min/max — operators/aggregates.py) with its own commit-then-pointer
+manifest, so a dashboard-style consumer reads an always-fresh aggregate
+without rescanning the table.
 
-Incremental refresh folds the pending version range in CHUNKS of at
-most ``MAX_VERSIONS_PER_APPLY`` (update pre/post pairs telescope across
-versions — −a+b then −b+c sums to −a+c — so count/sum deltas are exact
-for any chunk size; the chunking only bounds the Spark plan, which
-grows by two scans + one join per folded version). The refresh pins
-the target version ONCE up front — a concurrent engine commit
-mid-refresh lands in the next refresh, never half in this one.
+State: one row per ``(source _bucket, group)`` holding the partial
+aggregates of that bucket's rows at ``folded_through``. The manifest
+records, next to ``folded_through``, a hash of each bucket's file list
+at that version and the field id and type of every folded column.
+``read()`` re-aggregates the partials by group. The state holds at most
+min(groups × buckets, table rows) rows.
 
-Exactly-once: the folded-through table version rides the SAME manifest
-commit as the new view state (commit-THEN-checkpoint, the engine's own
-invariant). A crash mid-refresh leaves the previous manifest current —
-the retry re-derives the identical feed from the immutable table
-versions. Parameters (group/measure/extreme columns) are stamped in the
-manifest and validated on resume: a maintainer restarted with different
-columns fails loudly instead of silently corrupting the view
-(functions/_state.py params check).
+Refresh pins the target version ONCE (a concurrent engine commit
+mid-refresh lands in the next refresh) and compares its manifest with
+the recorded one. The table is copy-on-write per bucket, so a bucket
+whose file list is unchanged holds exactly the rows it held; only the
+CHANGED buckets are read, once, at the pinned version, and
+re-aggregated. The new state is the unchanged buckets' partials unioned
+with that aggregate: count, sum, min and max stay exact with no
+retraction algebra, so there is no change-feed diff, no fold and no
+min/max dethrone rescan (MIN/MAX are not self-maintainable under
+deletions; recomputing a whole bucket sidesteps that). A refresh that
+finds no changed bucket runs no Spark job.
 
-Scale shape per chunk: |changed buckets of the range| reads, folded
-into the view by one union-reaggregate. The chunk's change feed stays
-lazy; ``agg_view_apply`` materializes the fold once, so the feed is
-read once, and the refresh itself runs no other action. With
-``extreme_cols`` the chunk-end table state is passed along, but only
-the fold's dethrone probe decides whether it is scanned: a chunk that
-dethrones no min/max never reads it (the recompute's aggregation is
-bounded to DETHRONED groups, the scan is O(table) — group columns
-don't prune buckets). The table's `expire_versions`
-must retain versions back to the view's `folded_through` (keep_last >
-refresh lag) or refresh fails loudly and `build()` is the recovery. A
-DROP+CREATE of the table under an existing view is caught by a
-manifest fingerprint stamped at every commit — the recreated chain's
-versions never hash like the folded one's.
+The view never reads table history, only the version it pins: a
+rewound, recreated or expired table shows up as changed file lists and
+gets the correct recompute. A folded column whose field id or type
+changed (drop + re-add, type widening) marks every bucket changed; a
+folded name missing at the pinned version (rename/drop) fails loudly —
+``build()`` a view under the current names instead.
+
+Exactly-once: ``folded_through`` and the bucket record ride the SAME
+manifest commit as the new state (commit-THEN-pointer). A crash
+mid-refresh leaves the previous manifest current, and the retry
+recomputes from the immutable table version. Parameters (group/measure/
+extreme columns) are stamped in the manifest and validated on resume:
+a maintainer restarted with different columns fails loudly instead of
+silently corrupting the view (functions/_state.py params check). A
+state written without the bucket record (an older layout) is rebuilt
+by its first refresh.
 
 ≙ the downstream the reference's consumers build on ChangeRecords
-(Record.java operation kinds); here the feed is derived from the
-committed version chain instead of captured in flight.
+(Record.java operation kinds); here it is derived from the committed
+table state instead of captured in flight.
 """
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from debezium_incubator_spark.functions._state import VersionedState
-from debezium_incubator_spark.lake.cdf import CHANGE_TYPE_COL, table_changes
-from debezium_incubator_spark.lake.table import LakeTable
-from debezium_incubator_spark.operators.aggregates import agg_view, agg_view_apply
 
-# versions folded per Spark plan (see refresh)
-MAX_VERSIONS_PER_APPLY = 64
+# not called here: perfbench/spans.py wraps ``views.table_changes`` by
+# this name, so it stays importable from this module
+from debezium_incubator_spark.lake.cdf import table_changes  # noqa: F401
+from debezium_incubator_spark.lake.table import BUCKET_COL, LakeTable
+from debezium_incubator_spark.operators.aggregates import COUNT_COL, agg_view
 
-_INSERTING = ("insert", "update_postimage")
-_RETRACTING = ("delete", "update_preimage")
+
+def _files_hash(files: list[dict]) -> str:
+    return hashlib.sha1("\n".join(sorted(f["path"] for f in files)).encode()).hexdigest()
 
 
 class MaterializedAggView:
@@ -71,20 +77,12 @@ class MaterializedAggView:
         group_cols: list[str],
         measure_cols: list[str],
         extreme_cols: list[str] | None = None,
-        key_cols: list[str] | None = None,
     ):
         self.spark = spark
         self.table = LakeTable(table_path)
         self.group_cols = list(group_cols)
         self.measure_cols = list(measure_cols)
         self.extreme_cols = list(extreme_cols or [])
-        # ADVICE r5: stamp the RESOLVED key columns (incl. the
-        # bucket_cols default) — a maintainer resumed with different
-        # key_cols would otherwise pass the params check while the CDF
-        # full-outer-join grain (hence the reconstructed feed) silently
-        # changed under non-row-unique keys
-        bucket_cols = list(self.table.manifest()["bucket_cols"])
-        self.key_cols = list(key_cols) if key_cols else bucket_cols
         self.state = VersionedState(
             spark,
             path,
@@ -93,10 +91,7 @@ class MaterializedAggView:
                 "group_cols": self.group_cols,
                 "measure_cols": self.measure_cols,
                 "extreme_cols": self.extreme_cols,
-                "key_cols": self.key_cols,
             },
-            # state written before key_cols was stamped used the default
-            legacy_params={"key_cols": bucket_cols},
         )
 
     # ------------------------------------------------------------- lifecycle
@@ -107,86 +102,42 @@ class MaterializedAggView:
         return self.state.manifest()
 
     def build(self) -> int:
-        """Full rebuild from the table's current version (also the
-        recovery path when the table expired versions past
-        ``folded_through`` or was dropped and recreated). Validates the
+        """Full rebuild at the table's current version. Validates the
         stamped parameters first when a view already exists — a rebuild
         with drifted columns must fail loudly, not silently redefine
         the view under every other maintainer/reader."""
         with self.state.mutate():
             if self.state.version() > 0:
                 self.state.manifest()  # params check lives in the read
-            thru = self.table.version()
-            view = agg_view(
-                self.table.read(self.spark, version=thru),
-                self.group_cols,
-                self.measure_cols,
-                self.extreme_cols,
-            )
-            return self._commit(view, thru)
+            state, record = self._next_state(None, self._pin())
+            return self._commit(state, record)
 
     def refresh(self) -> dict:
-        """Fold every table version committed since ``folded_through``
-        into the view, at most ``MAX_VERSIONS_PER_APPLY`` versions per
-        Spark plan (each folded version adds two scans + a join to the
-        plan; an unmaintained view lagging thousands of engine epochs
-        must not build one giant plan). Returns {"folded_versions": n,
-        "folded_through": v}."""
+        """Bring the view to the table's current version, re-aggregating
+        only the buckets whose files changed since ``folded_through``.
+        Commits nothing when the view is current. Returns
+        {"folded_versions": n, "folded_through": v}."""
         with self.state.mutate():
             m = self.state.manifest()
             from_v = m["folded_through"]
-            thru = self.table.version()
-            if thru < from_v:
-                raise RuntimeError(
-                    f"table at version {thru} is BEHIND the view's "
-                    f"folded_through {from_v} — the table was rewound or "
-                    "recreated; build() to re-derive"
-                )
-            # anchor BEFORE the caught-up return: a recreated chain that
-            # happens to sit at exactly folded_through versions must
-            # raise, not report "caught up" over a different table
-            self._guard_anchor(m)
-            if thru == from_v:
-                return {"folded_versions": 0, "folded_through": from_v}
-            try:
-                self._guard_schema_stable(from_v, thru)
-            except FileNotFoundError as e:
-                raise RuntimeError(self._expired_msg(from_v, thru, e)) from e
-
-            cur = self.state.read([m["view"]])
-            lo = from_v
-            while lo < thru:
-                hi = min(lo + MAX_VERSIONS_PER_APPLY, thru)
-                try:
-                    feed = table_changes(
-                        self.table, self.spark, lo, hi, self.key_cols
-                    )
-                except FileNotFoundError as e:
-                    raise RuntimeError(self._expired_msg(lo, hi, e)) from e
-                cur = agg_view_apply(
-                    cur,
-                    feed.filter(F.col(CHANGE_TYPE_COL).isin(*_INSERTING)),
-                    feed.filter(F.col(CHANGE_TYPE_COL).isin(*_RETRACTING)),
-                    self.group_cols,
-                    self.measure_cols,
-                    self.extreme_cols,
-                    # scanned only if the chunk dethroned an extreme
-                    state=(
-                        self.table.read(self.spark, version=hi)
-                        if self.extreme_cols
-                        else None
-                    ),
-                )
-                lo = hi
-            self._commit(cur, thru)
-            return {"folded_versions": thru - from_v, "folded_through": thru}
+            tm = self._pin()
+            state, record = self._next_state(m, tm)
+            if state is not None:
+                self._commit(state, record)
+            elif tm["version"] != from_v:
+                # e.g. an add_column commit: no bucket to recompute
+                self.state.commit({"view": m["view"], **record})
+            return {
+                "folded_versions": max(tm["version"] - from_v, 0),
+                "folded_through": tm["version"],
+            }
 
     def follow(
         self,
         poll_interval_s: float = 5.0,
         run_until=None,
     ) -> dict:
-        """Tail the table: fold new versions as they commit — the
+        """Tail the table: refresh as new versions commit — the
         continuous form of ``refresh()`` (Delta readChangeFeed-style
         tailing without a streaming source; the engine's
         ``run_until`` idiom). With no ``run_until`` this is an
@@ -211,92 +162,81 @@ class MaterializedAggView:
             if out["folded_versions"] == 0:
                 time.sleep(poll_interval_s)
 
-    @staticmethod
-    def _expired_msg(lo: int, hi: int, e: Exception) -> str:
-        return (
-            f"table versions ({lo}, {hi}] are not all readable ({e}) — "
-            "expire_versions reclaimed owed history, or the table was "
-            "recreated; build() to re-derive (keep the table's keep_last "
-            "above the refresh lag)"
-        )
+    def _pin(self) -> dict:
+        """The table's manifest at its current version, read through a
+        fresh handle: a handle caches manifests by version number, which
+        holds within one version chain, and a DROP+CREATE starts
+        another."""
+        self.table = LakeTable(self.table.path)
+        return self.table.manifest(self.table.version())
 
-    def _manifest_sha(self, version: int) -> str:
-        import hashlib
-        import os
-
-        with open(
-            os.path.join(self.table.meta_dir, f"v{version:05d}.json"), "rb"
-        ) as f:
-            return hashlib.sha256(f.read()).hexdigest()
-
-    def _guard_anchor(self, m: dict) -> None:
-        """A DROP+CREATE whose new chain already advanced past
-        ``folded_through`` passes the BEHIND check — but its manifests
-        are not the folded chain's (data dirs carry fresh uuids), so the
-        fingerprint stamped at commit time catches it. (A v0 anchor is
-        content-identical across recreations, and that case is benign:
-        the folded base was the empty view, so folding the new chain's
-        full history from v0 is exactly a correct derivation.)"""
-        want = m.get("anchor_sha")
-        if want is None:
-            return
-        v = m["folded_through"]
-        try:
-            got = self._manifest_sha(v)
-        except FileNotFoundError as e:
-            raise RuntimeError(self._expired_msg(v, v, e)) from e
-        if got != want:
+    def _next_state(self, m: dict | None, tm: dict) -> tuple[DataFrame | None, dict]:
+        """The lazy state frame at table manifest ``tm`` and the manifest
+        record it folds. The frame is None when no bucket changed since
+        the view manifest ``m`` (None: rebuild every bucket)."""
+        # the bucket columns are read too: with_bucket hashes them
+        cols = list(dict.fromkeys(
+            self.group_cols + self.measure_cols + self.extreme_cols + tm["bucket_cols"]
+        ))
+        current = {f["name"]: f for f in self.table.current_fields(tm)}
+        gone = [c for c in cols if c not in current]
+        if gone:
             raise RuntimeError(
-                f"table manifest v{v} no longer matches the fingerprint "
-                "this view folded (table dropped and recreated?) — "
-                "build() to re-derive"
+                f"column(s) {gone} folded by this view were renamed/dropped "
+                f"by table version {tm['version']}; build() a view under the "
+                "current schema to re-derive"
             )
-
-    def _guard_schema_stable(self, from_v: int, thru: int) -> None:
-        """A rename/drop of a folded column inside the pending range
-        would surface in the feed as old-name deletes + new-name adds —
-        the retractions would fold under NULL group/measure values and
-        silently corrupt the view. Fail loudly instead; build() under
-        the new names is the correct posture (Delta refuses CDF across
-        non-additive schema changes for the same reason). Manifest-only
-        check, no scan. Purely ADDITIVE steps pass — a new column is
-        not in this view's stamped params."""
-        folded = set(
-            self.group_cols + self.measure_cols + self.extreme_cols
-        ) | set(self.key_cols or self.table.manifest(thru)["bucket_cols"])
-        for v in range(from_v + 1, thru + 1):
-            m0, m1 = self.table.manifest(v - 1), self.table.manifest(v)
-            n0 = {f["name"] for f in m0["schemas"][str(m0["current_schema"])]}
-            n1 = {f["name"] for f in m1["schemas"][str(m1["current_schema"])]}
-            gone = (n0 - n1) & folded
-            if gone:
-                raise RuntimeError(
-                    f"column(s) {sorted(gone)} folded by this view were "
-                    f"renamed/dropped at table version {v} — incremental "
-                    "refresh across that is not well-defined; build() "
-                    "under the current schema to re-derive"
-                )
-
-    def _commit(self, view: DataFrame, folded_through: int) -> int:
-        rel = f"view_v{self.state.version() + 1:05d}"
-        self.state.write(view, rel)
-        return self.state.commit(
-            {
-                "view": rel,
-                "folded_through": folded_through,
-                "anchor_sha": self._manifest_sha(folded_through),
-            }
+        record = {
+            "folded_through": tm["version"],
+            "bucket_files": {b: _files_hash(fs) for b, fs in tm["buckets"].items() if fs},
+            "fields": {c: {"id": current[c]["id"], "type": current[c]["type"]} for c in cols},
+        }
+        # an older layout has no record: nothing is reused
+        reuse = m is not None and m.get("fields") == record["fields"]
+        old = m["bucket_files"] if reuse else {}
+        files = record["bucket_files"]
+        changed = sorted(int(b) for b in old.keys() | files.keys() if old.get(b) != files.get(b))
+        if reuse and not changed:
+            return None, record
+        rows = self.table.read(self.spark, version=tm["version"], buckets=changed)
+        state = agg_view(
+            self.table.with_bucket(rows, tm),
+            [BUCKET_COL, *self.group_cols],
+            self.measure_cols,
+            self.extreme_cols,
         )
+        if reuse:
+            kept = self.state.read([m["view"]]).filter(~F.col(BUCKET_COL).isin(changed))
+            state = kept.unionByName(state)
+        return state, record
+
+    def _commit(self, state: DataFrame, record: dict) -> int:
+        rel = f"view_v{self.state.version() + 1:05d}"
+        self.state.write(state, rel)
+        return self.state.commit({"view": rel, **record})
 
     # ------------------------------------------------------------- reads
     def read(self, as_of: int | None = None) -> DataFrame:
-        return self.state.read([self.state.manifest(as_of)["view"]])
+        """The view: the partials re-aggregated by group."""
+        parts = self.state.read([self.state.manifest(as_of)["view"]])
+        return parts.groupBy(*self.group_cols).agg(
+            F.sum(COUNT_COL).cast("long").alias(COUNT_COL),
+            *[F.sum(f"sum_{c}").cast("long").alias(f"sum_{c}") for c in self.measure_cols],
+            *[
+                a
+                for c in self.extreme_cols
+                for a in (F.min(f"min_{c}").alias(f"min_{c}"), F.max(f"max_{c}").alias(f"max_{c}"))
+            ],
+        )
 
     def expire(self, keep_last: int = 2) -> list[str]:
         return self.state.expire(keep_last=keep_last)
 
     def metrics(self) -> dict:
+        """Manifest-derived, no Spark job: ``versions_behind`` is the
+        view's lag in table versions."""
         out = self.state.metrics_base()
         if out["version"]:
             out["folded_through"] = self.state.manifest()["folded_through"]
+            out["versions_behind"] = self.table.version() - out["folded_through"]
         return out

@@ -1,21 +1,21 @@
 """spark-submit entry point: maintain a durable materialized aggregate
-view from the lake table's change feed — the dashboard-style consumer
-of the CDC engine's output.
+view over the lake table — the dashboard-style consumer of the CDC
+engine's output. From the checkout root:
 
-    cd /root/repo && zip -qr /tmp/engine.zip debezium_incubator_spark
+    zip -qr /tmp/engine.zip debezium_incubator_spark
     spark-submit --master <cluster> --py-files /tmp/engine.zip \
         jobs/view_maintain_job.py \
         --table /data/files --view /data/files_by_repo \
         --group-cols repo --measure-cols size_bytes --extreme-cols size_bytes
 
-Each run folds every table version committed since the view's
-``folded_through`` in ONE apply (change-feed deltas telescope across
-versions — operators/views.py). Exactly-once: the folded-through
-version rides the same manifest commit as the new view state, so a
-crash mid-run leaves the previous view current and the retry re-derives
-the identical feed from the immutable table versions. Safe to re-run
-any time; a caught-up run is a no-op. ``--expire-keep`` reclaims
-superseded view states afterwards (keep ≥2 for concurrent readers).
+Each run brings the view to the table's current version by
+re-aggregating only the buckets whose files changed since the view's
+``folded_through`` (operators/views.py). Exactly-once: the
+folded-through version rides the same manifest commit as the new view
+state, so a crash mid-run leaves the previous view current and the
+retry recomputes from the immutable table version. Safe to re-run any
+time; a caught-up run is a no-op. ``--expire-keep`` reclaims superseded
+view states afterwards (keep ≥2 for concurrent readers).
 """
 
 from __future__ import annotations
@@ -35,12 +35,10 @@ def main():
     p.add_argument("--group-cols", required=True, help="comma-separated")
     p.add_argument("--measure-cols", help="comma-separated (empty = count-only view)")
     p.add_argument("--extreme-cols", help="comma-separated min/max columns")
-    p.add_argument("--key-cols", help="override the table's bucket cols as the row key")
     p.add_argument(
         "--rebuild",
         action="store_true",
-        help="full rebuild at the current table version (recovery after "
-        "the table expired versions past folded_through)",
+        help="full rebuild at the current table version",
     )
     p.add_argument("--expire-keep", type=int, default=0,
                    help="if >0, expire superseded view states, keeping N")
@@ -65,7 +63,6 @@ def main():
         group_cols=_cols(args.group_cols),
         measure_cols=_cols(args.measure_cols),
         extreme_cols=_cols(args.extreme_cols),
-        key_cols=_cols(args.key_cols) or None,
     )
 
     actions = []

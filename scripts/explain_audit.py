@@ -7,6 +7,8 @@ paths and assert the plan properties the 100 TB design depends on:
   the target side) as a bare key projection, and its write evaluates the
   unwrap UDF exactly once;
 * the LWW hash aggregate runs as partial + final (map-side combine);
+* a view refresh after a one-bucket commit scans only that bucket's
+  files, with no join and one aggregate exchange;
 * the orchestrator's per-trigger stats collect over 16 tables is one
   partial/final hash aggregate, JVM-only, with every generated method
   under the huge-method limit;
@@ -313,6 +315,40 @@ def main():
              r"HashAggregate(?:(.|\n))*Exchange(?:(.|\n))*HashAggregate"),
         ],
     ))
+
+    # 10b. view refresh: a commit touching ONE bucket of 8 re-aggregates
+    # that bucket alone, read once at the pinned version, and unions the
+    # other buckets' stored partials — no change-feed join, one
+    # aggregate exchange, no other bucket's table files listed
+    from debezium_incubator_spark.operators.views import MaterializedAggView
+
+    rt = LakeTable.create(
+        f"{base}/view_t", cdf_schema, bucket_cols=["repo", "path"], num_buckets=8
+    )
+    rt.commit(rt.with_bucket(crows), replace_buckets=range(8), summary={})
+    mview = MaterializedAggView(
+        spark, f"{base}/view", f"{base}/view_t", group_cols=["repo"], measure_cols=["v"],
+        extreme_cols=["v"],
+    )
+    mview.build()
+    rb0 = rt.read(spark, buckets=[0]).withColumn("v", F.col("v") + 1)
+    rt.commit(rt.with_bucket(rb0), replace_buckets=[0], summary={})
+    refresh_df, _ = mview._next_state(mview.meta(), mview._pin())
+    p10b = plan_of(refresh_df)
+    sections.append((
+        "View refresh (changed buckets re-aggregated, stored partials kept)",
+        p10b,
+        [
+            ("no join anywhere (no change-feed diff)", r"^(?:(?!Join)(.|\n))*$"),
+            ("table scan lists only the changed bucket's files",
+             r"InMemoryFileIndex \[file:[^\]]*view_t/data/[^\]]*_bucket=0[^\]]*\]"),
+            ("no other bucket's files are listed anywhere",
+             r"^(?:(?!_bucket=[1-7])(.|\n))*$"),
+        ],
+    ))
+    n_exch = len(set(re.findall(r"\((\d+)\) Exchange", p10b)))
+    if n_exch != 1:
+        failures.append(f"view refresh plan: {n_exch} Exchange (expected 1)")
 
     # 11. the orchestrator's ONE stats collect per trigger: 16 tables,
     # each resuming with its own replay-guard marks, all looked up in

@@ -1,14 +1,18 @@
-"""Durable materialized aggregate views maintained from the lake's
-change feed (operators/views.py): incremental refresh must land exactly
-on a fresh rebuild, survive restarts via the commit-then-pointer
-manifest, and fail loudly on parameter drift / rewound tables / expired
-history."""
+"""Durable materialized aggregate views kept as per-bucket partials
+(operators/views.py): a refresh must land exactly on a full recompute on
+every path (changed buckets, emptied buckets, schema changes, rewound,
+recreated or expired tables), read only the buckets whose files changed,
+survive restarts via the commit-then-pointer manifest, and fail loudly
+on parameter drift or a renamed folded column."""
+
+import json
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from debezium_incubator_spark.operators import views
+from debezium_incubator_spark.lake.table import LakeTable
+from debezium_incubator_spark.operators.aggregates import agg_view
 from debezium_incubator_spark.operators.views import MaterializedAggView
 from tests.helpers import commit_full_state, mk_lake_table
 
@@ -51,6 +55,33 @@ def _recompute(t, spark):
     )
 
 
+def _assert_recomputed(mv, t, spark):
+    got = mv.read()
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, _recompute(t, spark).select(*got.columns).collect())
+    )
+
+
+def _spy_reads(monkeypatch):
+    """Record the ``buckets`` argument of every LakeTable.read."""
+    seen = []
+    real = LakeTable.read
+
+    def spy(self, spark, version=None, buckets=None, columns=None):
+        seen.append(None if buckets is None else sorted(buckets))
+        return real(self, spark, version=version, buckets=buckets, columns=columns)
+
+    monkeypatch.setattr(LakeTable, "read", spy)
+    return seen
+
+
+def _jobs_during(spark, fn):
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    return out, set(tracker.getJobIdsForGroup(None)) - before
+
+
 def test_refresh_lands_on_rebuild_fixpoint(spark, tmp_path):
     rows0 = [(f"r{i % 3}", f"p{i}", i) for i in range(30)]
     t = _mk(spark, str(tmp_path / "table"), rows0)
@@ -69,10 +100,7 @@ def test_refresh_lands_on_rebuild_fixpoint(spark, tmp_path):
 
     out = mv.refresh()
     assert out == {"folded_versions": 2, "folded_through": 3}
-    fresh = _recompute(t, spark)
-    assert sorted(map(tuple, mv.read().collect())) == sorted(
-        map(tuple, fresh.collect())
-    )
+    _assert_recomputed(mv, t, spark)
 
 
 def test_noop_refresh_commits_nothing(spark, tmp_path):
@@ -101,29 +129,29 @@ def test_param_drift_fails_loudly(spark, tmp_path):
         drifted.refresh()
 
 
-def test_legacy_state_without_key_cols_resumes(spark, tmp_path):
-    """A view state written before key_cols was stamped (hand-written
-    manifest without it) resumes under the resolved bucket_cols default,
-    gets the stamp on its next commit, and still rejects other keys."""
-    import json
-
-    t = _mk(spark, str(tmp_path / "table"), [("r1", "a", 1), ("r2", "b", 2)])
-    _view(spark, tmp_path).build()
-    mpath = tmp_path / "view" / f"v{_view(spark, tmp_path).version()}.json"
+def test_old_layout_state_rebuilt_by_first_refresh(spark, tmp_path, monkeypatch):
+    """A state written before the per-bucket record existed (one row per
+    group, a manifest with ``key_cols`` and ``anchor_sha`` but no bucket
+    record) is rebuilt by its first refresh: every bucket is read and the
+    view equals a full recompute."""
+    t = _mk(spark, str(tmp_path / "table"), [(f"r{i % 3}", f"p{i}", i) for i in range(12)])
+    mv = _view(spark, tmp_path, extreme_cols=["v"])
+    mv.build()
+    mpath = tmp_path / "view" / f"v{mv.version()}.json"
     m = json.loads(mpath.read_text())
-    del m["params"]["key_cols"]
+    old_view = agg_view(t.read(spark), ["repo"], ["v"], ["v"])
+    mv.state.write(old_view, m["view"])
+    del m["bucket_files"], m["fields"]
+    m["anchor_sha"] = "0" * 64
+    m["params"]["key_cols"] = list(KEYS)
     mpath.write_text(json.dumps(m))
 
-    with pytest.raises(ValueError, match="param mismatch"):
-        _view(spark, tmp_path, key_cols=["repo"]).refresh()
-    _commit_state(spark, t, [("r1", "a", 5), ("r2", "b", 2)])
-    mv = _view(spark, tmp_path, key_cols=list(KEYS))
-    assert mv.refresh()["folded_versions"] == 1
-    assert sorted(map(tuple, mv.read().select("repo", "sum_v").collect())) == [
-        ("r1", 5),
-        ("r2", 2),
-    ]
-    assert mv.meta()["params"]["key_cols"] == KEYS
+    _commit_state(spark, t, [(f"r{i % 3}", f"p{i}", i) for i in range(11)])
+    reads = _spy_reads(monkeypatch)
+    assert mv.refresh() == {"folded_versions": 1, "folded_through": 2}
+    assert reads == [sorted(int(b) for b in t.manifest()["buckets"])]
+    assert "bucket_files" in mv.meta()
+    _assert_recomputed(mv, t, spark)
 
 
 def test_state_without_recorded_schema_stays_readable(spark, tmp_path):
@@ -145,28 +173,29 @@ def test_state_without_recorded_schema_stays_readable(spark, tmp_path):
     )
 
 
-def test_rewound_table_fails_loudly(spark, tmp_path, monkeypatch):
+def test_rewound_table_recomputes(spark, tmp_path, monkeypatch):
     t = _mk(spark, str(tmp_path / "table"), [("r1", "a", 1)])
     _commit_state(spark, t, [("r1", "a", 2)])
     mv = _view(spark, tmp_path)
     mv.build()  # folded_through = 2
     monkeypatch.setattr(type(t), "version", lambda self: 1)
-    with pytest.raises(RuntimeError, match="BEHIND"):
-        mv.refresh()
+    assert mv.refresh() == {"folded_versions": 0, "folded_through": 1}
+    _assert_recomputed(mv, t, spark)
+    assert mv.read().collect()[0]["sum_v"] == 1
 
 
-def test_expired_history_fails_with_recovery_hint(spark, tmp_path):
+def test_expired_history_recomputes(spark, tmp_path):
+    """The view reads only the version it pins, so history the table
+    expired past ``folded_through`` is not owed."""
     t = _mk(spark, str(tmp_path / "table"), [("r1", "a", 1)])
     mv = _view(spark, tmp_path)
     mv.build()
     for i in range(4):
         _commit_state(spark, t, [("r1", "a", 10 + i)])
-    t.expire_versions(keep_last=2)  # versions (1..3] gone
-    with pytest.raises(RuntimeError, match="build\\(\\) to re-derive"):
-        mv.refresh()
-    mv.build()  # recovery: full re-derivation at the current version
-    assert mv.meta()["folded_through"] == t.version()
+    t.expire_versions(keep_last=2)  # versions 1..3 gone
+    assert mv.refresh() == {"folded_versions": 4, "folded_through": 5}
     assert mv.read().collect()[0]["sum_v"] == 13
+    _assert_recomputed(mv, t, spark)
 
 
 def test_rename_of_folded_column_in_range_fails_loudly(spark, tmp_path):
@@ -178,7 +207,7 @@ def test_rename_of_folded_column_in_range_fails_loudly(spark, tmp_path):
     mv.build()
     _commit_state(spark, t, [("r1", "a", 2)])
     t.rename_column("v", "val")
-    with pytest.raises(RuntimeError, match="renamed/dropped"):
+    with pytest.raises(RuntimeError, match="renamed/dropped.*build\\(\\)"):
         mv.refresh()
     # recovery: a NEW view under the current schema
     mv2 = MaterializedAggView(
@@ -207,8 +236,9 @@ def test_restart_resumes_from_manifest(spark, tmp_path):
 
 def test_drop_recreate_caught_by_manifest_fingerprint(spark, tmp_path):
     """A recreated table whose NEW chain advanced past folded_through
-    passes the BEHIND check — the anchor fingerprint must catch it or
-    diffs of an unrelated chain fold onto the old view state."""
+    lists different files in every bucket, so the per-bucket file-list
+    hashes mark every bucket changed and the view is recomputed from the
+    new chain — none of the old table's groups survive."""
     import shutil
 
     tdir = str(tmp_path / "table")
@@ -220,30 +250,9 @@ def test_drop_recreate_caught_by_manifest_fingerprint(spark, tmp_path):
     t2 = _mk(spark, tdir, [("rX", "z", 100)])
     for i in range(3):  # advance the NEW chain past folded_through
         _commit_state(spark, t2, [("rX", "z", 100 + i)])
-    with pytest.raises(RuntimeError, match="fingerprint|recreated"):
-        mv.refresh()
-    mv.build()  # recovery re-anchors on the new chain
-    assert mv.read().collect()[0]["sum_v"] == 102
-
-
-def test_chunked_fold_equals_single_apply(spark, tmp_path, monkeypatch):
-    """MAX_VERSIONS_PER_APPLY bounds the PLAN, not the math: folding
-    1-version chunks must land exactly where one big apply does."""
-    monkeypatch.setattr(views, "MAX_VERSIONS_PER_APPLY", 1)
-    t = _mk(spark, str(tmp_path / "table"), [(f"r{i % 3}", f"p{i}", i) for i in range(12)])
-    mv = _view(spark, tmp_path, extreme_cols=["v"])
-    mv.build()
-    states = [
-        [(f"r{i % 3}", f"p{i}", i * 2) for i in range(10)],
-        [(f"r{i % 3}", f"p{i}", i * 2) for i in range(8)] + [("r7", "n", 70)],
-        [(f"r{i % 3}", f"p{i}", i * 3) for i in range(8)],
-    ]
-    for s in states:
-        _commit_state(spark, t, s)
-    out = mv.refresh()
-    assert out == {"folded_versions": 3, "folded_through": 4}
-    fresh = _recompute(t, spark)
-    assert sorted(map(tuple, mv.read().collect())) == sorted(map(tuple, fresh.collect()))
+    assert mv.refresh() == {"folded_versions": 2, "folded_through": 4}
+    assert [(r["repo"], r["sum_v"]) for r in mv.read().collect()] == [("rX", 102)]
+    _assert_recomputed(mv, t2, spark)
 
 
 def test_rebuild_with_drifted_params_fails_loudly(spark, tmp_path):
@@ -259,17 +268,17 @@ def test_rebuild_with_drifted_params_fails_loudly(spark, tmp_path):
 
 def test_expire_protect_through_keeps_view_history(spark, tmp_path):
     """expire_versions(protect_through=) is the consumer-protection
-    floor: an aggressive keep_last must not reclaim versions a lagging
-    view still needs to fold forward (the changelog GC's lagging-table
-    contract, applied to the version chain)."""
+    floor: an aggressive keep_last keeps every version from the floor on
+    (the changelog GC's lagging-table contract, applied to the version
+    chain). The view itself reads only the version it pins."""
     t = _mk(spark, str(tmp_path / "table"), [("r1", "a", 1)])
     mv = _view(spark, tmp_path)
     mv.build()  # folded_through = 1
     for i in range(5):
         _commit_state(spark, t, [("r1", "a", 10 + i)])
-    # unprotected keep_last=2 would delete v1..v4 and force a rebuild;
-    # the floor keeps everything the view still owes
+    # unprotected keep_last=2 would delete v1..v4
     t.expire_versions(keep_last=2, protect_through=mv.meta()["folded_through"])
+    assert all(LakeTable(t.path).manifest(v) for v in range(1, 7))
     out = mv.refresh()
     assert out == {"folded_versions": 5, "folded_through": 6}
     assert mv.read().collect()[0]["sum_v"] == 14
@@ -303,9 +312,8 @@ def test_follow_drains_and_tails(spark, tmp_path):
 
 
 def test_recreated_at_same_version_not_reported_caught_up(spark, tmp_path):
-    """A recreated chain sitting at EXACTLY folded_through versions
-    passes the BEHIND check and hits the caught-up fast path — the
-    anchor must fire there too, not only when folding."""
+    """A recreated chain sitting at EXACTLY folded_through versions is
+    not "caught up": its files differ, so the view is recomputed."""
     import shutil
 
     tdir = str(tmp_path / "table")
@@ -313,40 +321,112 @@ def test_recreated_at_same_version_not_reported_caught_up(spark, tmp_path):
     _commit_state(spark, t, [("r1", "a", 2)])
     mv = _view(spark, tmp_path)
     mv.build()  # folded_through = 2
+    v = mv.version()
     shutil.rmtree(tdir)
     t2 = _mk(spark, tdir, [("rX", "z", 100)])
     _commit_state(spark, t2, [("rX", "z", 101)])  # new chain also at v2
-    with pytest.raises(RuntimeError, match="fingerprint|recreated"):
-        mv.refresh()
+    assert mv.refresh() == {"folded_versions": 0, "folded_through": 2}
+    assert mv.version() == v + 1
+    _assert_recomputed(mv, t2, spark)
+
+
+def test_refresh_reads_only_changed_buckets(spark, tmp_path, monkeypatch):
+    """A commit that rewrites one bucket makes the refresh read exactly
+    that bucket, once, at the pinned version."""
+    rows = [(f"r{i % 3}", f"p{i}", i) for i in range(40)]
+    t = _mk(spark, str(tmp_path / "table"), rows)
+    mv = _view(spark, tmp_path, extreme_cols=["v"])
+    mv.build()
+    b = 2
+    bumped = t.read(spark, buckets=[b]).withColumn("v", F.col("v") * 100)
+    t.commit(t.with_bucket(bumped), replace_buckets=[b], summary={})
+    reads = _spy_reads(monkeypatch)
+    assert mv.refresh() == {"folded_versions": 1, "folded_through": 2}
+    assert reads == [[b]]
+    _assert_recomputed(mv, t, spark)
+
+
+def test_folded_column_dropped_and_readded_recomputes(spark, tmp_path):
+    """Dropping a folded column and adding one back under the same name
+    gives it a new field id: the old files read NULL for it, although no
+    bucket's file list changed — every bucket must be recomputed."""
+    t = _mk(spark, str(tmp_path / "table"), [(f"r{i % 3}", f"p{i}", i) for i in range(12)])
+    mv = _view(spark, tmp_path, extreme_cols=["v"])
+    mv.build()
+    t.drop_column("v")
+    t.add_column("v", "bigint")
+    assert mv.refresh() == {"folded_versions": 2, "folded_through": 3}
+    got = mv.read().collect()
+    assert {r["sum_v"] for r in got} == {None}
+    _assert_recomputed(mv, t, spark)
+
+
+def test_emptied_bucket_drops_its_groups(spark, tmp_path):
+    """A bucket that deletes empty vanishes from the table manifest; its
+    groups must leave the view with it."""
+    t = _mk(spark, str(tmp_path / "table"), [(f"r{i}", f"p{i}", i) for i in range(12)])
+    mv = _view(spark, tmp_path)
+    mv.build()
+    b = 1
+    gone = {r["repo"] for r in t.read(spark, buckets=[b]).collect()}
+    assert gone
+    t.commit(t.with_bucket(t.read(spark, buckets=[b]).limit(0)), replace_buckets=[b], summary={})
+    assert str(b) not in t.manifest()["buckets"]
+    mv.refresh()
+    assert not gone & {r["repo"] for r in mv.read().collect()}
+    _assert_recomputed(mv, t, spark)
+
+
+def test_add_column_advances_without_spark_job(spark, tmp_path):
+    """A commit that changes no file and no folded column advances
+    ``folded_through`` by a manifest-only commit."""
+    t = _mk(spark, str(tmp_path / "table"), [("r1", "a", 1), ("r2", "b", 2)])
+    mv = _view(spark, tmp_path)
+    mv.build()
+    v, view_dir = mv.version(), mv.meta()["view"]
+    t.add_column("note", "string")
+    out, jobs = _jobs_during(spark, mv.refresh)
+    assert out == {"folded_versions": 1, "folded_through": 2}
+    assert not jobs, sorted(jobs)
+    assert mv.version() == v + 1 and mv.meta()["view"] == view_dir
+    _assert_recomputed(mv, t, spark)
+
+
+def test_metrics_versions_behind(spark, tmp_path):
+    """``metrics()`` reports the view's lag in table versions from the
+    manifests alone."""
+    t = _mk(spark, str(tmp_path / "table"), [("r1", "a", 1)])
+    mv = _view(spark, tmp_path)
+    mv.build()
+    _commit_state(spark, t, [("r1", "a", 2)])
+    _commit_state(spark, t, [("r1", "a", 3)])
+    m, jobs = _jobs_during(spark, mv.metrics)
+    assert m["versions_behind"] == 2
+    assert not jobs, sorted(jobs)
+    mv.refresh()
+    assert mv.metrics()["versions_behind"] == 0
 
 
 def test_refresh_job_budget(spark, tmp_path):
-    """The fixed cost of a view refresh is its Spark jobs: one refresh of
-    a chunk that dethrones a max (and updates and inserts elsewhere) on
-    an extreme-column view runs at most ``budget`` jobs — the fold's one
-    materialization, its one dethrone probe, the recompute and the view
-    write. The change feed is not materialized on its own, no action
-    asks whether anything was retracted, and the stored view is read
-    with its recorded schema (no inference job). Counted from the status
+    """The fixed cost of a view refresh is its Spark jobs: one refresh
+    that deletes a group's max (and updates and inserts elsewhere) on an
+    extreme-column view runs at most ``budget`` jobs — the changed
+    buckets' aggregate exchange and the state write. There is no change
+    feed, fold or dethrone scan, and the stored partials are read with
+    their recorded schema (no inference job). Counted from the status
     tracker's job ids around the second refresh (the first one warms the
     session)."""
-    budget = 9
+    budget = 2
     rows = [(f"r{i % 4}", f"p{i}", i) for i in range(400)]
     t = _mk(spark, str(tmp_path / "table"), rows)
     mv = _view(spark, tmp_path, extreme_cols=["v"])
     mv.build()
     _commit_state(spark, t, rows[:390])  # deletes every group's max
     mv.refresh()
-    # a dethroning chunk: r1's max (p389) is deleted, r0's rows doubled,
-    # one new group
+    # r1's max (p389) is deleted, r0's rows doubled, one new group
     s2 = [(r, p, v * 2 if r == "r0" else v) for r, p, v in rows[:389]]
     _commit_state(spark, t, s2 + [("r9", "new", 7)])
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    out = mv.refresh()
-    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    out, jobs = _jobs_during(spark, mv.refresh)
     assert out == {"folded_versions": 1, "folded_through": 3}
-    assert sorted(map(tuple, mv.read().collect())) == sorted(
-        map(tuple, _recompute(t, spark).collect())
-    )
+    _assert_recomputed(mv, t, spark)
     assert len(jobs) <= budget, sorted(jobs)
