@@ -2018,60 +2018,60 @@ ORACLES["scd2_history"] = """
 
 
 def q_incremental_agg_view(spark, sf):
-    """Incremental aggregate-view maintenance (IVM) over the CDC feed:
-    per-group count / exact-long sum / min / max of the CURRENT state,
-    maintained from three change epochs via retraction deltas
-    (operators/aggregates.py) — the old current row of every touched
-    key retracts, the new one inserts, min/max recompute only for
-    touched groups. Oracle = DuckDB group-by over the final LWW state,
-    so any missed retraction, double-count, or stale extreme flips the
-    hash. Measures are cents (round(value*100) as long) because float
-    delta-sums drift from a recompute — and because exact accumulators
-    are the right IVM design at scale anyway."""
-    from debezium_incubator_spark.operators.aggregates import agg_view, agg_view_apply
+    """Incremental aggregate-view maintenance over the CDC-applied table
+    (operators/views.py): per-group count / exact-long sum / min / max
+    of the CURRENT state, kept by a MaterializedAggView over three merge
+    epochs of the events, keyed and bucketed on user_id (an 'error'
+    event deletes its user). The view is built after the first epoch and
+    refreshed after each later one; a refresh re-aggregates only the
+    buckets whose files changed and keeps the stored partials of the
+    rest. The last epoch is the final 4 events, so it rewrites at most 4
+    of the 16 buckets and the last refresh reuses stored partials (the
+    query raises otherwise). Oracle = DuckDB group-by over the final LWW
+    state, so a stale partial, a double count or a stale extreme flips
+    the hash. Measures are cents (round(value*100) as long): the view's
+    accumulators are exact longs."""
+    import tempfile
+
+    from debezium_incubator_spark.lake.table import LakeTable
+    from debezium_incubator_spark.operators.merge import merge_upsert
+    from debezium_incubator_spark.operators.views import MaterializedAggView
 
     ev = _events(spark, sf).select(
         "user_id",
-        "event_id",
         "event_type",
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
+        "event_id",
         F.when(F.col("event_type") == "error", F.lit("d")).otherwise(F.lit("u")).alias("op"),
     )
     mx = ev.agg(F.max("event_id")).first()[0]
-    c1, c2 = mx // 3, (2 * mx) // 3
-    grp, meas, ext = ["event_type"], ["cents"], ["cents"]
-
-    def lww(batch):
-        return (
-            batch.groupBy("user_id")
-            .agg(F.max_by(F.struct("event_type", "cents", "op"), F.col("event_id")).alias("s"))
-            .select("user_id", "s.event_type", "s.cents", "s.op")
-        )
-
-    state = (
-        lww(ev.filter(F.col("event_id") <= c1))
-        .where(F.col("op") != "d")
-        .drop("op")
-        .localCheckpoint()
+    work = tempfile.mkdtemp(prefix="cdc_aggview_")
+    t = LakeTable.create(
+        f"{work}/table", ev.drop("event_id", "op").schema, bucket_cols=["user_id"], num_buckets=16
     )
-    view = agg_view(state, grp, meas, ext).localCheckpoint()
-    for lo, hi in [(c1, c2), (c2, mx)]:
-        latest = lww(
-            ev.filter((F.col("event_id") > lo) & (F.col("event_id") <= hi))
-        ).localCheckpoint()
-        retracted = state.join(latest.select("user_id"), "user_id", "semi")
-        survivors = state.join(latest.select("user_id"), "user_id", "anti")
-        inserted = latest.where(F.col("op") != "d").drop("op")
-        state = survivors.unionByName(inserted).localCheckpoint()
-        view = agg_view_apply(view, inserted, retracted, grp, meas, ext, state=state)
-    return view.select("event_type", "n_rows", "sum_cents", "min_cents", "max_cents")
+    view = MaterializedAggView(
+        spark, f"{work}/view", t.path,
+        group_cols=["event_type"], measure_cols=["cents"], extreme_cols=["cents"],
+    )
+    for lo, hi in [(-1, mx // 3), (mx // 3, mx - 4), (mx - 4, mx)]:
+        epoch = ev.filter((F.col("event_id") > lo) & (F.col("event_id") <= hi))
+        merge_upsert(t, epoch, ["user_id"], ["event_id"])
+        if view.version():
+            view.refresh()
+        else:
+            view.build()
+    prev, last = (t.manifest(v)["buckets"] for v in (t.version() - 1, t.version()))
+    replaced = [b for b in prev.keys() | last.keys() if prev.get(b) != last.get(b)]
+    if len(replaced) == 16:
+        raise RuntimeError("the last epoch replaced every bucket: no stored partial was reused")
+    return view.read().select("event_type", "n_rows", "sum_cents", "min_cents", "max_cents")
 
 
 QUERIES["incremental_agg_view"] = q_incremental_agg_view
 
 # Final-state recompute: LWW current row per user (latest event; a
 # latest 'error' deletes the user), then one group-by — the fixpoint
-# the incremental fold must land on exactly.
+# the refreshed view must land on exactly.
 ORACLES["incremental_agg_view"] = """
     WITH ranked AS (
       SELECT user_id, event_type, round(value * 100)::BIGINT AS cents,

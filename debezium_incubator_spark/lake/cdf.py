@@ -15,9 +15,10 @@ anything extra:
   insert / delete / update (pre+post image) — identical payloads are
   CoW survivors of the bucket rewrite and emit nothing.
 
-Downstream maintenance (operators/aggregates.py) folds this feed one
-version at a time, so a consumer that crashes mid-fold re-derives the
-identical feed on retry — the table versions are immutable.
+A consumer reads this feed one version at a time, so one that crashes
+mid-read re-derives the identical feed on retry — the table versions
+are immutable. Materialized views do not read it: operators/views.py
+re-aggregates the changed buckets at one pinned version.
 
 Schema evolution caveat: each side is read in its OWN version's schema
 and aligned by column name (missing names → NULL), so a column rename

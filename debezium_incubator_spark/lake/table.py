@@ -56,6 +56,12 @@ def bucket_expr(bucket_cols: list[str], num_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(c) for c in bucket_cols]), F.lit(num_buckets)).cast("int")
 
 
+def _file_identity(st: os.stat_result) -> tuple:
+    """Which file a path names: a rewrite under the same name (always a
+    new file, see _atomic_write) changes its inode, mtime or size."""
+    return st.st_ino, st.st_mtime_ns, st.st_size
+
+
 def _atomic_write(path: str, data: str) -> None:
     tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
@@ -72,12 +78,15 @@ class LakeTable:
         if not os.path.exists(os.path.join(self.meta_dir, "VERSION")):
             raise FileNotFoundError(f"not a LakeTable: {path}")
         # manifests are immutable once written (commit copies, never
-        # mutates), so they cache safely by version — the apply loop
-        # reads the manifest many times per epoch (bucket routing, stats,
-        # schema, commit) and the file list grows with the table; the
-        # VERSION pointer is still re-read on every access, so another
-        # process's commit is picked up immediately
-        self._manifest_cache: dict[int, dict] = {}
+        # mutates), so they cache by version — the apply loop reads the
+        # manifest many times per epoch (bucket routing, stats, schema,
+        # commit) and the file list grows with the table. Each hit is
+        # checked against the file's identity (one stat): a DROP+CREATE
+        # starts another chain under the same version numbers, and an
+        # expired version must read as gone. The VERSION pointer is
+        # re-read on every access, so another process's commit is picked
+        # up immediately
+        self._manifest_cache: dict[int, tuple[tuple, dict]] = {}
 
     # ------------------------------------------------------------------ create
     @staticmethod
@@ -149,22 +158,25 @@ class LakeTable:
 
     def manifest(self, version: int | None = None) -> dict:
         v = self.version() if version is None else version
-        m = self._manifest_cache.get(v)
-        if m is None:
-            with open(os.path.join(self.meta_dir, f"v{v:05d}.json")) as f:
-                m = json.load(f)
-            if len(self._manifest_cache) >= 8:  # bounded: recovery walks few versions
-                try:
-                    # the stats-prefetch thread and the commit thread can
-                    # both be here — eviction is best-effort under races.
-                    # Evict the LOWEST version, not insertion order: under
-                    # concurrent insertion, insertion order could evict the
-                    # hot current version right after it was cached
-                    # (ADVICE r4 — correctness unaffected, re-reads avoided)
-                    self._manifest_cache.pop(min(self._manifest_cache), None)
-                except (ValueError, RuntimeError, KeyError):
-                    pass
-            self._manifest_cache[v] = m
+        path = os.path.join(self.meta_dir, f"v{v:05d}.json")
+        hit = self._manifest_cache.get(v)
+        if hit is not None and hit[0] == _file_identity(os.stat(path)):
+            return hit[1]
+        with open(path) as f:
+            ident = _file_identity(os.fstat(f.fileno()))
+            m = json.load(f)
+        if len(self._manifest_cache) >= 8:  # bounded: recovery walks few versions
+            try:
+                # the stats-prefetch thread and the commit thread can
+                # both be here — eviction is best-effort under races.
+                # Evict the LOWEST version, not insertion order: under
+                # concurrent insertion, insertion order could evict the
+                # hot current version right after it was cached
+                # (ADVICE r4 — correctness unaffected, re-reads avoided)
+                self._manifest_cache.pop(min(self._manifest_cache), None)
+            except (ValueError, RuntimeError, KeyError):
+                pass
+        self._manifest_cache[v] = (ident, m)
         return m
 
     def current_fields(self, manifest: dict | None = None) -> list[dict]:
@@ -565,19 +577,9 @@ class LakeTable:
         self.commit(df, replace_buckets=targets, summary=base)
         return sorted(targets)
 
-    def expire_versions(
-        self, keep_last: int = 2, protect_through: int | None = None
-    ) -> list[int]:
+    def expire_versions(self, keep_last: int = 2) -> list[int]:
         """GC old versions + unreferenced data dirs (reference analog:
         commit-log archive/delete post-processing, QueueProcessor.java:85-106).
-
-        ``protect_through`` is the consumer-protection floor — the same
-        "GC blocked by a lagging consumer" contract the changelog GC has
-        for lagging tables: a change-feed consumer (e.g. a materialized
-        view at ``folded_through=v``) needs every version ≥ v readable
-        to fold forward, so GC keeps from min(keep_last window, v). Pass
-        the MIN folded_through across the table's views; without it, an
-        aggressive expire forces those consumers into a full rebuild.
 
         Runs under the writer lock: a concurrent commit's freshly written
         data/vNNNNN-* dir is unreferenced until _publish, and an unlocked
@@ -585,19 +587,16 @@ class LakeTable:
         with self._writer_lock():
             cur = self.version()
             lo = max(0, cur - keep_last + 1)
-            if protect_through is not None:
-                lo = min(lo, max(0, int(protect_through)))
             keep = set(range(lo, cur + 1))
             live_dirs: set[str] = set()
             for v in keep:
                 try:
                     m = self.manifest(v)
                 except FileNotFoundError:
-                    # ADVICE r5: a stale consumer floor can point at/below
-                    # a version a previous floor-less expire already
-                    # deleted — that version is gone either way; skipping
-                    # it (mirroring VersionedState.expire) keeps
-                    # maintenance alive instead of crashing permanently
+                    # a keep_last larger than the previous run's reaches
+                    # versions that run already deleted — gone either
+                    # way; skipping them (mirroring VersionedState.expire)
+                    # keeps maintenance alive
                     continue
                 for files in m["buckets"].values():
                     for fi in files:
@@ -608,9 +607,6 @@ class LakeTable:
                     v = int(fn[1:6])
                     if v not in keep:
                         os.unlink(os.path.join(self.meta_dir, fn))
-                        # an expired version must read as gone, not be
-                        # served from the immutable-manifest cache
-                        self._manifest_cache.pop(v, None)
                         removed.append(v)
             data_dir = os.path.join(self.path, "data")
             for d in os.listdir(data_dir):

@@ -4,9 +4,13 @@ per-bucket partial aggregates.
 Closes the loop the reference leaves to its consumers: the CDC engine
 lands row-level state in the LakeTable's hash buckets; this module keeps
 a DURABLE per-group aggregate of that state (count, exact long sums,
-min/max — operators/aggregates.py) with its own commit-then-pointer
-manifest, so a dashboard-style consumer reads an always-fresh aggregate
-without rescanning the table.
+min/max — ``agg_view``) with its own commit-then-pointer manifest, so a
+dashboard-style consumer reads an always-fresh aggregate without
+rescanning the table. This is the one incremental-aggregate path.
+
+Accumulators are EXACT (longs): floating-point sums drift with the order
+rows are added in, so money-like doubles should be scaled to integral
+units by the caller (the contract oracle uses cents).
 
 State: one row per ``(source _bucket, group)`` holding the partial
 aggregates of that bucket's rows at ``folded_through``. The manifest
@@ -61,7 +65,35 @@ from debezium_incubator_spark.functions._state import VersionedState
 # this name, so it stays importable from this module
 from debezium_incubator_spark.lake.cdf import table_changes  # noqa: F401
 from debezium_incubator_spark.lake.table import BUCKET_COL, LakeTable
-from debezium_incubator_spark.operators.aggregates import COUNT_COL, agg_view
+
+COUNT_COL = "n_rows"
+
+
+def _aggs(count, measure_cols: list[str], extreme_cols: list[str], src) -> list:
+    """The view's aggregate list: ``count`` as COUNT_COL, then
+    ``sum_*`` per measure and ``min_*``/``max_*`` per extreme column over
+    the columns ``src(kind, c)`` names."""
+    return [
+        count.cast("long").alias(COUNT_COL),
+        *[F.sum(src("sum", c)).cast("long").alias(f"sum_{c}") for c in measure_cols],
+        *[
+            a
+            for c in extreme_cols
+            for a in (F.min(src("min", c)).alias(f"min_{c}"), F.max(src("max", c)).alias(f"max_{c}"))
+        ],
+    ]
+
+
+def agg_view(
+    state: DataFrame,
+    group_cols: list[str],
+    measure_cols: list[str],
+    extreme_cols: list[str] | None = None,
+) -> DataFrame:
+    """Full aggregate: one partial-aggregated groupBy over ``state``."""
+    return state.groupBy(*group_cols).agg(
+        *_aggs(F.count(F.lit(1)), measure_cols, extreme_cols or [], lambda kind, c: c)
+    )
 
 
 def _files_hash(files: list[dict]) -> str:
@@ -109,7 +141,7 @@ class MaterializedAggView:
         with self.state.mutate():
             if self.state.version() > 0:
                 self.state.manifest()  # params check lives in the read
-            state, record = self._next_state(None, self._pin())
+            state, record = self._next_state(None, self.table.manifest())
             return self._commit(state, record)
 
     def refresh(self) -> dict:
@@ -120,7 +152,7 @@ class MaterializedAggView:
         with self.state.mutate():
             m = self.state.manifest()
             from_v = m["folded_through"]
-            tm = self._pin()
+            tm = self.table.manifest()  # pinned once
             state, record = self._next_state(m, tm)
             if state is not None:
                 self._commit(state, record)
@@ -161,14 +193,6 @@ class MaterializedAggView:
                 return stats
             if out["folded_versions"] == 0:
                 time.sleep(poll_interval_s)
-
-    def _pin(self) -> dict:
-        """The table's manifest at its current version, read through a
-        fresh handle: a handle caches manifests by version number, which
-        holds within one version chain, and a DROP+CREATE starts
-        another."""
-        self.table = LakeTable(self.table.path)
-        return self.table.manifest(self.table.version())
 
     def _next_state(self, m: dict | None, tm: dict) -> tuple[DataFrame | None, dict]:
         """The lazy state frame at table manifest ``tm`` and the manifest
@@ -220,13 +244,12 @@ class MaterializedAggView:
         """The view: the partials re-aggregated by group."""
         parts = self.state.read([self.state.manifest(as_of)["view"]])
         return parts.groupBy(*self.group_cols).agg(
-            F.sum(COUNT_COL).cast("long").alias(COUNT_COL),
-            *[F.sum(f"sum_{c}").cast("long").alias(f"sum_{c}") for c in self.measure_cols],
-            *[
-                a
-                for c in self.extreme_cols
-                for a in (F.min(f"min_{c}").alias(f"min_{c}"), F.max(f"max_{c}").alias(f"max_{c}"))
-            ],
+            *_aggs(
+                F.sum(COUNT_COL),
+                self.measure_cols,
+                self.extreme_cols,
+                lambda kind, c: f"{kind}_{c}",
+            )
         )
 
     def expire(self, keep_last: int = 2) -> list[str]:

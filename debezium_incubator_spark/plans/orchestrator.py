@@ -456,7 +456,6 @@ class MultiTableCDC:
         keep_last: int = 3,
         compact_min_files: int = 4,
         gc_mode: str = "archive",
-        version_floors: dict[str, int] | None = None,
     ) -> dict[str, Any]:
         """Background maintenance across the table set (K4 at the agent
         level ≙ QueueProcessor.java:85-106 post-processing): per-table
@@ -470,23 +469,15 @@ class MultiTableCDC:
         every offset ≤ stream_pos; its keys just never hashed there).
         Only a table with no processed position at all (stream_pos=-1,
         owed a full replay) blocks GC — and is reported via
-        ``gc_blocked_by`` rather than silently skipping.
-
-        ``version_floors`` = {table_name: min folded_through across
-        that table's change-feed consumers (materialized views)} —
-        forwarded to ``expire_versions(protect_through=)`` so version
-        GC never reclaims history a lagging view still owes (the same
-        lagging-consumer contract the shared-changelog GC applies to
-        lagging tables)."""
+        ``gc_blocked_by`` rather than silently skipping."""
         from debezium_incubator_spark.sources.gc import expire_changelog_files
 
         out: dict[str, Any] = {"compacted": {}, "expired_versions": {}, "archived": []}
 
         def maintain_one(name, eng):
             compacted = eng.table.compact(self.spark, min_files=compact_min_files)
-            floor = (version_floors or {}).get(name)
             return compacted, eng.table.expire_versions(
-                keep_last=max(keep_last, RECOVERY_KEEP_LAST), protect_through=floor
+                keep_last=max(keep_last, RECOVERY_KEEP_LAST)
             )
 
         # per-table compaction jobs overlap on the driver thread pool —

@@ -63,12 +63,6 @@ def main():
     p.add_argument("--max-parallel-tables", type=int, default=8,
                    help="driver thread pool driving per-table merges concurrently "
                         "(1 = sequential)")
-    p.add_argument("--version-floors",
-                   help="comma-separated table=version pairs: for each "
-                   "table, the MIN folded_through across its change-feed "
-                   "consumers (materialized views) — --maintain's version "
-                   "GC then never reclaims history a lagging view still "
-                   "owes (expire_versions protect_through)")
     p.add_argument("--maintain", action="store_true",
                    help="after catch-up: per-table compaction/version GC + "
                         "shared-changelog archival (min watermark across tables)")
@@ -132,15 +126,7 @@ def main():
             if s._poller_error is not None:
                 raise s._poller_error
     if args.maintain:
-        floors = None
-        if args.version_floors:
-            floors = {
-                k.strip(): int(v)
-                for k, v in (
-                    pair.split("=", 1) for pair in args.version_floors.split(",")
-                )
-            }
-        orch.maintain(changelog_dir=args.changelog, version_floors=floors)
+        orch.maintain(changelog_dir=args.changelog)
     if server is not None:
         server.stop()
     print(json.dumps(orch.metrics()))

@@ -292,30 +292,6 @@ def main():
         ],
     ))
 
-    # 10. incremental view fold: union-reaggregate, NOT a join — one
-    # partial-aggregated exchange of ~|view|+|batch| rows, skew-proof;
-    # (a broadcast full-outer join is impossible in Spark, so a
-    # join-based fold silently shuffles the view through SMJ).
-    # agg_view_apply materializes this fold, so plan the lazy one
-    from debezium_incubator_spark.operators.aggregates import _fold, agg_view
-
-    vst = spark.createDataFrame(
-        [(i, f"g{i % 5}", i * 10) for i in range(50)], "k int, g string, cents long"
-    )
-    aview = agg_view(vst, ["g"], ["cents"], ["cents"]).localCheckpoint()
-    vins = spark.createDataFrame([(99, "g1", 7)], "k int, g string, cents long")
-    vret = spark.createDataFrame([], "k int, g string, cents long")
-    p10 = plan_of(_fold(aview, vins, vret, ["g"], ["cents"], ["cents"]))
-    sections.append((
-        "Incremental view fold (join-free union-reaggregate)",
-        p10,
-        [
-            ("no join anywhere in the fold", r"^(?:(?!Join)(.|\n))*$"),
-            ("partial-then-final hash aggregate (map-side combine)",
-             r"HashAggregate(?:(.|\n))*Exchange(?:(.|\n))*HashAggregate"),
-        ],
-    ))
-
     # 10b. view refresh: a commit touching ONE bucket of 8 re-aggregates
     # that bucket alone, read once at the pinned version, and unions the
     # other buckets' stored partials — no change-feed join, one
@@ -333,7 +309,7 @@ def main():
     mview.build()
     rb0 = rt.read(spark, buckets=[0]).withColumn("v", F.col("v") + 1)
     rt.commit(rt.with_bucket(rb0), replace_buckets=[0], summary={})
-    refresh_df, _ = mview._next_state(mview.meta(), mview._pin())
+    refresh_df, _ = mview._next_state(mview.meta(), rt.manifest())
     p10b = plan_of(refresh_df)
     sections.append((
         "View refresh (changed buckets re-aggregated, stored partials kept)",

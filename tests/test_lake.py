@@ -243,6 +243,21 @@ def test_expire_versions_gc(spark, tmp_table):
         t.manifest(0)
 
 
+def test_manifest_cache_follows_drop_and_recreate(spark, tmp_table):
+    """A handle that outlives a DROP+CREATE serves the NEW chain's
+    manifests: a cached manifest is checked against its file, not
+    trusted by version number alone."""
+    t = _mk(spark, tmp_table, [("r1", "a", 1)])
+    t.add_column("old_col", "string")
+    old = [t.manifest(v) for v in range(3)]
+    assert LakeTable.drop(tmp_table)
+    t2 = _mk(spark, tmp_table, [("rX", "z", 100)])
+    t2.add_column("new_col", "string")  # the new chain also reaches v2
+    assert t.manifest(2) == t2.manifest(2) != old[2]
+    assert t.current_fields(t.manifest(2))[-1]["name"] == "new_col"
+    assert t.read(spark).collect() == [("rX", "z", 100, None)]
+
+
 def test_compaction_merges_small_files(spark, tmp_table):
     t = _mk(spark, tmp_table, [("r1", f"p{i}", i) for i in range(8)])
     # create file churn: 5 single-row CoW commits into the same buckets

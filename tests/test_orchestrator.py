@@ -1158,32 +1158,3 @@ def test_stop_poller_timeout_raises_then_rejoins(spark, tmp_path):
     s.stop_poller(timeout_s=5.0)  # in-flight work done → clean join
     assert s._poller is None
     s.stop_poller()  # idempotent with no poller
-
-
-def test_maintain_respects_view_version_floors(spark, tmp_path, fixtures):
-    """maintain(version_floors=) forwards a change-feed consumer's
-    folded_through to expire_versions(protect_through=) so version GC
-    never reclaims history a lagging materialized view still owes."""
-    import pytest as _pytest
-
-    src, log = fixtures
-    log_dir = str(tmp_path / "vflog")
-    log.coalesce(1).write.mode("append").parquet(log_dir)
-
-    from debezium_incubator_spark.sources.changelog import ParquetChangelog
-
-    orch = MultiTableCDC(spark, str(tmp_path / "vfroot"), num_buckets=4)
-    orch.create_table("files_00")
-    orch.bootstrap(src)
-    top = int(log.agg(F.max("offset")).first()[0])
-    orch.engines["files_00"].run(
-        TableSlice(ParquetChangelog(log_dir), "files_00"),
-        offsets_per_epoch=top // 4 + 1,
-    )
-    t = orch.engines["files_00"].table
-    assert t.version() >= 4
-    orch.maintain(keep_last=2, version_floors={"files_00": 1})
-    t.manifest(1)  # floor protected the lagging view's owed history
-    orch.maintain(keep_last=2)  # no floor → normal window applies
-    with _pytest.raises(FileNotFoundError):
-        t.manifest(1)

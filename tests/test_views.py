@@ -12,8 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from debezium_incubator_spark.lake.table import LakeTable
-from debezium_incubator_spark.operators.aggregates import agg_view
-from debezium_incubator_spark.operators.views import MaterializedAggView
+from debezium_incubator_spark.operators.views import MaterializedAggView, agg_view
 from tests.helpers import commit_full_state, mk_lake_table
 
 SCHEMA = T.StructType(
@@ -264,24 +263,6 @@ def test_rebuild_with_drifted_params_fails_loudly(spark, tmp_path):
     drifted = _view(spark, tmp_path, group_cols=["path"])
     with pytest.raises(ValueError, match="param mismatch"):
         drifted.build()
-
-
-def test_expire_protect_through_keeps_view_history(spark, tmp_path):
-    """expire_versions(protect_through=) is the consumer-protection
-    floor: an aggressive keep_last keeps every version from the floor on
-    (the changelog GC's lagging-table contract, applied to the version
-    chain). The view itself reads only the version it pins."""
-    t = _mk(spark, str(tmp_path / "table"), [("r1", "a", 1)])
-    mv = _view(spark, tmp_path)
-    mv.build()  # folded_through = 1
-    for i in range(5):
-        _commit_state(spark, t, [("r1", "a", 10 + i)])
-    # unprotected keep_last=2 would delete v1..v4
-    t.expire_versions(keep_last=2, protect_through=mv.meta()["folded_through"])
-    assert all(LakeTable(t.path).manifest(v) for v in range(1, 7))
-    out = mv.refresh()
-    assert out == {"folded_versions": 5, "folded_through": 6}
-    assert mv.read().collect()[0]["sum_v"] == 14
 
 
 def test_follow_drains_and_tails(spark, tmp_path):
