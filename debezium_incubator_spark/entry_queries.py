@@ -523,6 +523,18 @@ def q_multimodal_features(spark, sf):
 # uid is row-identical.
 import os as _os
 
+
+def _work_dir(name: str) -> str:
+    """A query's engine work dir: fixed per uid like the oracle dirs and
+    emptied at each call, so repeated runs leave one dir per query."""
+    import shutil
+
+    path = f"/tmp/{name}_{_os.getuid()}"
+    shutil.rmtree(path, ignore_errors=True)
+    _os.makedirs(path)
+    return path
+
+
 CDC_REPLAY_ORACLE_DIR = f"/tmp/cdc_replay_oracle_{_os.getuid()}"
 
 
@@ -533,7 +545,6 @@ def q_cdc_pipeline_replay(spark, sf):
     consumes those files; the oracle SQL reads the same files and
     recomputes the final table state independently (LWW by offset,
     deletes/tombstones drop the key, sha256 invariant)."""
-    import tempfile
 
     from debezium_incubator_spark.plans.pipeline import CDCEngine
     from debezium_incubator_spark.sources.changelog import ParquetChangelog
@@ -546,7 +557,7 @@ def q_cdc_pipeline_replay(spark, sf):
     gen_changelog(spark, n_keys=300, n_repos=10, n_slots=1200).write.mode(
         "overwrite"
     ).parquet(f"{base}/changelog")
-    work = tempfile.mkdtemp(prefix="cdc_entry_")
+    work = _work_dir("cdc_entry")
     eng = CDCEngine(spark, f"{work}/table", f"{work}/ckpt", num_buckets=8)
     eng.create_target()
     eng.bootstrap(spark.read.parquet(f"{base}/source"))
@@ -564,7 +575,6 @@ def q_multi_table_replay(spark, sf):
     SnapshotProcessor.java:132-137). The oracle recomputes each table's
     final state independently from the same parquet files, partitioned
     by the routing field."""
-    import tempfile
 
     from debezium_incubator_spark.plans.orchestrator import MultiTableCDC
     from debezium_incubator_spark.sources.changelog import ParquetChangelog
@@ -577,7 +587,7 @@ def q_multi_table_replay(spark, sf):
     gen_changelog(spark, n_keys=300, n_repos=10, n_slots=1200, n_tables=2).write.mode(
         "overwrite"
     ).parquet(f"{base}/changelog")
-    work = tempfile.mkdtemp(prefix="cdc_multi_")
+    work = _work_dir("cdc_multi")
     orch = MultiTableCDC(spark, work, num_buckets=8)
     orch.create_table("files_00")
     orch.create_table("files_01")
@@ -1109,7 +1119,6 @@ def q_ann_ivf_index_topk(spark, sf):
     the centroid SOURCE restricted to the build subset — green means
     the frozen-centroid append semantics, the partitioned list storage,
     and the pruned search all compose to the exact IVF answer."""
-    import tempfile
 
     from debezium_incubator_spark.functions.ann_index import IVFIndex
 
@@ -1117,7 +1126,7 @@ def q_ann_ivf_index_topk(spark, sf):
         "embedding", F.col("embedding").cast("array<double>")
     )
     idx = IVFIndex(
-        spark, tempfile.mkdtemp(prefix="ivf_idx_"), init="hash_sample"
+        spark, _work_dir("ivf_idx"), init="hash_sample"
     )
     idx.build(emb.filter(F.col("vec_id") % 10 < 7))
     idx.add(emb.filter((F.col("vec_id") % 10).isin(7, 8)), strict=False)
@@ -1228,7 +1237,6 @@ def q_ddl_channel_replay(spark, sf):
     was dropped and later superseded, so the query also checks each
     table's applied-event count before returning."""
     import shutil
-    import tempfile
     import time
 
     from debezium_incubator_spark.plans.orchestrator import (
@@ -1251,7 +1259,7 @@ def q_ddl_channel_replay(spark, sf):
         f"{base}/changelog"
     )
 
-    work = tempfile.mkdtemp(prefix="cdc_ddlch_")
+    work = _work_dir("cdc_ddlch")
     orch = MultiTableCDC(spark, f"{work}/root", num_buckets=8)
     orch.create_table("files_00")
     orch.bootstrap(spark.read.parquet(f"{base}/source"))
@@ -1339,7 +1347,6 @@ def q_evolution_replay(spark, sf):
     and every post-restart update leaves ``language`` NULL, failing the
     value hash. The oracle is rename-agnostic: plain LWW over
     snapshot ∪ changelog with lang aliased to language."""
-    import tempfile
 
     from debezium_incubator_spark.plans.pipeline import CDCEngine
     from debezium_incubator_spark.sources.changelog import ParquetChangelog
@@ -1352,7 +1359,7 @@ def q_evolution_replay(spark, sf):
     gen_changelog(spark, n_keys=300, n_repos=10, n_slots=1200).write.mode(
         "overwrite"
     ).parquet(f"{base}/changelog")
-    work = tempfile.mkdtemp(prefix="cdc_evo_")
+    work = _work_dir("cdc_evo")
     eng = CDCEngine(spark, f"{work}/table", f"{work}/ckpt", num_buckets=8)
     eng.create_target()
     eng.bootstrap(spark.read.parquet(f"{base}/source"))
@@ -1406,7 +1413,6 @@ def q_partial_image_merge(spark, sf):
     by the LAST event that SET that field (op 'c' and full images set
     everything), else the initial snapshot value — exactly the chained
     coalesce `operators/merge.py:_coalesce_partial` performs."""
-    import tempfile
 
     from debezium_incubator_spark.lake.table import LakeTable
     from debezium_incubator_spark.operators.merge import merge_upsert
@@ -1417,7 +1423,7 @@ def q_partial_image_merge(spark, sf):
     initial.write.mode("overwrite").parquet(f"{base}/initial")
     events.write.mode("overwrite").parquet(f"{base}/events")
 
-    work = tempfile.mkdtemp(prefix="cdc_partial_")
+    work = _work_dir("cdc_partial")
     init_df = spark.read.parquet(f"{base}/initial")
     t = LakeTable.create(
         f"{work}/table", init_df.schema, bucket_cols=["repo", "path"], num_buckets=8
@@ -1484,7 +1490,6 @@ def q_archived_heal_replay(spark, sf):
     changelog — including the rows the engine could only have read from
     the archive."""
     import shutil
-    import tempfile
     import time
 
     from debezium_incubator_spark.plans.orchestrator import (
@@ -1505,7 +1510,7 @@ def q_archived_heal_replay(spark, sf):
         f"{base}/changelog"
     )
 
-    work = tempfile.mkdtemp(prefix="cdc_archheal_")
+    work = _work_dir("cdc_archheal")
     orch = MultiTableCDC(spark, f"{work}/root", num_buckets=8)
     orch.create_table("files_00")
     orch.bootstrap(spark.read.parquet(f"{base}/source"))
@@ -1581,7 +1586,6 @@ def q_partial_image_engine_replay(spark, sf):
     updates inside one epoch, so this oracle is red unless the merge
     folds field-wise intra-epoch (review r5-2 #1) — winner-only LWW
     would drop the earlier events' set fields."""
-    import tempfile
 
     from debezium_incubator_spark.plans.pipeline import CDCEngine
     from debezium_incubator_spark.sources.generator import gen_partial_updates
@@ -1593,7 +1597,7 @@ def q_partial_image_engine_replay(spark, sf):
     initial.write.mode("overwrite").parquet(f"{base}/initial")
     events.write.mode("overwrite").parquet(f"{base}/events")
 
-    work = tempfile.mkdtemp(prefix="cdc_pie_")
+    work = _work_dir("cdc_pie")
     eng = CDCEngine(
         spark, f"{work}/table", f"{work}/ckpt", num_buckets=8,
         normalize=False, after_set_col="after_set",
@@ -1660,7 +1664,6 @@ def q_partial_image_delete_replay(spark, sf):
     delete count, the initial snapshot value survives only for
     never-deleted keys, and a key is alive iff never deleted or
     revived after its last delete."""
-    import tempfile
 
     from debezium_incubator_spark.plans.pipeline import CDCEngine
     from debezium_incubator_spark.sources.generator import gen_partial_updates
@@ -1672,7 +1675,7 @@ def q_partial_image_delete_replay(spark, sf):
     initial.write.mode("overwrite").parquet(f"{base}/initial")
     events.write.mode("overwrite").parquet(f"{base}/events")
 
-    work = tempfile.mkdtemp(prefix="cdc_pid_")
+    work = _work_dir("cdc_pid")
     eng = CDCEngine(
         spark, f"{work}/table", f"{work}/ckpt", num_buckets=8,
         normalize=False, after_set_col="after_set",
@@ -1931,7 +1934,6 @@ def q_incremental_dedup_clusters(spark, sf):
     propagation) flips 124 of 500 sf0.01 rows red; pytest pins the
     same property on a 3-doc bridge
     (tests/test_dedup_incremental.py::test_bridging_doc_merges_old_clusters)."""
-    import tempfile
 
     from debezium_incubator_spark.functions.dedup_incremental import (
         IncrementalDedupIndex,
@@ -1940,7 +1942,7 @@ def q_incremental_dedup_clusters(spark, sf):
     docs = _docs(spark, sf).select("doc_id", "text")
     part = F.pmod(F.xxhash64("doc_id", F.lit("incsplit")), F.lit(10))
     idx = IncrementalDedupIndex(
-        spark, tempfile.mkdtemp(prefix="inc_dedup_"), min_overlap=3
+        spark, _work_dir("inc_dedup"), min_overlap=3
     )
     idx.build(docs.filter(part < 7))
     idx.add(docs.filter(part.isin(7, 8)), strict=False)
@@ -2031,7 +2033,6 @@ def q_incremental_agg_view(spark, sf):
     state, so a stale partial, a double count or a stale extreme flips
     the hash. Measures are cents (round(value*100) as long): the view's
     accumulators are exact longs."""
-    import tempfile
 
     from debezium_incubator_spark.lake.table import LakeTable
     from debezium_incubator_spark.operators.merge import merge_upsert
@@ -2045,7 +2046,7 @@ def q_incremental_agg_view(spark, sf):
         F.when(F.col("event_type") == "error", F.lit("d")).otherwise(F.lit("u")).alias("op"),
     )
     mx = ev.agg(F.max("event_id")).first()[0]
-    work = tempfile.mkdtemp(prefix="cdc_aggview_")
+    work = _work_dir("cdc_aggview")
     t = LakeTable.create(
         f"{work}/table", ev.drop("event_id", "op").schema, bucket_cols=["user_id"], num_buckets=16
     )
@@ -2139,7 +2140,6 @@ def q_lake_change_feed(spark, sf):
     the join classification are all under cross-engine check (same
     write-then-read posture as cdc_pipeline_replay; contents are a pure
     function of the generator seed)."""
-    import tempfile
 
     from debezium_incubator_spark.lake.cdf import (
         CHANGE_TYPE_COL,
@@ -2162,7 +2162,7 @@ def q_lake_change_feed(spark, sf):
     gen_changelog(spark, n_keys=300, n_repos=10, n_slots=600).write.mode(
         "overwrite"
     ).parquet(f"{base}/changelog")
-    work = tempfile.mkdtemp(prefix="cdc_cdf_")
+    work = _work_dir("cdc_cdf")
     eng = CDCEngine(spark, f"{work}/table", f"{work}/ckpt", num_buckets=8)
     eng.create_target()
     eng.bootstrap(spark.read.parquet(f"{base}/source"))

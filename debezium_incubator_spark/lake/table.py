@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from debezium_incubator_spark.lake.checkpoint import _atomic_write
+
 BUCKET_COL = "_bucket"
 
 
@@ -60,15 +62,6 @@ def _file_identity(st: os.stat_result) -> tuple:
     """Which file a path names: a rewrite under the same name (always a
     new file, see _atomic_write) changes its inode, mtime or size."""
     return st.st_ino, st.st_mtime_ns, st.st_size
-
-
-def _atomic_write(path: str, data: str) -> None:
-    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        f.write(data)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
 
 
 class LakeTable:

@@ -41,11 +41,15 @@ from debezium_incubator_spark.plans.pipeline import (
     SnapshotPhaseError,
     prefilter_predicate,
 )
+from debezium_incubator_spark.sources.gc import expire_changelog_files, read_gc_state
 from debezium_incubator_spark.streaming.stream import StreamingCDC
 
 # the fewest table versions maintain() keeps: CDCEngine._reconcile must be
 # able to read the parent of a commit whose checkpoint was lost
 RECOVERY_KEEP_LAST = 2
+
+# the envelope field that routes a shared changelog's rows to their table
+TABLE_FIELD = "source.table"
 
 
 class TableSlice:
@@ -54,17 +58,16 @@ class TableSlice:
     (nested-field predicate pushdown), so each table's epoch reads only
     its pages."""
 
-    def __init__(self, inner, table: str, table_field: str = "source.table"):
+    def __init__(self, inner, table: str):
         self.inner = inner
         self.table = table
-        self.table_field = table_field
 
     def max_offset(self, spark: SparkSession, **kw) -> int:
         return self.inner.max_offset(spark, **kw)
 
     def range(self, spark: SparkSession, start_exclusive: int, end_inclusive: int) -> DataFrame:
         df = self.inner.range(spark, start_exclusive, end_inclusive)
-        return df.filter(F.col(self.table_field) == F.lit(self.table))
+        return df.filter(F.col(TABLE_FIELD) == F.lit(self.table))
 
 
 # offsets per epoch of a heal replay (StreamingMultiTableCDC)
@@ -321,7 +324,6 @@ class MultiTableCDC:
         changelog,
         offsets_per_epoch: int = 400_000,
         max_epochs: int | None = None,
-        table_field: str = "source.table",
     ) -> dict[str, list[dict]]:
         """Stream every registered table from the shared changelog. Each
         table resumes from ITS OWN checkpointed position — a table added
@@ -330,15 +332,15 @@ class MultiTableCDC:
         concurrently per ``max_parallel_tables``."""
         return self._for_each_engine(
             lambda name, eng: eng.run(
-                TableSlice(changelog, name, table_field),
+                TableSlice(changelog, name),
                 offsets_per_epoch=offsets_per_epoch,
                 max_epochs=max_epochs,
             )
         )
 
-    def apply_batch(self, batch: DataFrame, table_field: str = "source.table") -> None:
+    def apply_batch(self, batch: DataFrame) -> None:
         """Apply ONE shared micro-batch across every registered table —
-        the streaming form of run(), rows routed by ``table_field``.
+        the streaming form of run(), rows routed by ``source.table``.
         Every engine resumes (``CDCEngine.resume``), ONE grouped stats
         collect covers all tables (``_batch_stats``), and each engine
         applies its rows through ``CDCEngine.apply_micro_batch`` — the
@@ -358,7 +360,7 @@ class MultiTableCDC:
         try:
             ckpts = self._for_each_engine(lambda name, eng: eng.resume())
             stats: dict[str, list] = {}
-            for r in self._batch_stats(batch, ckpts, table_field):
+            for r in self._batch_stats(batch, ckpts):
                 stats.setdefault(r["__t"], []).append(r)
             global_top = max(
                 (int(r["raw_hi"]) for rows in stats.values() for r in rows), default=-1
@@ -372,7 +374,7 @@ class MultiTableCDC:
                 if name in ckpts:  # a table attached mid-trigger joins the next one
                     rows = stats.get(name, [])
                     eng.apply_micro_batch(
-                        batch.filter(F.col(table_field) == F.lit(name)) if rows else idle,
+                        batch.filter(F.col(TABLE_FIELD) == F.lit(name)) if rows else idle,
                         rows, global_top, ckpts[name],
                     )
 
@@ -394,7 +396,7 @@ class MultiTableCDC:
         finally:
             batch.unpersist(blocking=False)
 
-    def _batch_stats(self, batch: DataFrame, ckpts: dict[str, dict], table_field: str) -> list:
+    def _batch_stats(self, batch: DataFrame, ckpts: dict[str, dict]) -> list:
         """ONE ``batch_stats_rows`` collect for every table, grouped by
         (``__t`` = the table field, bucket): per group the raw offset
         bounds and the merge stats of the rows that table's prefilter and
@@ -409,7 +411,7 @@ class MultiTableCDC:
         configuration takes the ELSE branch. Rows of unregistered tables
         get it too, and form groups no engine reads (they still count
         toward the batch top)."""
-        t = F.col(table_field)
+        t = F.col(TABLE_FIELD)
         engines = {name: self.engines[name] for name in ckpts}
 
         def per_config(config_of, expr_of, default):
@@ -450,34 +452,25 @@ class MultiTableCDC:
             return -1
 
     # ------------------------------------------------------------- maintenance
-    def maintain(
-        self,
-        changelog_dir: str | None = None,
-        keep_last: int = 3,
-        compact_min_files: int = 4,
-        gc_mode: str = "archive",
-    ) -> dict[str, Any]:
+    def maintain(self, changelog_dir: str | None = None) -> dict[str, Any]:
         """Background maintenance across the table set (K4 at the agent
         level ≙ QueueProcessor.java:85-106 post-processing): per-table
         small-file compaction + version GC, then SHARED-changelog GC.
 
         The shared changelog serves EVERY table, so a segment is
-        expendable only when every table has processed past it — the
-        combined watermark is the min across all tables' per-bucket
-        marks, where a bucket with no mark counts as processed through
-        its table's stream_pos (ordered delivery guarantees it has seen
-        every offset ≤ stream_pos; its keys just never hashed there).
-        Only a table with no processed position at all (stream_pos=-1,
-        owed a full replay) blocks GC — and is reported via
-        ``gc_blocked_by`` rather than silently skipping."""
-        from debezium_incubator_spark.sources.gc import expire_changelog_files
-
+        expendable only when every table has processed past it — the GC
+        watermark is the min over the tables' reconciled ``stream_pos``
+        (ordered delivery: a table at ``stream_pos`` has processed every
+        offset ≤ it, in every bucket). Only a table with no processed
+        position at all (stream_pos=-1, owed a full replay) blocks GC —
+        and is reported via ``gc_blocked_by`` rather than silently
+        skipping."""
         out: dict[str, Any] = {"compacted": {}, "expired_versions": {}, "archived": []}
 
         def maintain_one(name, eng):
-            compacted = eng.table.compact(self.spark, min_files=compact_min_files)
-            return compacted, eng.table.expire_versions(
-                keep_last=max(keep_last, RECOVERY_KEEP_LAST)
+            # one version of slack over what crash recovery needs
+            return eng.table.compact(self.spark), eng.table.expire_versions(
+                keep_last=RECOVERY_KEEP_LAST + 1
             )
 
         # per-table compaction jobs overlap on the driver thread pool —
@@ -486,54 +479,28 @@ class MultiTableCDC:
         for name, (compacted, expired) in self._for_each_engine(maintain_one).items():
             out["compacted"][name] = compacted
             out["expired_versions"][name] = expired
-        if changelog_dir:
-            combined: dict[str, int] = {}
-            for name, eng in self.engines.items():
-                ckpt = eng._reconcile(eng.store.latest())
-                marks = ckpt.get("max_offsets", {})
-                stream_pos = int(ckpt.get("stream_pos", -1))
-                nb = eng.table.manifest()["num_buckets"]
-                for b in range(nb):
-                    v = marks.get(str(b))
-                    # by the ordered-delivery contract EVERY bucket has
-                    # processed every offset ≤ the table's stream_pos —
-                    # a bucket's mark (its max SEEN offset) can sit well
-                    # below that when its keys are quiet, and a bucket
-                    # with no mark at all just never hashed a key. So
-                    # the per-bucket watermark is max(mark, stream_pos):
-                    # a bucket-incomplete table no longer blocks
-                    # archival forever (≙ the reference archiving each
-                    # log as soon as it is fully processed,
-                    # QueueProcessor.java:98-102). A table that has
-                    # never streamed (stream_pos=-1, e.g. just
-                    # DDL-provisioned and owed a full-history replay)
-                    # contributes -1 and legitimately blocks GC.
-                    combined[f"{name}:{b}"] = (
-                        max(int(v), stream_pos) if v is not None else stream_pos
-                    )
-            if combined:
-                low_key = min(combined, key=combined.get)
-                if combined[low_key] < 0:
-                    # never silently skip: tell the operator WHY the
-                    # changelog keeps growing (ADVICE r3 #5)
-                    out["gc_blocked_by"] = low_key.split(":", 1)[0]
-                    warnings.warn(
-                        f"shared-changelog GC blocked: table "
-                        f"{out['gc_blocked_by']} has no processed position yet "
-                        f"(stream_pos=-1, awaiting its history replay)"
-                    )
-                else:
-                    counters: dict[str, int] = {}
-                    out["archived"] = expire_changelog_files(
-                        changelog_dir,
-                        combined,
-                        num_buckets=len(combined),
-                        mode=gc_mode,
-                        counters=counters,
-                    )
-                    out["gc_counters"] = counters
-                    out["gc_watermark"] = combined[low_key]
-                    out["gc_watermark_table"] = low_key.split(":", 1)[0]
+        if changelog_dir and self.engines:
+            pos = {
+                name: int(eng._reconcile(eng.store.latest()).get("stream_pos", -1))
+                for name, eng in self.engines.items()
+            }
+            low = min(pos, key=pos.get)
+            if pos[low] < 0:
+                # never silently skip: tell the operator WHY the
+                # changelog keeps growing (ADVICE r3 #5)
+                out["gc_blocked_by"] = low
+                warnings.warn(
+                    f"shared-changelog GC blocked: table {low} has no processed "
+                    f"position yet (stream_pos=-1, awaiting its history replay)"
+                )
+            else:
+                counters: dict[str, int] = {}
+                out["archived"] = expire_changelog_files(
+                    changelog_dir, pos[low], counters=counters
+                )
+                out["gc_counters"] = counters
+                out["gc_watermark"] = pos[low]
+                out["gc_watermark_table"] = low
         return out
 
     # ------------------------------------------------------------- reads / metrics
@@ -664,33 +631,18 @@ class StreamingMultiTableCDC(StreamingCDC):
         untouched and nothing is redelivered (≙ a CommitLogTransfer
         that can hand segments back, CommitLogPostProcessor.java:38-55;
         ``gc.restore_archived`` is the operator-facing move-back form).
-        Only genuinely-unrecoverable history still warns: a DELETE-mode
-        GC pass recorded ``deleted_through`` (review r5 #4 — an archive
-        directory with files does NOT prove the whole owed span is
-        there: an earlier delete-mode pass may have unlinked the head),
-        or the archive mark is set but the directory is empty (operator
-        pruned it)."""
-        try:
-            with open(os.path.join(self.changelog_dir, "_gc_state.json")) as f:
-                state = json.load(f)
-            at = int(state.get("archived_through", -1))
-            dt = int(state.get("deleted_through", -1))
-        except (FileNotFoundError, ValueError):
-            at = dt = -1  # no GC state — but _archive/ may still hold
-            # segments (e.g. reprocess_errors restored repaired ones
-            # there): serve whatever exists, marks only drive warnings
+        Only genuinely-unrecoverable history still warns: the archive
+        mark is set but the directory is empty (operator pruned it)."""
+        # no GC state — but _archive/ may still hold segments (e.g.
+        # reprocess_errors restored repaired ones there): serve whatever
+        # exists, the mark only drives the warning
+        at = int(read_gc_state(self.changelog_dir).get("archived_through", -1))
         archive = os.path.join(self.changelog_dir, "_archive")
         try:
             has_files = any(fn.endswith(".parquet") for fn in os.listdir(archive))
         except FileNotFoundError:
             has_files = False
-        if dt >= 0:
-            warnings.warn(
-                f"heal: changelog offsets ≤ {dt} were removed by "
-                f"delete-mode GC — healed tables may be missing that history "
-                f"(use gc mode='archive' to keep history healable)"
-            )
-        elif at >= 0 and not has_files:
+        if at >= 0 and not has_files:
             warnings.warn(
                 f"heal: changelog offsets ≤ {at} were archived by "
                 f"GC but _archive/ holds no segments — healed tables may be "

@@ -6,27 +6,47 @@ moved to archive/ or error/, or deleted by the default CommitLogTransfer
 BlackHoleCommitLogTransfer.java:13-24).
 
 Our changelog is parquet files whose offset ranges are recoverable from
-the parquet footer min/max. A file is GC-eligible once EVERY bucket's
-checkpointed high-water mark is at or above the file's max offset —
-then no replay from the current checkpoint can need it.
+the parquet footer min/max. The GC watermark is one number per consumer:
+its checkpointed ``stream_pos``. Delivery is ordered, so a table at
+``stream_pos`` has processed every offset ≤ it, in every bucket; a file
+whose max offset is ≤ the low watermark over all consumers can be
+archived — no replay from a current checkpoint can need it.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+
+from debezium_incubator_spark.lake.checkpoint import _atomic_write
+
+
+def read_gc_state(changelog_dir: str) -> dict:
+    """The GC's ``_gc_state.json`` record; {} when absent or unreadable."""
+    try:
+        with open(os.path.join(changelog_dir, "_gc_state.json")) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return {}
+
+
+def _write_gc_state(changelog_dir: str, state: dict) -> None:
+    try:
+        _atomic_write(os.path.join(changelog_dir, "_gc_state.json"), json.dumps(state))
+    except OSError:
+        pass  # state is an optimization; next pass restarts the clock
 
 
 def expire_changelog_files(
     changelog_dir: str,
-    max_offsets: dict[str, int],
-    num_buckets: int,
-    mode: str = "archive",  # archive | delete
+    through_offset: int,
     counters: dict | None = None,
     error_grace_s: float = 300.0,
 ) -> list[str]:
-    """Move/delete fully-processed changelog parquet files. Conservative:
-    requires marks for all buckets (otherwise nothing is eligible).
+    """Archive every readable changelog parquet file whose footer max
+    offset is ≤ ``through_offset`` (the consumers' low watermark; -1
+    archives nothing) into ``_archive/``.
 
     A CORRUPT file (unreadable footer) is moved to ``_error/`` and
     counted — the reference's EOF-failure path puts the segment in
@@ -40,28 +60,16 @@ def expire_changelog_files(
         single transient mid-write observation never quarantines);
       * the first unreadable sighting is older than ``error_grace_s``.
     Pass a ``counters`` dict to receive {"archived": n, "errors": n}."""
-    import json
     import time
 
     counters = counters if counters is not None else {}
     counters.setdefault("archived", 0)
     counters.setdefault("errors", 0)
-    if len(max_offsets) < num_buckets:
-        return []
-    low_water = min(int(v) for v in max_offsets.values())
     archive = os.path.join(changelog_dir, "_archive")
     error_dir = os.path.join(changelog_dir, "_error")
-    state_path = os.path.join(changelog_dir, "_gc_state.json")
-    try:
-        with open(state_path) as f:
-            _state = json.load(f)
-        first_seen: dict[str, float] = _state.get("unreadable", {})
-        archived_through = int(_state.get("archived_through", -1))
-        deleted_through = int(_state.get("deleted_through", -1))
-    except Exception:
-        first_seen = {}
-        archived_through = -1
-        deleted_through = -1
+    state = read_gc_state(changelog_dir)
+    first_seen: dict[str, float] = state.get("unreadable", {})
+    archived_through = int(state.get("archived_through", -1))
     seen_this_pass: dict[str, float] = {}
     moved = []
 
@@ -109,42 +117,21 @@ def expire_changelog_files(
             counters["errors"] += 1
             warnings.warn(f"corrupt changelog segment moved to _error/: {fn}")
             continue
-        if int(max_off) <= low_water:
-            if mode == "archive":
-                os.makedirs(archive, exist_ok=True)
-                shutil.move(path, os.path.join(archive, fn))
-            else:
-                os.unlink(path)
+        if int(max_off) <= through_offset:
+            os.makedirs(archive, exist_ok=True)
+            shutil.move(path, os.path.join(archive, fn))
             counters["archived"] += 1
             moved.append(fn)
     if moved:
-        # history ≤ low_water is no longer guaranteed in the LIVE
-        # directory — a later out-of-band catch-up (a table attached
-        # after this GC) cannot replay it from here. Separate monotone
-        # marks per mode (review r5 #4): archived history is servable
-        # from _archive/ in place; DELETED history is gone forever and
-        # must keep catch-up paths warning even when a later
-        # archive-mode pass leaves files in _archive/.
-        if mode == "archive":
-            archived_through = max(archived_through, low_water)
-        else:
-            deleted_through = max(deleted_through, low_water)
+        # history ≤ through_offset is no longer in the LIVE directory — a
+        # later out-of-band catch-up (a table attached after this GC)
+        # reads it from _archive/ instead
+        archived_through = max(archived_through, through_offset)
     # persist first-seen state (files that became readable or were moved
     # drop out automatically: only this pass's sightings are kept)
-    try:
-        tmp = f"{state_path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "unreadable": seen_this_pass,
-                    "archived_through": archived_through,
-                    "deleted_through": deleted_through,
-                },
-                f,
-            )
-        os.replace(tmp, state_path)
-    except OSError:
-        pass  # state is an optimization; next pass restarts the clock
+    _write_gc_state(
+        changelog_dir, {"unreadable": seen_this_pass, "archived_through": archived_through}
+    )
     return moved
 
 
@@ -167,8 +154,6 @@ def reprocess_errors(changelog_dir: str) -> list[str]:
     standard one: rebuild the affected table (DROP+CREATE or fresh
     attach) and the full history — including the repaired span —
     replays exactly once."""
-    import json
-
     from debezium_incubator_spark.sources.changelog import file_footer_offset_max
 
     error_dir = os.path.join(changelog_dir, "_error")
@@ -187,19 +172,10 @@ def reprocess_errors(changelog_dir: str) -> list[str]:
         os.makedirs(archive, exist_ok=True)
         shutil.move(src, os.path.join(archive, fn))
         restored.append(fn)
-    if restored:
-        state_path = os.path.join(changelog_dir, "_gc_state.json")
-        try:
-            with open(state_path) as f:
-                state = json.load(f)
-            for fn in restored:
-                state.get("unreadable", {}).pop(fn, None)
-            tmp = f"{state_path}.tmp.{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump(state, f)
-            os.replace(tmp, state_path)
-        except (OSError, ValueError):
-            pass
+    if restored and (state := read_gc_state(changelog_dir)):
+        for fn in restored:
+            state.get("unreadable", {}).pop(fn, None)
+        _write_gc_state(changelog_dir, state)
     return restored
 
 
@@ -211,8 +187,8 @@ def restore_archived(
     from ``_archive/`` every segment a bounded catch-up needs — any file
     whose footer MIN offset is ≤ ``through_offset`` (None = restore
     everything). Restored files are re-eligible for the NEXT GC pass the
-    moment every table's marks cover them again, so the heal is
-    transient by construction.
+    moment the consumers' low watermark covers them again, so the heal
+    is transient by construction.
 
     Safe against a live streaming source on the same directory: a
     restored file keeps its original name/path, which the file source's
@@ -223,8 +199,6 @@ def restore_archived(
     catch-up paths stop warning; a partial restore keeps the mark
     (history above ``through_offset`` may still be missing — stay loud).
     Returns the restored file names."""
-    import json
-
     from debezium_incubator_spark.sources.changelog import file_footer_offset_min
 
     archive = os.path.join(changelog_dir, "_archive")
@@ -250,18 +224,5 @@ def restore_archived(
     if restored and not any(
         fn.endswith(".parquet") for fn in os.listdir(archive)
     ):
-        state_path = os.path.join(changelog_dir, "_gc_state.json")
-        try:
-            with open(state_path) as f:
-                state = json.load(f)
-        except Exception:
-            state = {}
-        state["archived_through"] = -1
-        try:
-            tmp = f"{state_path}.tmp.{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump(state, f)
-            os.replace(tmp, state_path)
-        except OSError:
-            pass
+        _write_gc_state(changelog_dir, {**read_gc_state(changelog_dir), "archived_through": -1})
     return restored

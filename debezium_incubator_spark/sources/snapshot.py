@@ -8,17 +8,16 @@ point — and emits READ ('r') envelopes
 (OracleSnapshotChangeEventSource.java:110-139, 228-231,
 SnapshotChangeRecordEmitter.java:30-32).
 
-Here the consistent point is a LakeTable version (time travel): the
-version id recorded in the checkpoint *is* the SCN analog, giving a
-lock-free snapshot-then-stream handoff.
+Here the caller hands ``CDCEngine.bootstrap`` a consistent read of the
+source table; its rows become 'r' envelopes at offset -1, so every
+changelog offset orders after them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from debezium_incubator_spark.lake.table import LakeTable
 from debezium_incubator_spark.operators.envelope import OP_READ, build_envelope
 from debezium_incubator_spark.sources.generator import BASE_TS_MS
 
@@ -41,14 +40,3 @@ def snapshot_envelopes(
         snapshot=True,
     )
 
-
-def snapshot_from_lake(
-    spark: SparkSession, table: LakeTable, version: int | None = None
-) -> tuple[DataFrame, int]:
-    """Time-travel snapshot of a LakeTable source; returns (envelopes,
-    version) — the version goes into the checkpoint as the SCN analog."""
-    v = table.version() if version is None else version
-    src = table.read(spark, version=v)
-    payload = [f["name"] for f in table.current_fields(table.manifest(v))]
-    payload = [c for c in payload if c not in ("repo", "path")]
-    return snapshot_envelopes(src, payload_fields=payload), v

@@ -46,7 +46,8 @@ def main():
     p.add_argument("--exclude-regex")
     p.add_argument("--field-blacklist", help="comma-separated payload fields to drop")
     p.add_argument("--expire-changelog", action="store_true",
-                   help="archive fully-processed changelog files after catch-up")
+                   help="after catch-up, archive every changelog file whose offsets "
+                        "are all ≤ the table's stream position")
     args = p.parse_args()
 
     from pyspark.sql import SparkSession
@@ -96,10 +97,7 @@ def main():
     if args.expire_changelog:
         from debezium_incubator_spark.sources.gc import expire_changelog_files
 
-        m = eng.store.latest()
-        expire_changelog_files(
-            args.changelog, m.get("max_offsets", {}), args.num_buckets
-        )
+        expire_changelog_files(args.changelog, eng.metrics()["stream_pos"])
 
     print(json.dumps(eng.metrics()))
     spark.stop()

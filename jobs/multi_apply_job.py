@@ -65,7 +65,8 @@ def main():
                         "(1 = sequential)")
     p.add_argument("--maintain", action="store_true",
                    help="after catch-up: per-table compaction/version GC + "
-                        "shared-changelog archival (min watermark across tables)")
+                        "archival of every shared-changelog file whose offsets "
+                        "are all ≤ the lowest table stream position")
     p.add_argument("--http-port", type=int,
                    help="serve /ping /buildinfo /metrics /health on this port "
                         "while the job runs (M3, ≙ the reference's embedded "

@@ -127,3 +127,18 @@ def commit_full_state(spark, t, rows, schema):
         summary={},
     )
     return t.version()
+
+
+def assert_marks_within_stream_pos(store) -> None:
+    """The changelog-GC watermark rests on this: in every checkpoint with
+    a stream position, no bucket's mark lies above it (ordered delivery),
+    so the table has processed every offset ≤ ``stream_pos``."""
+    checked = 0
+    for e in store.epochs():
+        ck = store.load(e)
+        pos = int(ck.get("stream_pos", -1))
+        if pos >= 0:
+            marks = ck.get("max_offsets", {})
+            assert all(int(v) <= pos for v in marks.values()), (e, pos, marks)
+            checked += 1
+    assert checked, "no checkpoint carries a stream position"

@@ -237,9 +237,7 @@ def test_corrupt_changelog_segment_goes_to_error_dir(spark, tmp_path):
     # grace protects mid-write segments: the freshly-planted corrupt file
     # is skipped on the first pass (the good segment archives normally)
     c1 = {}
-    moved = expire_changelog_files(
-        str(d), {"0": 100, "1": 100}, num_buckets=2, counters=c1
-    )
+    moved = expire_changelog_files(str(d), 100, counters=c1)
     assert moved == ["seg0.parquet"] and c1 == {"archived": 1, "errors": 0}
     assert not (d / "_error").exists()
     # first sighting is persisted; a file NEVER seen unreadable before is
@@ -249,9 +247,7 @@ def test_corrupt_changelog_segment_goes_to_error_dir(spark, tmp_path):
     (d / "stalled.parquet").write_bytes(b"also not parquet")
     os.utime(str(d / "stalled.parquet"), (0, 0))  # ancient mtime
     c15 = {}
-    expire_changelog_files(
-        str(d), {"0": 100, "1": 100}, num_buckets=2, counters=c15, error_grace_s=0.0
-    )
+    expire_changelog_files(str(d), 100, counters=c15, error_grace_s=0.0)
     # corrupt.parquet: second sighting past grace → quarantined;
     # stalled.parquet: first sighting → only recorded
     assert c15 == {"archived": 0, "errors": 1}
@@ -259,9 +255,7 @@ def test_corrupt_changelog_segment_goes_to_error_dir(spark, tmp_path):
     assert (d / "stalled.parquet").exists()
     # ...and the stalled one goes on ITS second sighting past the grace
     c2 = {}
-    expire_changelog_files(
-        str(d), {"0": 100, "1": 100}, num_buckets=2, counters=c2, error_grace_s=0.0
-    )
+    expire_changelog_files(str(d), 100, counters=c2, error_grace_s=0.0)
     assert c2 == {"archived": 0, "errors": 1}
     assert (d / "_error" / "stalled.parquet").exists()
     assert (d / "_archive" / "seg0.parquet").exists()

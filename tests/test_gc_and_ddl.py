@@ -21,11 +21,10 @@ def test_expire_changelog_files(spark, tmp_path):
     lo.coalesce(1).write.mode("append").parquet(d)
     hi.coalesce(1).write.mode("append").parquet(d)
 
-    # incomplete marks → conservative no-op
-    assert expire_changelog_files(d, {"0": 1000}, num_buckets=4) == []
-    # all buckets processed through 50 → only the low file is archived
-    marks = {str(b): 50 for b in range(4)}
-    moved = expire_changelog_files(d, marks, num_buckets=4)
+    # nothing processed yet → no-op
+    assert expire_changelog_files(d, -1) == []
+    # processed through 50 → only the low file is archived
+    moved = expire_changelog_files(d, 50)
     assert len(moved) == 1
     assert os.path.exists(os.path.join(d, "_archive", moved[0]))
     # remaining data still readable and is the high file
@@ -51,8 +50,7 @@ def test_restore_archived(spark, tmp_path):
     for df in (lo, mid, hi):
         df.coalesce(1).write.mode("append").parquet(d)
 
-    marks = {str(b): 80 for b in range(4)}
-    moved = expire_changelog_files(d, marks, num_buckets=4)
+    moved = expire_changelog_files(d, 80)
     assert len(moved) == 2  # lo + mid archived
     with open(os.path.join(d, "_gc_state.json")) as f:
         assert json.load(f)["archived_through"] == 80
@@ -71,39 +69,8 @@ def test_restore_archived(spark, tmp_path):
     with open(os.path.join(d, "_gc_state.json")) as f:
         assert json.load(f)["archived_through"] == -1
     # restored files are re-eligible for the next GC pass
-    moved2 = expire_changelog_files(d, marks, num_buckets=4)
+    moved2 = expire_changelog_files(d, 80)
     assert len(moved2) == 2
-
-
-def test_delete_mode_gc_records_deleted_through(spark, tmp_path):
-    """Review r5 #4: delete-mode GC must record its own mark — archived
-    history is servable from _archive/, DELETED history is gone forever
-    and must keep catch-up paths warning even when a later archive-mode
-    pass leaves files in _archive/."""
-    import json
-
-    d = str(tmp_path / "chlog")
-    lo = mk_events(spark, [{"offset": i, "op": "u", "repo": "r", "path": f"p{i}",
-                            "after": IMG(f"v{i}\n")} for i in range(10)])
-    hi = mk_events(spark, [{"offset": 100 + i, "op": "u", "repo": "r", "path": f"p{i}",
-                            "after": IMG(f"w{i}\n")} for i in range(10)])
-    lo.coalesce(1).write.mode("append").parquet(d)
-    hi.coalesce(1).write.mode("append").parquet(d)
-
-    moved = expire_changelog_files(d, {str(b): 50 for b in range(4)},
-                                   num_buckets=4, mode="delete")
-    assert len(moved) == 1
-    with open(os.path.join(d, "_gc_state.json")) as f:
-        state = json.load(f)
-    assert state["deleted_through"] == 50 and state["archived_through"] == -1
-
-    # a later ARCHIVE-mode pass raises only its own mark
-    moved2 = expire_changelog_files(d, {str(b): 200 for b in range(4)},
-                                    num_buckets=4, mode="archive")
-    assert len(moved2) == 1
-    with open(os.path.join(d, "_gc_state.json")) as f:
-        state = json.load(f)
-    assert state["deleted_through"] == 50 and state["archived_through"] == 200
 
 
 def test_apply_ddl_events(spark, tmp_path):

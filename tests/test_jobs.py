@@ -87,6 +87,41 @@ def test_apply_job_batch_mode(job_fixtures, tmp_path):
     assert m["phase"] == "stream" and m["counters"]["events_in"] > 0
 
 
+def test_apply_job_expire_changelog_archives_through_stream_pos(job_fixtures, tmp_path):
+    """``--expire-changelog`` archives exactly what the table has
+    processed: every segment whose footer max is ≤ its stream_pos, even
+    when some of the 64 buckets never saw a key (no mark)."""
+    import shutil
+
+    from debezium_incubator_spark.sources.changelog import file_footer_offset_max
+
+    d = job_fixtures
+    log = str(tmp_path / "changelog")  # GC moves files: never the shared fixture
+    shutil.copytree(str(d / "changelog"), log)
+    seg_max = {
+        fn: file_footer_offset_max(os.path.join(log, fn))
+        for fn in os.listdir(log)
+        if fn.endswith(".parquet")
+    }
+    m = _run(
+        [
+            f"{REPO}/jobs/apply_job.py",
+            "--table", str(tmp_path / "t"),
+            "--checkpoint", str(tmp_path / "c"),
+            "--changelog", log,
+            "--source", str(d / "source"),
+            "--mode", "batch",
+            "--num-buckets", "64",
+            "--offsets-per-epoch", "2000",
+            "--expire-changelog",
+        ]
+    )
+    assert len(m["max_offsets"]) < 64  # precondition: some bucket carries no mark
+    owed = {fn for fn, hi in seg_max.items() if hi <= m["stream_pos"]}
+    assert owed  # non-vacuous
+    assert set(os.listdir(os.path.join(log, "_archive"))) == owed
+
+
 def test_dedup_index_job_consumes_changelog_and_resumes(spark, job_fixtures, tmp_path):
     """The training-data consumer: maintain a dedup index from the CDC
     changelog via spark-submit-shaped subprocess. Run 1 indexes the

@@ -13,6 +13,7 @@ from debezium_incubator_spark.lake.table import LakeTable
 from debezium_incubator_spark.plans.orchestrator import MultiTableCDC, TableSlice
 from debezium_incubator_spark.sources.changelog import DataFrameChangelog
 from debezium_incubator_spark.sources.generator import gen_changelog, gen_source_table
+from tests.helpers import assert_marks_within_stream_pos
 
 N_KEYS, N_REPOS, N_SLOTS = 200, 8, 600
 
@@ -424,6 +425,8 @@ def test_apply_batch_carries_heartbeat_ckpt_across_triggers(spark, tmp_path, fix
         assert eng.store.latest() == hb  # saved this trigger, not later
         prev = pos
     assert seen == cuts  # each trigger advanced files_01 to the batch top
+    for e in orch.engines.values():
+        assert_marks_within_stream_pos(e.store)
 
 
 def test_apply_batch_one_stats_collect(spark, tmp_path, fixtures, monkeypatch):
@@ -967,6 +970,7 @@ def test_out_of_band_attach_catches_up_to_watermark(spark, tmp_path, fixtures):
 
     for n in ("files_00", "files_01"):
         assert _final(orch, n) == expected[n]
+        assert_marks_within_stream_pos(orch.engines[n].store)
 
 
 def test_metrics_http_endpoints(spark, tmp_path):
@@ -1007,9 +1011,8 @@ def test_metrics_http_endpoints(spark, tmp_path):
 
 
 def test_archive_extra_paths_warn_matrix(spark, tmp_path):
-    """Review r5 #4: the catch-up view serves _archive/ whenever it has
-    segments, but 'archive has files' must not suppress the warning for
-    history a DELETE-mode pass already unlinked."""
+    """The catch-up view serves _archive/ whenever it has segments, and
+    warns only when the archive mark is set but the directory is empty."""
     import json
     import warnings as _warnings
 
@@ -1026,22 +1029,14 @@ def test_archive_extra_paths_warn_matrix(spark, tmp_path):
     # archived + files present → serve the archive, no warning
     (log_dir / "_archive").mkdir()
     (log_dir / "_archive" / "seg.parquet").write_bytes(b"x")
-    state.write_text(json.dumps({"archived_through": 50, "deleted_through": -1}))
+    state.write_text(json.dumps({"archived_through": 50}))
     with _warnings.catch_warnings(record=True) as w:
         _warnings.simplefilter("always")
         assert s._archive_extra_paths() == [str(log_dir / "_archive")]
     assert not w
 
-    # delete-mode history gone → warn EVEN THOUGH the archive has files
-    state.write_text(json.dumps({"archived_through": 50, "deleted_through": 10}))
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        assert s._archive_extra_paths() == [str(log_dir / "_archive")]
-    assert any("delete-mode" in str(x.message) for x in w)
-
     # archive mark set but directory drained (operator pruned) → warn
     (log_dir / "_archive" / "seg.parquet").unlink()
-    state.write_text(json.dumps({"archived_through": 50, "deleted_through": -1}))
     with _warnings.catch_warnings(record=True) as w:
         _warnings.simplefilter("always")
         assert s._archive_extra_paths() == []
@@ -1090,7 +1085,7 @@ def test_out_of_band_attach_heals_through_archived_history(spark, tmp_path, fixt
         _warnings.simplefilter("always")
         s2.run_until_caught_up(spark, timeout_s=180)
     # the heal reads _archive/ in place — the "history unrecoverable"
-    # warning must NOT fire (it now means archive empty = delete-mode GC)
+    # warning must NOT fire (it means an empty archive)
     assert not [w for w in caught if "removed by GC" in str(w.message)]
 
     for n in ("files_00", "files_01"):

@@ -7,7 +7,7 @@ import pytest
 from debezium_incubator_spark.plans.pipeline import CDCEngine
 from debezium_incubator_spark.sources.changelog import DataFrameChangelog
 from debezium_incubator_spark.sources.generator import gen_changelog, gen_source_table
-from tests.helpers import expected_final_state, state_pdf
+from tests.helpers import assert_marks_within_stream_pos, expected_final_state, state_pdf
 
 N_KEYS, N_REPOS, N_SLOTS = 200, 8, 800
 
@@ -32,9 +32,10 @@ def baseline(spark, data, tmp_path_factory):
 
 def test_final_state_matches_independent_oracle(spark, data, baseline, tmp_path):
     src, log = data
-    _, final, _ = baseline
+    eng, final, _ = baseline
     exp = expected_final_state(spark, src, log, tmp_path)
     assert final.equals(exp)
+    assert_marks_within_stream_pos(eng.store)
 
 
 def test_replay_from_every_checkpoint(spark, data, baseline):

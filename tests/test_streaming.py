@@ -10,7 +10,7 @@ from debezium_incubator_spark.plans.pipeline import CDCEngine
 from debezium_incubator_spark.sources.changelog import DataFrameChangelog
 from debezium_incubator_spark.sources.generator import gen_changelog, gen_source_table
 from debezium_incubator_spark.streaming.stream import StreamingCDC
-from tests.helpers import state_pdf
+from tests.helpers import assert_marks_within_stream_pos, state_pdf
 
 
 def test_streaming_matches_batch(spark, tmp_path):
@@ -50,6 +50,7 @@ def test_streaming_matches_batch(spark, tmp_path):
     got = state_pdf(es)
     assert got.equals(expected)
     assert es.metrics()["epoch"] >= 2  # processed as multiple micro-batches
+    assert_marks_within_stream_pos(es.store)
 
 
 def test_continuous_trigger_picks_up_new_files(spark, tmp_path):
